@@ -23,7 +23,12 @@ bloom filters say MAY are read and rewritten — the others are kept
 as-is in the file index. A point DELETE against a 100 TB table costs
 O(touched files). Unrecognized predicate shapes simply disable pruning
 (full rewrite), never change semantics: the exact predicate is always
-re-applied row-level inside the rewrite.
+re-applied row-level inside the rewrite. The rewrite is sized from the
+touched files' recorded row counts, and DELETE's ``rows_affected`` is
+those rows minus the rows harvested from the files it wrote, so a
+DELETE reads the touched files once (the rewrite) and an UPDATE twice
+(its ``rows_affected`` count, then the rewrite). An index entry without
+a row count falls back to counting the rows.
 """
 
 from __future__ import annotations
@@ -34,7 +39,8 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from heracles_spark.catalog import HeraclesCatalog, KeyTable
+from heracles_spark.catalog import (HeraclesCatalog, KeyTable, local_frame,
+                                    recorded_rows)
 from heracles_spark.pruning import prune_files
 
 # Observability for tests / EXPLAIN-style introspection.
@@ -222,7 +228,7 @@ def _touched_and_kept(tbl: KeyTable, where: str | None):
 
 def _read_files(spark: SparkSession, tbl: KeyTable, files: list[dict]):
     if not files:
-        return spark.createDataFrame([], tbl.schema())
+        return local_frame(spark, [], tbl.schema())
     return (spark.read.schema(tbl.schema())
             .parquet(*sorted(f["path"] for f in files)))
 
@@ -242,10 +248,18 @@ def delete_from(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     df = _read_files(spark, tbl, touched)
     hit = (F.coalesce(F.expr(where).cast("boolean"), F.lit(False))
            if where else F.lit(True))
-    n_hit = df.where(hit).count()
-    remaining = df.where(~hit)
-    out = writer.write_cow_files(spark, catalog, table, remaining,
-                                 kept, base_version=tbl.version)
+    n_touched = recorded_rows(touched)
+    n_hit = None if n_touched is not None else df.where(hit).count()
+    out = writer.write_cow_files(
+        spark, catalog, table, df.where(~hit), kept,
+        n_buckets=(None if n_touched is None
+                   else writer.buckets_for_rows(n_touched)),
+        base_version=tbl.version)
+    if n_hit is None:
+        # deleted = touched rows - rows in the freshly harvested files
+        kept_paths = {f["path"] for f in kept}
+        n_hit = n_touched - recorded_rows(
+            [f for f in out.files if f["path"] not in kept_paths])
     LAST_DML_STATS = {"op": "delete", "files_total": len(tbl.files),
                       "files_rewritten": len(touched),
                       "rows_affected": n_hit}
@@ -282,8 +296,12 @@ def update_table(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     sel = [(F.when(hit, F.expr(assignments[c])).otherwise(F.col(c))
             .alias(c) if c in assignments else F.col(c))
            for c, _ in tbl.columns]
-    out = writer.write_cow_files(spark, catalog, table, df.select(*sel),
-                                 kept, base_version=tbl.version)
+    n_touched = recorded_rows(touched)
+    out = writer.write_cow_files(
+        spark, catalog, table, df.select(*sel), kept,
+        n_buckets=(None if n_touched is None
+                   else writer.buckets_for_rows(n_touched)),
+        base_version=tbl.version)
     LAST_DML_STATS = {"op": "update", "files_total": len(tbl.files),
                       "files_rewritten": len(touched),
                       "rows_affected": n_hit}

@@ -988,9 +988,10 @@ def random_projection_micro(df: DataFrame, k: int, dim: int,
     # every Column constructor is a py4j roundtrip, so building a
     # 16×64 sign matrix column-by-column costs seconds of driver time
     # per fresh plan (round-13 §C8 A/B: 6-10 s nested vs <10 ms
-    # parsed, identical value and schema — array<array<int>>).
+    # parsed, identical value and schema — array<array<int>>). int()
+    # keeps the parsed literal integral whatever the matrix holds.
     slit = F.expr("array(" + ",".join(
-        "array(" + ",".join(str(s) for s in row) + ")"
+        "array(" + ",".join(str(int(s)) for s in row) + ")"
         for row in signs) + ")")
     proj = F.transform(
         F.sequence(F.lit(1), F.lit(k)),

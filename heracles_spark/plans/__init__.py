@@ -5,8 +5,8 @@ tuning 100 TB jobs."""
 
 from heracles_spark.plans.inspect import (
     executed_plan_string, pushed_filters, has_node, count_exchanges,
-    read_schema_columns,
+    read_schema_columns, plan_node_names,
 )
 
 __all__ = ["executed_plan_string", "pushed_filters", "has_node",
-           "count_exchanges", "read_schema_columns"]
+           "count_exchanges", "read_schema_columns", "plan_node_names"]

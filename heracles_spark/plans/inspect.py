@@ -63,3 +63,25 @@ def count_exchanges(df: DataFrame, final: bool = False) -> int:
     text = (final_plan_string(df) if final
             else executed_plan_string(df, "simple"))
     return len(re.findall(r"Exchange (?:hash|range)partitioning", text))
+
+
+def plan_node_names(plan) -> list[str]:
+    """Class names of every node in a JVM plan tree (logical or
+    physical), walked structurally rather than parsed from explain text.
+    AQE wrappers are entered: ``AdaptiveSparkPlanExec`` through its
+    current (after execution: final) plan, query stages through the
+    plan they wrap, reused exchanges through the exchange they reuse."""
+    out, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        out.append(name)
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        elif name == "ReusedExchangeExec":
+            stack.append(node.child())
+        seq = node.children()
+        stack.extend(seq.apply(i) for i in range(seq.size()))
+    return out

@@ -33,7 +33,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from heracles_spark.catalog import HeraclesCatalog
+from heracles_spark.catalog import HeraclesCatalog, local_frame
 
 MAY, NO = True, False
 
@@ -289,7 +289,7 @@ def scan(spark: SparkSession, catalog: HeraclesCatalog, table: str,
         stats_out.update(stats)
     LAST_SCAN_STATS = stats
     if not keep:
-        return spark.createDataFrame([], tbl.schema())
+        return local_frame(spark, [], tbl.schema())
     df = spark.read.schema(tbl.schema()).parquet(*[f["path"] for f in keep])
     if pred is not None and residual:
         df = df.where(to_sql(pred))

@@ -76,6 +76,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from heracles_spark.catalog import local_frame, recorded_rows
+
 _CLONE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?P<dst>[\w.]+)\s+(?:SHALLOW\s+)?CLONE\s+"
     r"(?P<src>[\w.]+)\s*$", re.IGNORECASE)
@@ -606,11 +608,7 @@ def dispatch(session, statement: str) -> DataFrame | None:
         writer.post_write_maintenance(spark, catalog, name)
         catalog.read_table(spark, name).createOrReplaceTempView(
             catalog.view_name(name))
-        st = dml.LAST_DML_STATS
-        return spark.createDataFrame(
-            [(st["rows_affected"], st["files_rewritten"],
-              st["files_total"])],
-            "rows_affected: long, files_rewritten: int, files_total: int")
+        return _dml_stats_frame(spark)
 
     m = _DELETE.match(statement)
     if m and catalog.table_exists(_resolve(session, m.group("name"))):
@@ -624,11 +622,7 @@ def dispatch(session, statement: str) -> DataFrame | None:
         writer.post_write_maintenance(spark, catalog, name)
         catalog.read_table(spark, name).createOrReplaceTempView(
             catalog.view_name(name))
-        st = dml.LAST_DML_STATS
-        return spark.createDataFrame(
-            [(st["rows_affected"], st["files_rewritten"],
-              st["files_total"])],
-            "rows_affected: long, files_rewritten: int, files_total: int")
+        return _dml_stats_frame(spark)
 
     m = _OPTIMIZE.match(statement)
     if m:
@@ -2152,19 +2146,33 @@ def _route_metadata_count(session, statement: str):
                                      "reason": "shadowed-view"}
         return None
     tbl = catalog.get_table(name)
-    if any("rows" not in f for f in tbl.files):
+    total = recorded_rows(tbl.files)
+    if total is None:
         # an index entry without a recorded row count cannot answer
         # exactly — scan instead of guessing
         session.last_select_route = {"route": None,
                                      "reason": "index-missing-rowcounts"}
         return None
-    total = sum(int(f["rows"]) for f in tbl.files)
     session.last_select_route = {"route": "metadata-count",
                                  "files_total": len(tbl.files),
                                  "files_read": 0}
     alias = m.group("alias") or "count(1)"
-    return session.spark.createDataFrame(
-        [(total,)], T_meta_count_schema(alias))
+    return local_frame(session.spark, [(total,)], T_meta_count_schema(alias))
+
+
+def _dml_stats_frame(spark):
+    """The UPDATE/DELETE result row, from ``dml.LAST_DML_STATS``."""
+    from pyspark.sql import types as T
+
+    from heracles_spark import dml
+
+    st = dml.LAST_DML_STATS
+    return local_frame(spark, [(st["rows_affected"], st["files_rewritten"],
+                                st["files_total"])],
+                       T.StructType([
+                           T.StructField("rows_affected", T.LongType()),
+                           T.StructField("files_rewritten", T.IntegerType()),
+                           T.StructField("files_total", T.IntegerType())]))
 
 
 def T_meta_count_schema(alias: str):
@@ -2258,8 +2266,8 @@ def _route_metadata_count_range(session, statement: str):
     alias = m.group("alias") or "count(1)"
     spark = session.spark
     if not boundary:
-        return spark.createDataFrame([(meta_total,)],
-                                     T_meta_count_schema(alias))
+        return local_frame(spark, [(meta_total,)],
+                           T_meta_count_schema(alias))
     scan = (spark.read.schema(tbl.schema())
             .parquet(*[f["path"] for f in boundary])
             .where(pruning.to_sql(pred)))

@@ -36,11 +36,15 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from heracles_spark.catalog import HeraclesCatalog, KeyTable
+from heracles_spark.catalog import HeraclesCatalog, KeyTable, local_frame
 
 # Target rows per output file for the local harness; on a cluster you'd
 # size by bytes (spark.sql.files.maxPartitionBytes governs the read side).
 DEFAULT_ROWS_PER_BUCKET = 250_000
+
+
+def buckets_for_rows(n: int) -> int:
+    return max(1, math.ceil(n / DEFAULT_ROWS_PER_BUCKET))
 
 
 def _n_buckets(df: DataFrame, explicit: int | None) -> int:
@@ -50,7 +54,7 @@ def _n_buckets(df: DataFrame, explicit: int | None) -> int:
         n = df.count()
     except Exception:
         n = DEFAULT_ROWS_PER_BUCKET
-    return max(1, math.ceil(n / DEFAULT_ROWS_PER_BUCKET))
+    return buckets_for_rows(n)
 
 
 def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
@@ -247,7 +251,13 @@ def bulk_load_csv(spark: SparkSession, catalog: HeraclesCatalog, table: str,
 def insert_rows(spark: SparkSession, catalog: HeraclesCatalog, table: str,
                 rows: list[tuple], upsert: bool = False) -> KeyTable:
     """``INSERT INTO t VALUES (...)`` (InsertValueIntoTableCommand,
-    hbaseCommands.scala:62-80; string→type coercion DataTypeUtils.scala:117-135)."""
+    hbaseCommands.scala:62-80; string→type coercion DataTypeUtils.scala:117-135).
+
+    The batch is an all-string ``local_frame`` (a JVM LocalRelation, not
+    a parallelized Python RDD); ``write_key_organized`` casts each
+    column to its declared type, so a value that cannot be cast fails
+    the statement before anything is staged. One output file
+    (``n_buckets=1``): no row count is needed to size the write."""
     tbl = catalog.get_table(table)
     base = tbl.schema()
     # Accept strings for any field, coerce via cast (reference coerces
@@ -255,7 +265,8 @@ def insert_rows(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     from pyspark.sql import types as T
     loose = T.StructType([T.StructField(f.name, T.StringType(), True)
                           for f in base.fields])
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [tuple(None if v is None else str(v) for v in r) for r in rows], loose)
     return write_key_organized(spark, catalog, table, df, mode="append",
                                upsert=upsert, n_buckets=1)
@@ -627,6 +638,12 @@ def write_cow_files(spark: SparkSession, catalog: HeraclesCatalog,
 
     ``df`` must already have the table's exact schema (the caller — MERGE
     — produces it from the table's own columns).
+
+    ``n_buckets`` sizes the rewrite. UPDATE and DELETE pass the touched
+    files' recorded row count through ``buckets_for_rows`` (exact for
+    UPDATE, an upper bound for DELETE) and compaction its small files'
+    count, so none of them scans ``df`` to size it; when it is None
+    (MERGE) ``df`` is counted first.
     """
     import uuid
 

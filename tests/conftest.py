@@ -146,6 +146,52 @@ def pytest_collection_modifyitems(config, items):
         items[:] = kept
 
 
+# Each worker is a pytest process plus a local[8] driver JVM. Unless
+# SPARK_DRIVER_MEMORY is set, a worker's heap is capped at
+# _WORKER_HEAP; a worker is budgeted its heap plus _WORKER_OVERHEAD_MB
+# against MemAvailable (a 3g-heap worker JVM reached 4.1 GB RSS in a
+# full run, and the pytest and PySpark worker processes add ~0.3 GB).
+_WORKER_HEAP = "3g"
+_WORKER_OVERHEAD_MB = 1536
+_MAX_WORKERS = 12
+
+
+def _jvm_size_mb(size: str) -> int:
+    """JVM memory size ('3g', '2048m', bare number = MiB) in MiB."""
+    size = size.strip().lower().rstrip("b")
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    if size[-1:] in scale:
+        return max(1, int(float(size[:-1]) * scale[size[-1]]))
+    return int(size)
+
+
+def _mem_available_mb() -> int | None:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
+def _default_workers() -> int:
+    """Worker count for this box. The suite is driver-latency-bound,
+    not CPU-bound (a full run keeps ~8% of 32 cores busy), so wall time
+    scales with worker count until the longest unit dominates: 10
+    workers took 931 s and 12 took 745 s at 32 cores, hence the cap of
+    12. Cores still bound it at two workers per core, and memory at
+    one worker budget per MemAvailable share: twelve 8 GB-heap workers
+    on a 4-core/16 GB box drove it out of memory and the kernel killed
+    worker JVMs."""
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or _WORKER_HEAP
+    budget_mb = _jvm_size_mb(heap) + _WORKER_OVERHEAD_MB
+    avail = _mem_available_mb()
+    by_mem = _MAX_WORKERS if avail is None else avail // budget_mb
+    return max(1, min(_MAX_WORKERS, 2 * (os.cpu_count() or 1), by_mem))
+
+
 def _shard_plan(tests_dir: str, n_workers: int):
     files = sorted(f for f in os.listdir(tests_dir)
                    if f.startswith("test_") and f.endswith(".py"))
@@ -175,6 +221,7 @@ def _worker_cmd_env(tests_dir: str, flags: list, units: list):
             sub.setdefault((f, n), []).append(b)
     env = dict(os.environ)
     env[_WORKER_ENV] = "1"
+    env.setdefault("SPARK_DRIVER_MEMORY", _WORKER_HEAP)
     if sub:
         env[_SUBSHARD_ENV] = ";".join(
             f"{f}:{','.join(map(str, sorted(buckets)))}:{n}"
@@ -189,13 +236,7 @@ def _run_sharded(tests_dir: str, flags: list) -> int:
     import subprocess
     import time
 
-    # The suite is driver-latency-bound, not CPU-bound (a full run
-    # keeps ~8% of 32 cores busy — 12.7 CPU-min over 155 worker-min),
-    # so wall time scales with worker count until the longest single
-    # unit dominates. Same-window A/B: 10 workers 931s vs 12 workers
-    # 745s (872 passed both, slowest shard 12:05), so 12 is the
-    # default; memory headroom is ample (each worker is local[8]).
-    n = int(os.environ.get(_SHARDS_ENV, "12"))
+    n = int(os.environ.get(_SHARDS_ENV) or _default_workers())
     plan = _shard_plan(tests_dir, max(1, n))
     t0 = time.time()
     procs = []

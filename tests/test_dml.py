@@ -26,6 +26,13 @@ def _rows(hsession):
             hsession.sql("SELECT k, name, v FROM t ORDER BY k").collect()]
 
 
+def _delete(hsession, where=""):
+    """DELETE on ``t``; returns the statement's rows_affected."""
+    out = hsession.sql(f"DELETE FROM t {where}").collect()[0]
+    assert out.rows_affected == dml.LAST_DML_STATS["rows_affected"]
+    return out.rows_affected
+
+
 # -- WHERE → pruning AST compiler -----------------------------------------
 
 def test_where_pred_conjuncts():
@@ -88,20 +95,20 @@ def test_may_match_type_mismatch_degrades_to_may():
 
 def test_delete_where(hsession):
     _mk(hsession)
-    hsession.sql("DELETE FROM t WHERE v >= 20")
+    assert _delete(hsession, "WHERE v >= 20") == 2
     assert _rows(hsession) == [(1, "a", 10), (4, "d", None)]
 
 
 def test_delete_null_predicate_keeps_row(hsession):
     _mk(hsession)
     # v is NULL for k=4: predicate evaluates NULL → row is kept (3VL).
-    hsession.sql("DELETE FROM t WHERE v < 100")
+    assert _delete(hsession, "WHERE v < 100") == 3
     assert _rows(hsession) == [(4, "d", None)]
 
 
 def test_delete_all(hsession):
     _mk(hsession)
-    hsession.sql("DELETE FROM t")
+    assert _delete(hsession) == 4
     assert _rows(hsession) == []
 
 
@@ -294,3 +301,179 @@ def test_insert_select_source_routes(hsession, catalog):
         "SELECT k, v FROM idst").collect())
     assert got[0] == (100, 201) and got[49] == (149, 299)
     assert got[50] == (150, 300)      # unmatched rows untouched
+
+
+# -- fixed cost of the write statements ------------------------------------
+
+def _jobs_run(spark, fn):
+    """(result of ``fn()``, number of Spark jobs it ran), counted under
+    a private job group with the status listener drained first."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dml-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "write statement job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sql_collect(hsession, statement):
+    df = hsession.sql(statement)
+    return df, df.collect()
+
+
+def _optimized_nodes(df):
+    from heracles_spark.plans import plan_node_names
+
+    return plan_node_names(df._jdf.queryExecution().optimizedPlan())
+
+
+def test_write_statements_job_counts_and_local_leaves(hsession, spark,
+                                                      monkeypatch):
+    """INSERT VALUES batches and the UPDATE/DELETE result rows are JVM
+    local relations (no parallelized Python RDD, no job to collect
+    them), DELETE sizes its rewrite and counts its rows from the file
+    index, and UPDATE counts its hits once."""
+    from heracles_spark import writer
+
+    _mk(hsession)
+    batches = []
+    real = writer.write_key_organized
+
+    def spy(spark_, catalog_, table, df, *a, **kw):
+        batches.append(df)
+        return real(spark_, catalog_, table, df, *a, **kw)
+
+    monkeypatch.setattr(writer, "write_key_organized", spy)
+    _, n = _jobs_run(spark, lambda: hsession.sql(
+        "INSERT INTO t VALUES (5,'e',50),(6,'f',60)"))
+    assert n <= 2
+    assert len(batches) == 1
+    nodes = _optimized_nodes(batches[0])
+    assert "LogicalRDD" not in nodes and "LocalRelation" in nodes
+
+    (df, rows), n = _jobs_run(spark, lambda: _sql_collect(
+        hsession, "DELETE FROM t WHERE k = 5"))
+    assert n <= 2
+    assert rows[0].rows_affected == 1
+    assert "LogicalRDD" not in _optimized_nodes(df)
+
+    (df, rows), n = _jobs_run(spark, lambda: _sql_collect(
+        hsession, "UPDATE t SET v = v + 1 WHERE k >= 3"))
+    assert n <= 4
+    assert rows[0].rows_affected == 3
+    assert "LogicalRDD" not in _optimized_nodes(df)
+    assert _rows(hsession) == [(1, "a", 10), (2, "b", 20), (3, "c", 31),
+                               (4, "d", None), (6, "f", 61)]
+
+
+@pytest.mark.parametrize("where, affected, survivors", [
+    ("WHERE v = 15", 0, [(1, "a", 10), (2, "b", 20), (3, "c", 30),
+                         (4, "d", None)]),
+    ("WHERE k = 1 OR name = 'c'", 2, [(2, "b", 20), (4, "d", None)]),
+], ids=["zero-hit", "unprunable"])
+def test_delete_rows_affected_from_index(hsession, where, affected,
+                                         survivors):
+    """The touched file is rewritten; rows_affected is its recorded row
+    count minus the rows of the file written in its place."""
+    _mk(hsession)
+    assert _delete(hsession, where) == affected
+    assert _rows(hsession) == survivors
+
+
+def test_delete_nonkey_predicate_full_rewrite_counts(hsession, spark,
+                                                     catalog):
+    _mk_wide(hsession, spark, catalog)
+    out = hsession.sql("DELETE FROM w WHERE v % 100 = 7").collect()[0]
+    assert out.files_rewritten == 8 and out.files_total == 8
+    assert out.rows_affected == 8
+    left = hsession.sql("SELECT k FROM w").collect()
+    assert len(left) == 792 and all(r.k % 100 != 7 for r in left)
+
+
+def test_dml_without_index_rowcounts_falls_back_to_counting(
+        hsession, catalog, monkeypatch):
+    """An index entry without a recorded row count: UPDATE and DELETE
+    count the rows instead (the rewrite is sized by a count, DELETE's
+    rows_affected is counted), and the answers stay the same."""
+    from heracles_spark import writer
+
+    def strip_rows():
+        catalog.update_file_index(
+            "t", [{k: v for k, v in f.items() if k != "rows"}
+                  for f in catalog.get_table("t").files], op="strip-rows")
+
+    _mk(hsession, rows="(1,'a',10),(2,'b',20),(3,'c',30)")
+    hsession.sql("INSERT INTO t VALUES (4,'d',NULL),(5,'e',50)")
+    sizes = []
+    real = writer.write_cow_files
+
+    def spy(*a, **kw):
+        sizes.append(kw.get("n_buckets"))
+        return real(*a, **kw)
+
+    monkeypatch.setattr(writer, "write_cow_files", spy)
+    strip_rows()
+    out = hsession.sql("UPDATE t SET v = v + 1 WHERE k <= 2").collect()[0]
+    assert out.rows_affected == 2
+    strip_rows()
+    assert _delete(hsession, "WHERE v >= 21 OR v IS NULL") == 4
+    assert sizes == [None, None]          # both rewrites were counted
+    assert _rows(hsession) == [(1, "a", 11)]
+    assert _delete(hsession, "WHERE k = 1") == 1      # index has rows again
+    assert sizes[-1] == 1 and _rows(hsession) == []
+
+
+# -- INSERT VALUES coercion parity -----------------------------------------
+
+def _mk_typed(hsession):
+    hsession.sql("""CREATE TABLE ty (k INT, s STRING, x DOUBLE, n BIGINT,
+                    d DATE) TBLPROPERTIES('keyCols'='k')""")
+
+
+def _typed_rows(hsession):
+    return [tuple(r) for r in
+            hsession.sql("SELECT k, s, x, n, d FROM ty ORDER BY k").collect()]
+
+
+def test_insert_values_coercion_parity(hsession):
+    """Every VALUES item travels as a string and is cast to the declared
+    type inside the write, exactly as before the batch became a local
+    relation."""
+    import datetime
+
+    _mk_typed(hsession)
+    hsession.sql("INSERT INTO ty VALUES "
+                 "(1, NULL, 1.5, -3, '2024-01-02'), "
+                 "(2, '', -0.25, 7, '2024-1-5'), "
+                 "(3, 'a,b', 1e3, 0, NULL), "
+                 "(4, 'it''s', NULL, NULL, NULL), "
+                 "(5, 'héllo 日本', 3, -9223372036854775808, '2024-12-31'), "
+                 "(6, \"dq\", '2.5', '12', NULL)")
+    assert _typed_rows(hsession) == [
+        (1, None, 1.5, -3, datetime.date(2024, 1, 2)),
+        (2, "", -0.25, 7, datetime.date(2024, 1, 5)),
+        (3, "a,b", 1000.0, 0, None),
+        (4, "it's", None, None, None),
+        (5, "héllo 日本", 3.0, -9223372036854775808,
+         datetime.date(2024, 12, 31)),
+        (6, "dq", 2.5, 12, None)]
+
+
+@pytest.mark.parametrize("row", [
+    "(7, 'z', 'abc', 1, NULL)",                 # not a number
+    "(7, 'z', 1.0, 1.5, NULL)",                 # fractional BIGINT
+    "(7, 'z', 1.0, 1, 'notadate')",
+    "(7, 'z', 1.0, 1, DATE '2024-02-03')",      # keyword literal: a string
+], ids=["double", "bigint", "date-string", "date-keyword"])
+def test_insert_values_uncastable_rejected_whole(hsession, row):
+    _mk_typed(hsession)
+    hsession.sql("INSERT INTO ty VALUES (1, 'a', 1.0, 1, NULL)")
+    before = _typed_rows(hsession)
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        hsession.sql(f"INSERT INTO ty VALUES (8, 'ok', 2.0, 2, NULL), {row}")
+    assert _typed_rows(hsession) == before

@@ -351,6 +351,7 @@ def test_grouped_cdf_hint_single_broadcast(spark):
     import random
 
     from heracles_spark.operators.orderstats import grouped_cdf
+    from heracles_spark.plans import plan_node_names
 
     rnd = random.Random(131)
     rows = [(g, float(rnd.randrange(100)))
@@ -359,9 +360,10 @@ def test_grouped_cdf_hint_single_broadcast(spark):
     base = sorted(map(tuple, grouped_cdf(df, ["g"], "v").collect()))
     hinted = grouped_cdf(df, ["g"], "v", bounds_hint=(0.0, 99.0))
     assert sorted(map(tuple, hinted.collect())) == base
-    plan = (hinted._jdf.queryExecution().executedPlan().toString()
-            .split("== Initial Plan ==")[0])       # AQE echoes both
-    assert plan.count("BroadcastHashJoin") == 1
+    aqe = hinted._jdf.queryExecution().executedPlan()
+    assert aqe.getClass().getSimpleName() == "AdaptiveSparkPlanExec"
+    assert aqe.isFinalPlan()            # the walk below reads the final plan
+    assert plan_node_names(aqe).count("BroadcastHashJoinExec") == 1
     # whole-relation (empty group_cols) hint path stays sound too
     whole = grouped_cdf(df.select("v"), [], "v", bounds_hint=(0.0, 99.0))
     base_whole = sorted(map(tuple,
