@@ -14,6 +14,8 @@ import argparse
 import sys
 import time
 
+from heracles_spark import sqltext
+
 HELP = """Supported statements (≙ reference CLI HELP):
   CREATE TABLE t (col TYPE, ...) TBLPROPERTIES('keyCols'='a;b'[, ...])
   CREATE TABLE t TBLPROPERTIES('keyCols'='k') AS SELECT ...  (CTAS)
@@ -101,42 +103,19 @@ def _color(s: str, code: str, enabled: bool) -> str:
 
 
 def _split_statements(script: str) -> list[str]:
-    """Split a script on ';' outside string literals. Quote-aware: a
-    semicolon inside '...' or "..." (with '' / \\' escapes) does not
-    terminate the statement. Comment-aware: `--` to end-of-line is
-    skipped when outside a literal (an apostrophe in a comment must
-    not open a phantom string)."""
-    stmts, cur, quote, i = [], [], None, 0
-    while i < len(script):
-        ch = script[i]
-        if not quote and ch == "-" and script[i:i + 2] == "--":
-            j = script.find("\n", i)
-            i = len(script) if j < 0 else j
-            continue
-        if quote:
-            cur.append(ch)
-            if ch == "\\" and i + 1 < len(script):
-                cur.append(script[i + 1])
-                i += 2
-                continue
-            if ch == quote:
-                # doubled quote = escaped quote, stay in the literal
-                if i + 1 < len(script) and script[i + 1] == quote:
-                    cur.append(script[i + 1])
-                    i += 2
-                    continue
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-            cur.append(ch)
-        elif ch == ";":
-            stmts.append("".join(cur))
-            cur = []
+    """Split a script on every ';' that is code — a semicolon inside a
+    string literal, quoted identifier or comment does not terminate the
+    statement. Each statement runs from its first code token to its
+    last, as written; a piece holding only comments is dropped."""
+    stmts, piece = [], []
+    for t in sqltext.lex(script) + (None,):
+        if t is None or (t.text == ";" and t.kind == "op"):
+            if piece:
+                stmts.append(script[piece[0].start:piece[-1].end])
+            piece = []
         else:
-            cur.append(ch)
-        i += 1
-    stmts.append("".join(cur))
-    return [s.strip() for s in stmts if s.strip()]
+            piece.append(t)
+    return stmts
 
 
 def run_statement(session, stmt: str, out=None, max_rows: int = 100) -> None:
@@ -193,17 +172,16 @@ def main(argv: list[str] | None = None) -> int:
             continue
         if not buf and token.upper().startswith("SOURCE "):
             # run statements from a script file (reference CLI parity)
-            path = token[7:].strip().rstrip(";").strip().strip("'\"")
+            path = token[7:].strip().rstrip(";").strip()
+            if [k for k, _, _ in sqltext.tokens(path)] in (["str"], ["dstr"]):
+                path = sqltext.string_value(path)
             try:
-                script = open(path).read()
-            except OSError as e:
+                with open(path) as f:
+                    stmts = _split_statements(f.read())
+            except (OSError, ValueError) as e:
                 sys.stdout.write(_color(f"Error: {e}\n", "31", tty))
                 continue
-            # drop whole-line `--` comments (safe: never touches string
-            # literals, unlike stripping trailing comments)
-            script = "\n".join(l for l in script.splitlines()
-                               if not l.lstrip().startswith("--"))
-            for stmt in _split_statements(script):
+            for stmt in stmts:
                 try:
                     run_statement(session, stmt)
                 except Exception as e:

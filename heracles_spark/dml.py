@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from heracles_spark.catalog import (HeraclesCatalog, KeyTable, local_frame,
                                     recorded_rows)
 from heracles_spark.pruning import prune_files
+from heracles_spark.sqltext import literal_value, split_top, split_top_and
 
 # Observability for tests / EXPLAIN-style introspection.
 LAST_DML_STATS: dict[str, Any] = {}
@@ -53,65 +54,13 @@ _BETWEEN_RE = re.compile(r"^\s*(\w+)\s+BETWEEN\s+(.+?)\s+AND\s+(.+?)\s*$",
 _ISNULL_RE = re.compile(r"^\s*(\w+)\s+IS\s+NULL\s*$", re.I)
 _ISNOTNULL_RE = re.compile(r"^\s*(\w+)\s+IS\s+NOT\s+NULL\s*$", re.I)
 _NUM_RE = re.compile(r"^[+-]?\d+(\.\d+)?([eE][+-]?\d+)?$")
-_STR_RE = re.compile(r"^'((?:[^']|'')*)'$", re.S)
-
-
-def _split_top_and(s: str) -> list[str] | None:
-    """Split on top-level AND (outside parens/quotes). Returns None when
-    the expression contains a top-level OR or NOT — those shapes are
-    handed to the row-level filter only (no file pruning)."""
-    parts, buf, depth, i, n = [], [], 0, 0, len(s)
-    had_or = False
-    pending_between = 0                    # BETWEEN's AND is not a split
-    while i < n:
-        ch = s[i]
-        if ch == "'":                      # skip string literal
-            j = i + 1
-            while j < n:
-                if s[j] == "'" and j + 1 < n and s[j + 1] == "'":
-                    j += 2
-                    continue
-                if s[j] == "'":
-                    break
-                j += 1
-            buf.append(s[i:j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if depth == 0:
-            m = re.match(r"(AND|OR|NOT|BETWEEN)\b", s[i:], re.I)
-            last = buf[-1][-1] if buf and buf[-1] else ""
-            if m and (not last or not (last.isalnum() or last == "_")):
-                word = m.group(1).upper()
-                if word == "BETWEEN":
-                    pending_between += 1
-                elif word == "AND":
-                    if pending_between:
-                        pending_between -= 1
-                    else:
-                        parts.append("".join(buf))
-                        buf = []
-                        i += 3
-                        continue
-                elif not (word == "NOT" and re.search(
-                        r"\bIS\s+$", "".join(buf), re.I)):
-                    had_or = True          # OR, or a NOT outside IS NOT NULL
-        buf.append(ch)
-        i += 1
-    if had_or:
-        return None
-    parts.append("".join(buf))
-    return [p for p in (p.strip() for p in parts) if p]
 
 
 def _parse_literal(s: str):
     s = s.strip()
-    m = _STR_RE.match(s)
-    if m:
-        return m.group(1).replace("''", "'")
+    text = literal_value(s)
+    if text is not None:
+        return text
     if _NUM_RE.match(s):
         f = float(s)
         return int(s) if re.match(r"^[+-]?\d+$", s) else f
@@ -162,7 +111,8 @@ def where_to_pruning_pred(where: str | None,
     """Compile a WHERE clause into the pruning AST, keeping only the
     conjuncts it can prove equivalent (col-vs-literal comparisons, IN,
     BETWEEN, IS [NOT] NULL). Dropping a conjunct only loosens pruning
-    (sound); any OR/NOT/function shape yields None (prune nothing).
+    (sound), so a NOT or function conjunct is simply dropped; a
+    top-level OR yields None (prune nothing).
 
     ``col_types`` (column → declared SQL type) enables typed literal
     coercion: temporal literals are normalized to the isoformat encoding
@@ -171,7 +121,7 @@ def where_to_pruning_pred(where: str | None,
     conjunct instead of producing an unsound/throwing box comparison."""
     if not where:
         return None
-    conjuncts = _split_top_and(where)
+    conjuncts = split_top_and(where)
     if conjuncts is None:
         return None
     out: list[tuple] = []
@@ -195,7 +145,7 @@ def where_to_pruning_pred(where: str | None,
             continue
         m = _IN_RE.match(c)
         if m:
-            vals = [_parse_literal(v) for v in m.group(2).split(",")]
+            vals = [_parse_literal(v) for v in split_top(m.group(2), ",")]
             if vals and all(v is not None for v in vals):
                 vals = [_coerce_literal(v, m.group(1), col_types)
                         for v in vals]

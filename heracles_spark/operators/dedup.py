@@ -20,24 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Deterministic MinHash parameter generation (no RNG at plan time).
-_MERSENNE = (1 << 61) - 1
-
-
-def _minhash_params(k: int) -> list[tuple[int, int]]:
-    """k (a, b) pairs via splitmix64-style mixing of the index — stable
-    across runs and processes."""
-    params = []
-    for i in range(k):
-        z = (i + 1) * 0x9E3779B97F4A7C15 % (1 << 64)
-        z = (z ^ (z >> 30)) * 0xBF58476D1CE4E5B9 % (1 << 64)
-        z = (z ^ (z >> 27)) * 0x94D049BB133111EB % (1 << 64)
-        a = (z % (_MERSENNE - 1)) + 1
-        b = (z >> 13) % _MERSENNE
-        params.append((a, b))
-    return params
-
-
 # -- exact dedup ----------------------------------------------------------
 
 _PERSIST_POOL: list = []

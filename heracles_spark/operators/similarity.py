@@ -121,10 +121,6 @@ def pynorm(vec: list[float]) -> float:
     return math.sqrt(acc)
 
 
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
                 id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Exact brute-force top-k by cosine to a literal query vector.

@@ -13,14 +13,6 @@ def executed_plan_string(df: DataFrame, mode: str = "formatted") -> str:
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode))
 
 
-def final_plan_string(df: DataFrame) -> str:
-    """Post-AQE final plan (executes the query): collect() first, then read
-    the adaptively-replanned tree — exchange counts in the *final* plan are
-    what matters for shuffle accounting."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """Filters that reached the parquet scan (≙ the reference's pushdown
     classifier output, ScanPredClassifier.scala:27-143)."""
@@ -58,11 +50,10 @@ def has_node(df: DataFrame, node: str) -> bool:
     return node in executed_plan_string(df, "simple")
 
 
-def count_exchanges(df: DataFrame, final: bool = False) -> int:
+def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges (excludes broadcast exchanges)."""
-    text = (final_plan_string(df) if final
-            else executed_plan_string(df, "simple"))
-    return len(re.findall(r"Exchange (?:hash|range)partitioning", text))
+    return len(re.findall(r"Exchange (?:hash|range)partitioning",
+                          executed_plan_string(df, "simple")))
 
 
 def plan_node_names(plan) -> list[str]:

@@ -34,6 +34,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from heracles_spark.catalog import HeraclesCatalog, local_frame
+from heracles_spark.sqltext import quote
 
 MAY, NO = True, False
 
@@ -258,7 +259,7 @@ def to_sql(pred: tuple) -> str:
 
 def _lit(v: Any) -> str:
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        return quote(v)
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     return str(v)

@@ -76,6 +76,9 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from heracles_spark import sqltext
+from heracles_spark.sqltext import split_top as _split_top
+from heracles_spark.sqltext import split_top_and as _split_top_and
 from heracles_spark.catalog import local_frame, recorded_rows
 
 _CLONE = re.compile(
@@ -111,6 +114,7 @@ _MERGE_HEAD = re.compile(
     r"^\s*MERGE\s+INTO\s+(?P<name>[\w.]+)"
     r"(?:\s+(?:AS\s+)?(?!USING\b)(?P<talias>\w+))?"
     r"\s+USING\s+", re.IGNORECASE | re.DOTALL)
+_WHEN_MATCHED = re.compile(r"WHEN\s+(?:NOT\s+)?MATCHED\b", re.IGNORECASE)
 _MERGE_KIND = re.compile(
     r"^(?P<not>NOT\s+)?MATCHED(?P<bysrc>\s+BY\s+SOURCE)?"
     r"(?:\s+AND\s+)?", re.IGNORECASE)
@@ -338,30 +342,12 @@ _EXPLAIN_LAYOUT = re.compile(
 
 def _query_head_kw(text: str) -> str:
     """First keyword of a query text, skipping any interleaved
-    whitespace, opening parens, line comments and block comments/hints
-    (round-12 advisor fix: ``/*+ BROADCAST */ SELECT`` and ``( (SELECT``
-    are valid Spark query heads a bare ``\\s*\\(*\\s*`` prefix
-    rejected). Returns '' when no keyword is found."""
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch.isspace() or ch == "(":
-            i += 1
-            continue
-        if text.startswith("--", i):
-            nl = text.find("\n", i)
-            if nl < 0:
-                return ""
-            i = nl + 1
-            continue
-        if text.startswith("/*", i):
-            end = text.find("*/", i + 2)
-            if end < 0:
-                return ""
-            i = end + 2
-            continue
-        m_kw = re.match(r"[A-Za-z]+", text[i:])
-        return m_kw.group(0).upper() if m_kw else ""
+    opening parens, comments and hints (``/*+ BROADCAST */ SELECT``
+    and ``( (SELECT`` are valid Spark query heads). Returns '' when no
+    keyword is found."""
+    for t in sqltext.lex(text):
+        if t.text != "(" and t.kind != "hint":
+            return t.text.upper() if t.kind == "word" else ""
     return ""
 
 
@@ -380,12 +366,25 @@ def dispatch(session, statement: str) -> DataFrame | None:
     from heracles_spark import writer
 
     spark, catalog = session.spark, session.catalog
+    # No comment ever reaches a router as code (hints stay). A statement
+    # no rewrite touches reaches Spark as written: commands such as SET
+    # keep their raw text, comments included.
+    written = statement
 
     # Audit hygiene (round-11 advisor fix): the access-path record must
     # describe THIS statement — a statement that doesn't route leaves
     # {} rather than the previous statement's verdict (mirrors how
     # _maybe_reorder_joins resets last_join_reorder at entry).
     session.last_select_route = {}
+
+    try:
+        sqltext.lex(statement)
+    except ValueError:
+        # An unclosed literal or comment would swallow the rest of the
+        # statement (a WHERE after `/*`). Spark's own lexer decides: it
+        # rejects the statement, or takes a SET value as raw text.
+        return spark.sql(written)
+    statement = stripped = sqltext.strip_comments(statement)
 
     if _BEGIN.match(statement):
         # Multi-table atomic commit: every write until COMMIT lands in
@@ -527,8 +526,8 @@ def dispatch(session, statement: str) -> DataFrame | None:
     m = _INSERT_VALUES.match(statement)
     if m:
         name = _resolve(session, m.group("name"))
-        writer.insert_rows(spark, catalog, name,
-                           _parse_value_rows(m.group("rows")))
+        # parsed from the statement's own (cached) tokens
+        writer.insert_rows(spark, catalog, name, _parse_value_rows(statement))
         writer.post_write_maintenance(spark, catalog, name)
         catalog.read_table(spark, name).createOrReplaceTempView(
             catalog.view_name(name))
@@ -1306,7 +1305,8 @@ def dispatch(session, statement: str) -> DataFrame | None:
         tbl = catalog.get_table(_resolve(session, m.group("name")))
         cols = ", ".join(f"{c} {t.upper()}" for c, t in tbl.columns)
         props = {"keyCols": ";".join(tbl.key_cols), **tbl.properties}
-        props_s = ", ".join(f"'{k}'='{v}'" for k, v in sorted(props.items()))
+        props_s = ", ".join(f"{sqltext.quote(k)}={sqltext.quote(v)}"
+                            for k, v in sorted(props.items()))
         ddl = f"CREATE TABLE {tbl.name} ({cols}) TBLPROPERTIES({props_s})"
         return spark.createDataFrame([(ddl,)], "createtab_stmt: string")
 
@@ -1483,8 +1483,9 @@ def dispatch(session, statement: str) -> DataFrame | None:
                     pass
         session.last_select_route = jp_audit
         return out
-    return spark.sql(rewrite_qualify(_VERSION_ASOF.sub(_asof, _TS_ASOF.sub(
-        _ts_asof, statement))))
+    final = rewrite_qualify(_VERSION_ASOF.sub(_asof, _TS_ASOF.sub(
+        _ts_asof, statement)))
+    return spark.sql(written if final == stripped else final)
 
 
 _SELECT_HEAD = re.compile(r"^\s*SELECT\b", re.IGNORECASE)
@@ -1494,7 +1495,7 @@ _SIMPLE_SELECT = re.compile(
     r"(?:\s+ORDER\s+BY\s+(?P<ocol>\w+)(?:\s+(?P<odir>ASC|DESC))?)?"
     r"(?:\s+LIMIT\s+(?P<limit>\d+))?\s*;?\s*$",
     re.IGNORECASE)
-_LIT = r"(?:-?\d+(?:\.\d+)?|'[^']*')"
+_LIT = rf"(?:-?\d+(?:\.\d+)?|{sqltext.STRING})"
 _SIMPLE_PRED = re.compile(
     rf"(?P<col>\w+(?:\.\w+)?)\s*(?:(?P<op><=|>=|=|<|>)\s*(?P<val>{_LIT})"
     rf"|BETWEEN\s+(?P<lo>{_LIT})\s+AND\s+(?P<hi>{_LIT})"
@@ -1508,7 +1509,8 @@ _ROUTE_TYPES = ("int", "integer", "bigint", "long", "smallint",
                 "varchar", "char")
 # A CTE may declare a column list — ``WITH c(a, b) AS (...)`` — and
 # such a name shadows catalog tables exactly like the bare form
-# (round-10 advisor fix: the hint guard must see it).
+# (round-10 advisor fix: the hint guard must see it). Group 1 is the
+# name; the match ends at the body's opening paren.
 _CTE_NAME = re.compile(r"(\w+)\s*(?:\([^)]*\)\s*)?AS\s*\(", re.IGNORECASE)
 
 
@@ -1572,8 +1574,9 @@ def _broadcast_threshold(session) -> int:
 
 def _lit_value(raw: str, sql_type: str):
     raw = raw.strip()
-    if raw.startswith("'"):
-        return raw[1:-1]
+    text = sqltext.literal_value(raw)
+    if text is not None:
+        return text
     base = sql_type.lower().split("(")[0]
     if base in ("float", "double", "decimal") or "." in raw:
         return float(raw)
@@ -1826,7 +1829,6 @@ def _route_pruned_select(session, statement: str):
 # the exact path stays inside whole-stage codegen (a SQL UDF cannot
 # appear in Sort; a Python UDF would leave the JVM). try_divide keeps
 # zero-norm vectors NULL instead of an ANSI division error.
-_COS_DIST = re.compile(r"\bcosine_distance\s*\(", re.IGNORECASE)
 # coalesce(-1): a zero-norm vector's cosine is undefined — give it
 # similarity -1 (distance 2.0, the maximum), so it ranks LAST under
 # ORDER BY distance on both the exact and the index-routed path
@@ -1840,61 +1842,32 @@ _COS_TEMPLATE = (
     "CAST(-1.0 AS DOUBLE)))")
 
 
-def _split_call_args(s: str, start: int):
-    """Split the argument list of a call whose opening paren is at
-    ``start - 1`` into top-level comma-separated parts; returns
-    (parts, index_after_closing_paren) or (None, start) when
-    unbalanced. Quote-aware."""
-    depth, last, i, n = 1, start, start, len(s)
-    parts: list[str] = []
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i += 1
-            while i < n and s[i] != "'":
-                i += 1
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                parts.append(s[last:i])
-                return parts, i + 1
-        elif ch == "," and depth == 1:
-            parts.append(s[last:i])
-            last = i + 1
-        i += 1
-    return None, start
-
-
 def _expand_cosine_distance(statement: str) -> str:
     """Textual macro expansion of ``cosine_distance(a, b)`` — the
     EXACT vector-distance surface for dispatched SQL. Pure codegen
     arithmetic (zip_with dot product + aggregate norms); no UDF, no
-    Python. Nested/multiple occurrences expand recursively."""
+    Python. Nested/multiple occurrences expand recursively; calls
+    inside literals are not code tokens and stay as written."""
+    toks = sqltext.lex(statement)
     out: list[str] = []
     pos = 0
-    while True:
-        m = _COS_DIST.search(statement, pos)
-        if not m:
-            out.append(statement[pos:])
-            break
-        out.append(statement[pos:m.start()])
-        # inside a string literal? (odd count of quotes before the
-        # match — '' escapes contribute two, keeping parity correct)
-        if statement.count("'", 0, m.start()) % 2 == 1:
-            out.append(statement[m.start():m.end()])
-            pos = m.end()
+    for i, t in enumerate(toks[:-1]):
+        if t.start < pos or t.kind != "word" \
+                or t.text.lower() != "cosine_distance" \
+                or toks[i + 1].text != "(":
             continue
-        args, end = _split_call_args(statement, m.end())
-        if args is None or len(args) != 2:
-            out.append(statement[m.start():m.end()])
-            pos = m.end()
+        close = sqltext.closing(toks, i + 1)
+        if close < 0:
             continue
-        a = _expand_cosine_distance(args[0].strip())
-        b = _expand_cosine_distance(args[1].strip())
-        out.append(_COS_TEMPLATE.format(a=a, b=b))
-        pos = end
+        args = sqltext.split_top(
+            statement[toks[i + 1].end:toks[close].start], ",")
+        if len(args) != 2:
+            continue
+        out.append(statement[pos:t.start])
+        out.append(_COS_TEMPLATE.format(a=_expand_cosine_distance(args[0]),
+                                        b=_expand_cosine_distance(args[1])))
+        pos = toks[close].end
+    out.append(statement[pos:])
     return "".join(out)
 
 
@@ -2301,7 +2274,7 @@ def _route_pruned_general(session, statement: str):
     table through the normal view), no star (schema stability), WHERE
     parseable with a key atom. The temp view lives only for the
     eagerly-analyzing spark.sql call (the ASOF pattern)."""
-    if statement.count("(") != statement.count(")"):
+    if not sqltext.balanced(statement):
         return None
     m = _GENERAL_ROUTE.match(statement)
     if not m:
@@ -2313,8 +2286,8 @@ def _route_pruned_general(session, statement: str):
     name = _resolve(session, m.group("name"))
     if not catalog.table_exists(name):
         return None
-    refs, saw_join = _top_level_table_refs(statement)
-    if saw_join or len(refs) != 1:
+    refs = [r for r in _table_refs(statement) if r["kw"] != ","]
+    if len(refs) != 1 or not refs[0]["name"]:
         return None
     if re.search(r"\bASOF\b|\bVERSION\b|\bTIMESTAMP\s+AS\s+OF\b"
                  r"|cosine_distance\s*\(",
@@ -2386,211 +2359,101 @@ def _route_pruned_general(session, statement: str):
 _JP_TAIL_KW = re.compile(
     r"(?:GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT|QUALIFY|WINDOW)\b",
     re.IGNORECASE)
-_JP_WHERE_KW = re.compile(r"WHERE\b", re.IGNORECASE)
-# Same alias stop-list as _TABLE_REF_TAIL, plus name-group spans.
-_JP_REF = re.compile(
-    r"\s*([\w.]+)"
-    r"(?:\s+(?:AS\s+)?(?!ON\b|WHERE\b|GROUP\b|ORDER\b|LIMIT\b|LEFT\b"
-    r"|RIGHT\b|FULL\b|INNER\b|CROSS\b|JOIN\b|USING\b|ASOF\b|QUALIFY\b"
-    r"|UNION\b|EXCEPT\b|INTERSECT\b|VERSION\b|FOR\b|TIMESTAMP\b"
-    r"|HAVING\b|WINDOW\b|SEMI\b|ANTI\b|NATURAL\b)(\w+))?",
-    re.IGNORECASE)
+# Words that can follow a table reference but never alias it — the ONE
+# stop-list of every reference scanner.
+_REF_STOP = frozenset((
+    "ON", "WHERE", "GROUP", "ORDER", "LIMIT", "LEFT", "RIGHT", "FULL",
+    "INNER", "CROSS", "JOIN", "USING", "ASOF", "QUALIFY", "UNION",
+    "EXCEPT", "INTERSECT", "VERSION", "FOR", "TIMESTAMP", "HAVING",
+    "WINDOW", "SEMI", "ANTI", "NATURAL"))
+# Depth-0 words that end a FROM list's comma references.
+_REF_LIST_END = frozenset((
+    "WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "QUALIFY", "WINDOW",
+    "UNION", "EXCEPT", "INTERSECT", "MINUS"))
 
 
-def _skip_str(s: str, i: int) -> int:
-    """``s[i]`` is an opening single quote: return the index just past
-    the closing quote, treating doubled ``''`` as an escaped quote —
-    the ONE string-skipping convention every depth-0 scanner in this
-    module shares (round-12 review fix: the scanners had drifted)."""
-    n = len(s)
-    i += 1
-    while i < n:
-        if s[i] == "'":
-            if i + 1 < n and s[i + 1] == "'":
-                i += 2
-                continue
-            return i + 1
-        i += 1
-    return i
-
-
-def _has_top_level_kw(s: str, pattern: str) -> bool:
-    """True when ``pattern`` (a regex, matched at word starts) occurs
-    at paren depth 0 outside single-quoted literals."""
-    pat = re.compile(pattern, re.IGNORECASE)
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i = _skip_str(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (i == 0 or not (s[i - 1].isalnum()
-                                            or s[i - 1] == "_")) \
-                and pat.match(s, i):
-            return True
-        i += 1
-    return False
+def _is_word(t, *words: str) -> bool:
+    return t.kind == "word" and t.text.upper() in words
 
 
 def _top_level_where_body(s: str) -> "str | None":
     """The MAIN query block's single top-level WHERE body (tail
     clauses and trailing ';' stripped), or None when there is no — or
-    more than one (set operation) — top-level WHERE. Paren-depth
-    tracked, quoted literals skipped."""
-    where_at: list[int] = []
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i = _skip_str(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Ww" \
-                and (i == 0 or not (s[i - 1].isalnum()
-                                    or s[i - 1] == "_")) \
-                and _JP_WHERE_KW.match(s, i):
-            where_at.append(i)
-            i += 5
-            continue
-        i += 1
-    if len(where_at) != 1:
+    more than one (set operation) — top-level WHERE."""
+    toks = sqltext.lex(s)
+    wheres = [k for k, t in enumerate(toks)
+              if t.depth == 0 and _is_word(t, "WHERE")]
+    if len(wheres) != 1:
         return None
-    start = where_at[0] + 5
-    depth, i, end = 0, start, n
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i = _skip_str(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and not s[i - 1].isalnum() and s[i - 1] != "_" \
-                and _JP_TAIL_KW.match(s, i):
-            end = i
-            break
-        i += 1
+    start = toks[wheres[0]].end
+    end = next((t.start for t in toks[wheres[0] + 1:]
+                if t.depth == 0 and t.kind == "word"
+                and _JP_TAIL_KW.match(s, t.start)), len(s))
     return s[start:end].strip().rstrip(";").strip()
 
 
-_JP_DERIVED_ALIAS = re.compile(r"\s*(?:AS\s+)?(\w+)?", re.IGNORECASE)
+def _ref_alias(toks, k: int) -> "tuple[str, int]":
+    """``[AS] alias`` at ``toks[k]``: ``(alias_or_empty, index_past)``."""
+    j = k + 1 if k < len(toks) and _is_word(toks[k], "AS") else k
+    if j < len(toks) and toks[j].kind == "word" \
+            and toks[j].text.upper() not in _REF_STOP:
+        return toks[j].text, j + 1
+    return "", k
 
 
-def _skip_derived_rel(s: str, i: int) -> "tuple[int, str] | None":
-    """``s[i:]`` (after optional whitespace) opens a derived relation
-    ``( SELECT|WITH ... ) [AS] [alias]``: return ``(index_past_alias,
-    alias_or_empty)``, else None. The body parens are matched
-    string-safely; the rewriter never swaps inside here (the subquery
-    walk in ``_prune_join_refs`` already pruned the body), but the
-    alias must join the duplicate-qualifier guard."""
-    m = re.compile(r"\s*\(", re.DOTALL).match(s, i)
-    if not m or not re.compile(r"\(\s*(?:SELECT|WITH)\b",
-                               re.IGNORECASE).match(s, m.end() - 1):
-        return None
-    j, depth, n = m.end() - 1, 0, len(s)
-    while j < n:
-        cj = s[j]
-        if cj == "'":
-            j = _skip_str(s, j)
+def _table_refs(s: str):
+    """Yield every top-level FROM/JOIN/comma table reference as
+    ``{kw, name, alias, start, end}`` (``kw`` is FROM, JOIN or ``,``)
+    where [start, end) covers exactly the name token (an explicit
+    alias stays in place). A DERIVED relation ``( SELECT ... ) x``
+    has name None and alias x (possibly ''); any other non-name
+    relation (``( VALUES ...)``) has name AND alias None. A depth-0
+    comma may follow a JOIN..ON chain too (``FROM a JOIN b ON ..., c``
+    is a legal cross ref — round-12 review fix), so the comma list
+    stays armed until a tail keyword."""
+    toks = sqltext.lex(s)
+    in_list = False
+    k = 0
+    while k < len(toks):
+        t = toks[k]
+        if t.depth != 0:
+            k += 1
             continue
-        if cj == "(":
-            depth += 1
-        elif cj == ")":
-            depth -= 1
-            if depth == 0:
-                break
-        j += 1
-    if j >= n:
-        return None
-    ma = _JP_DERIVED_ALIAS.match(s, j + 1)
-    alias = ma.group(1) or ""
-    if alias and re.match(r"(?:ON|WHERE|GROUP|ORDER|LIMIT|LEFT|RIGHT"
-                          r"|FULL|INNER|CROSS|JOIN|USING|QUALIFY|UNION"
-                          r"|EXCEPT|INTERSECT|HAVING|WINDOW|SEMI|ANTI"
-                          r"|NATURAL)$", alias, re.IGNORECASE):
-        return j + 1, ""         # keyword, not an alias
-    return (ma.end() if alias else j + 1), alias
+        if _is_word(t, "FROM", "JOIN") or (in_list and t.text == ","
+                                           and t.kind == "op"):
+            ref = {"kw": t.text.upper(), "name": None, "alias": None,
+                   "start": -1, "end": -1}
+            k += 1
+            nxt = toks[k] if k < len(toks) else None
+            if nxt is not None and nxt.text == "(" \
+                    and k + 1 < len(toks) \
+                    and _is_word(toks[k + 1], "SELECT", "WITH"):
+                close = sqltext.closing(toks, k)
+                if close >= 0:
+                    ref["alias"], k = _ref_alias(toks, close + 1)
+            elif nxt is not None and nxt.kind == "word":
+                j = k
+                while j + 2 < len(toks) and toks[j + 1].text == "." \
+                        and toks[j + 2].kind == "word" \
+                        and toks[j + 1].start == toks[j].end:
+                    j += 2
+                ref.update(name=s[nxt.start:toks[j].end],
+                           start=nxt.start, end=toks[j].end)
+                ref["alias"], k = _ref_alias(toks, j + 1)
+            in_list = True
+            yield ref
+            continue
+        if in_list and t.kind == "word" and t.text.upper() in _REF_LIST_END:
+            in_list = False
+        k += 1
 
 
 def _table_ref_spans(s: str) -> "list[dict] | None":
     """Top-level FROM/JOIN/comma table references WITH text spans —
-    the swap targets for join pruning. Each entry is ``{name, alias,
-    start, end}`` where [start, end) covers exactly the name token (an
-    explicit alias stays in place). A DERIVED relation ``( SELECT ...
-    ) x`` contributes ``{name: None, alias: x}`` — never a swap
-    target, but its alias joins the duplicate-qualifier guard
-    (round-12 fourth wave: its sibling NAMED references now still
-    prune). Returns None for other non-name relations (VALUES)."""
-    refs: list[dict] = []
-    depth, i, n = 0, 0, len(s)
-    in_comma_list = False
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i = _skip_str(s, i)
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth = max(0, depth - 1)
-            i += 1
-            continue
-        if depth == 0 and in_comma_list and ch == ",":
-            d = _skip_derived_rel(s, i + 1)
-            if d is not None:
-                refs.append({"name": None, "alias": d[1],
-                             "start": -1, "end": -1})
-                i = d[0]
-                continue
-            t = _JP_REF.match(s, i + 1)
-            if not t or not t.group(1):
-                return None
-            refs.append({"name": t.group(1), "alias": t.group(2) or "",
-                         "start": t.start(1), "end": t.end(1)})
-            i = t.end()
-            continue
-        if depth == 0 and ch in "FfJj" \
-                and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")):
-            m = _REF_KEYWORD.match(s, i)
-            if m:
-                d = _skip_derived_rel(s, m.end())
-                if d is not None:
-                    refs.append({"name": None, "alias": d[1],
-                                 "start": -1, "end": -1})
-                    in_comma_list = True
-                    i = d[0]
-                    continue
-                t = _JP_REF.match(s, m.end())
-                if not t or not t.group(1):
-                    return None      # FROM/JOIN ( ... ) — VALUES etc.
-                refs.append({"name": t.group(1),
-                             "alias": t.group(2) or "",
-                             "start": t.start(1), "end": t.end(1)})
-                # A depth-0 comma may follow a JOIN..ON chain too
-                # (``FROM a JOIN b ON ..., c`` is a legal cross ref —
-                # round-12 review fix: it used to be dropped, silently
-                # bypassing the duplicate-qualifier guard), so the
-                # comma list stays armed until a tail keyword.
-                in_comma_list = True
-                i = t.end()
-                continue
-        if depth == 0 and in_comma_list and ch.isalpha() \
-                and (i == 0 or not (s[i - 1].isalnum()
-                                    or s[i - 1] == "_")) \
-                and _JP_LIST_END.match(s, i):
-            in_comma_list = False    # WHERE/GROUP/... ends the list
-        i += 1
-    return refs
+    the swap targets for join pruning (``_table_refs``). Returns None
+    when any of them is a non-name, non-derived relation (VALUES)."""
+    refs = list(_table_refs(s))
+    return None if any(r["alias"] is None for r in refs) else refs
 
 
 def _null_rejecting_pred(pred: tuple) -> bool:
@@ -2658,65 +2521,29 @@ _JP_DERIVE_CAP = 64
 
 def _on_clause_bodies(s: str) -> list:
     """Depth-0 ``ON <cond>`` bodies of one statement block, each ended
-    by the next depth-0 clause keyword / comma / ';' / closing paren.
-    String literals are skipped with the module convention."""
+    by the next depth-0 clause keyword / comma / ';' / closing paren."""
+    toks = sqltext.lex(s)
     out: list = []
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i = _skip_str(s, i)
+    for k, t in enumerate(toks):
+        if t.depth != 0 or not _is_word(t, "ON"):
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth = max(0, depth - 1)
-        elif depth == 0 and ch in "Oo" \
-                and (i == 0 or not (s[i - 1].isalnum()
-                                    or s[i - 1] == "_")) \
-                and re.match(r"ON\b", s[i:], re.IGNORECASE):
-            j, d2, end = i + 2, 0, n
-            while j < n:
-                cj = s[j]
-                if cj == "'":
-                    j = _skip_str(s, j)
-                    continue
-                if cj == "(":
-                    d2 += 1
-                elif cj == ")":
-                    if d2 == 0:
-                        end = j
-                        break
-                    d2 -= 1
-                elif d2 == 0 and cj in ",;":
-                    end = j
-                    break
-                elif d2 == 0 and cj.isalpha() \
-                        and not (s[j - 1].isalnum() or s[j - 1] == "_") \
-                        and _JP_ON_END.match(s, j):
-                    end = j
-                    break
-                j += 1
-            out.append(s[i + 2:end])
-            i = end
-            continue
-        i += 1
+        end = next((u.start for u in toks[k + 1:]
+                    if u.depth < 0 or u.depth == 0 and (
+                        u.kind == "op" and u.text in ",;"
+                        or u.kind == "word" and _JP_ON_END.match(s, u.start))),
+                   len(s))
+        out.append(s[t.end:end])
     return out
 
 
 def _strip_outer_parens(t: str) -> str:
     t = t.strip()
-    while t.startswith("(") and t.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(t):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i < len(t) - 1:
-                    return t
-        t = t[1:-1].strip()
-    return t
+    while True:
+        toks = sqltext.lex(t)
+        if not toks or toks[0].text != "(" \
+                or sqltext.closing(toks, 0) != len(toks) - 1:
+            return t
+        t = t[toks[0].end:toks[-1].start].strip()
 
 
 def _join_edge_pairs(statement: str, conjs: list, cat_refs: list,
@@ -2728,7 +2555,7 @@ def _join_edge_pairs(statement: str, conjs: list, cat_refs: list,
     block has no outer/semi/anti/cross join keyword (see soundness
     note above). Bare-column edges are skipped (ambiguous)."""
     texts = list(conjs)
-    if not _has_top_level_kw(statement, _JP_OUTERISH):
+    if sqltext.find_top_level(statement, _JP_OUTERISH) < 0:
         for body in _on_clause_bodies(statement):
             sub = _split_top_and(body)
             if sub:
@@ -2845,14 +2672,14 @@ def _prune_main_refs(session, statement: str,
     if not m0:
         return None
     body_at = m0.end()
-    if statement.count("(") != statement.count(")"):
+    if not sqltext.balanced(statement):
         return None
     if re.search(r"\bASOF\b|\bVERSION\s+AS\s+OF\b"
                  r"|\bTIMESTAMP\s+AS\s+OF\b|\bLATERAL\b",
                  statement, re.IGNORECASE):
         return None
-    if _has_top_level_kw(statement,
-                         r"(?:UNION|EXCEPT|INTERSECT|MINUS)\b"):
+    if sqltext.find_top_level(
+            statement, r"(?:UNION|EXCEPT|INTERSECT|MINUS)\b") >= 0:
         return None
     where = _top_level_where_body(statement)
     if not where:
@@ -2869,11 +2696,11 @@ def _prune_main_refs(session, statement: str,
         return None
     cte_names: set = set(outer_ctes)
     if re.match(r"WITH\b", statement[body_at:], re.IGNORECASE):
-        pos = _top_level_find(statement, "SELECT", start=body_at)
+        pos = sqltext.find_top_level(statement[body_at:], r"SELECT\b")
         if pos < 0:
             return None
-        cte_names |= {m.group(1).lower()
-                      for m in _CTE_NAME.finditer(statement[:pos])}
+        cte_names |= {m.group(1).lower() for m in
+                      _CTE_NAME.finditer(statement[:body_at + pos])}
     catalog = session.catalog
 
     def _decline(reason: str):
@@ -3049,10 +2876,6 @@ def _prune_main_refs(session, statement: str,
     return out, views, audit
 
 
-_CTE_ENTRY = re.compile(r"(\w+)\s*(?:\([^)]*\)\s*)?AS\s*\(",
-                        re.IGNORECASE)
-
-
 def _cte_body_spans(s: str, start: int) -> "list[tuple] | None":
     """Top-level CTE bodies of a WITH statement: ``[(name,
     body_start, body_end)]`` where [body_start, body_end) is the text
@@ -3063,73 +2886,46 @@ def _cte_body_spans(s: str, start: int) -> "list[tuple] | None":
     m = re.match(r"WITH\s+(RECURSIVE\s+)?", s[start:], re.IGNORECASE)
     if not m or m.group(1):
         return None
+    toks = sqltext.lex(s)
     i = start + m.end()
     out: list = []
     while True:
-        me = _CTE_ENTRY.match(s, i)
+        me = _CTE_NAME.match(s, i)
         if not me:
             return None
-        open_i = me.end() - 1
-        j, depth, n = open_i, 0, len(s)
-        while j < n:
-            ch = s[j]
-            if ch == "'":
-                j = _skip_str(s, j)
-                continue
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        if j >= n:
+        k = next((j for j, t in enumerate(toks)
+                  if t.start == me.end() - 1), None)
+        if k is None:
             return None
-        out.append((me.group(1), open_i + 1, j))
-        mc = re.compile(r"\s*,\s*").match(s, j + 1)
-        if mc:
-            i = mc.end()
+        close = sqltext.closing(toks, k)
+        if close < 0 or close + 1 >= len(toks):
+            return None
+        out.append((me.group(1), toks[k].end, toks[close].start))
+        nxt = toks[close + 1]
+        if nxt.text == "," and close + 2 < len(toks):
+            i = toks[close + 2].start
             continue
-        if re.compile(r"\s*SELECT\b", re.IGNORECASE).match(s, j + 1):
-            return out
-        return None
+        return out if _is_word(nxt, "SELECT") else None
 
 
 def _subquery_block_spans(s: str, start: int) -> list:
     """OUTERMOST parenthesized query blocks — ``( SELECT ...`` /
     ``( WITH ...`` — in ``s[start:]``: ``[(body_start, body_end)]``
     with the text inside the parens. Nested blocks are skipped (the
-    recursion into each outermost body finds them itself). String
-    literals are skipped with the module convention."""
+    recursion into each outermost body finds them itself)."""
+    toks = sqltext.lex(s)
     out: list = []
-    i, n = start, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i = _skip_str(s, i)
-            continue
-        if ch == "(":
-            if re.compile(r"\(\s*(?:SELECT|WITH)\b",
-                          re.IGNORECASE).match(s, i):
-                j, depth = i, 0
-                while j < n:
-                    cj = s[j]
-                    if cj == "'":
-                        j = _skip_str(s, j)
-                        continue
-                    if cj == "(":
-                        depth += 1
-                    elif cj == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j += 1
-                if j >= n:
-                    return out
-                out.append((i + 1, j))
-                i = j + 1
-                continue
-        i += 1
+    k = 0
+    while k < len(toks) - 1:
+        t = toks[k]
+        if t.start >= start and t.text == "(" \
+                and _is_word(toks[k + 1], "SELECT", "WITH"):
+            close = sqltext.closing(toks, k)
+            if close < 0:
+                return out
+            out.append((t.end, toks[close].start))
+            k = close
+        k += 1
     return out
 
 
@@ -3145,31 +2941,20 @@ def _set_op_branch_spans(s: str, start: int) -> "list[tuple] | None":
     no separators. The separators stay in place — each branch is
     rewritten independently and patched back."""
     seps: list = []
-    depth, i, n = 0, start, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":
-            i = _skip_str(s, i)
+    for t in sqltext.lex(s):
+        if t.start < max(start, seps[-1][1] if seps else 0) \
+                or t.depth != 0 or t.kind != "word":
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (i == 0 or not (s[i - 1].isalnum()
-                                            or s[i - 1] == "_")):
-            m = _SET_OP_SEP.match(s, i)
-            if m:
-                seps.append((i, m.end()))
-                i = m.end()
-                continue
-        i += 1
+        m = _SET_OP_SEP.match(s, t.start)
+        if m:
+            seps.append((t.start, m.end()))
     if not seps:
         return None
     spans, at = [], start
     for s0, s1 in seps:
         spans.append((at, s0))
         at = s1
-    spans.append((at, n))
+    spans.append((at, len(s)))
     return spans
 
 
@@ -3222,7 +3007,7 @@ def _prune_join_refs(session, statement: str,
     tables_acc: dict = {}
     fr = ft = 0
     try:
-        if statement.count("(") == statement.count(")"):
+        if sqltext.balanced(statement):
             patches: list = []
             prior: set = set(outer_ctes)
             main_at = body_at
@@ -3335,9 +3120,6 @@ _VEC_TOPK_LATERAL = re.compile(
     re.IGNORECASE | re.DOTALL)
 _LATERAL_OUT_ITEM = re.compile(
     r"(\w+)\.(\w+)(?:\s+AS\s+(\w+))?", re.IGNORECASE)
-_JP_LIST_END = re.compile(
-    r"(?:WHERE|GROUP|ORDER|HAVING|LIMIT|QUALIFY|WINDOW"
-    r"|UNION|EXCEPT|INTERSECT|MINUS)\b", re.IGNORECASE)
 
 
 def _route_vector_topk_lateral(session, statement: str):
@@ -3584,69 +3366,6 @@ _EQUI_CONJ = re.compile(
     r"(?P<bq>\w+)\s*\.\s*(?P<bk>\w+)\s*$")
 
 
-def _split_top_and(text: str) -> "list[str] | None":
-    """Split a WHERE body into top-level AND conjuncts (paren- and
-    quote-aware). Returns None when a top-level OR makes the body
-    non-conjunctive.
-
-    BETWEEN-aware (round-11 advisor fix): ``x BETWEEN a AND b``'s own
-    AND pairs the bounds, it is NOT a conjunction separator — splitting
-    it relied on order-preserving rejoin for correctness and could
-    misclassify a bounds fragment shaped like ``t1.a = t2.b`` as a join
-    edge. A top-level BETWEEN arms a pending flag; the next top-level
-    AND is consumed as its pairing keyword instead of splitting.
-
-    CASE-aware (round-12 review fix): ``CASE WHEN p AND q ...`` holds
-    ANDs at paren depth 0 that are neither separators nor BETWEEN
-    pairings — CASE..END nesting is tracked like parens, so those
-    ANDs (and any BETWEEN/OR inside the CASE) are opaque."""
-    parts: list[str] = []
-    depth, last, i, n = 0, 0, 0, len(text)
-    case_depth = 0
-    pending_between = False
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            i = _skip_str(text, i)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch in "CcEe" \
-                and (i == 0 or not (text[i - 1].isalnum()
-                                    or text[i - 1] == "_")):
-            if re.match(r"CASE\b", text[i:], re.IGNORECASE):
-                case_depth += 1
-                i += 4
-                continue
-            if re.match(r"END\b", text[i:], re.IGNORECASE):
-                case_depth = max(0, case_depth - 1)
-                i += 3
-                continue
-        elif depth == 0 and case_depth == 0 and ch in "AaOoBb" \
-                and (i == 0 or not (text[i - 1].isalnum()
-                                    or text[i - 1] == "_")):
-            if re.match(r"BETWEEN\b", text[i:], re.IGNORECASE):
-                pending_between = True
-                i += 7
-                continue
-            if re.match(r"AND\b", text[i:], re.IGNORECASE):
-                if pending_between:
-                    pending_between = False     # the bounds' own AND
-                    i += 3
-                    continue
-                parts.append(text[last:i])
-                i += 3
-                last = i
-                continue
-            if re.match(r"OR\b", text[i:], re.IGNORECASE):
-                return None
-        i += 1
-    parts.append(text[last:])
-    return [p.strip() for p in parts if p.strip()]
-
-
 def _match_comma_join_chain(session, statement: str):
     """Recognize the comma-FROM textual join form — ``FROM a, b, c
     WHERE a.x = b.y AND b.z = c.w AND <filters>`` (the classic TPC-H
@@ -3664,7 +3383,7 @@ def _match_comma_join_chain(session, statement: str):
         return None
     # The FROM must sit at the main block's top level: an unbalanced
     # head means the lazy .*? latched onto a subquery's FROM.
-    if m.group("head").count("(") != m.group("head").count(")"):
+    if not sqltext.balanced(m.group("head")):
         return None
     refs: list[tuple[str, str]] = []
     for part in m.group("tables").split(","):
@@ -3756,7 +3475,7 @@ def _maybe_reorder_joins(session, statement: str) -> str:
         session.last_join_reorder = {"applied": False, "reason": reason}
         return statement
 
-    if "/*+" in statement:
+    if sqltext.has_hint(statement):
         return _bail("hinted")                 # user hint wins
     try:
         if str(session.spark.conf.get(
@@ -3778,15 +3497,9 @@ def _maybe_reorder_joins(session, statement: str) -> str:
     # order — reordering would silently permute the OUTPUT COLUMNS for
     # positional consumers (round-10 review fix). Stars inside calls
     # (count(*)) sit at paren depth > 0 and are fine.
-    head = m.group("head")
-    depth = 0
-    for i, ch in enumerate(head):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "*" and depth == 0:
-            return _bail("select-star")
+    if any(t.text == "*" and t.depth == 0
+           for t in sqltext.lex(m.group("head"))):
+        return _bail("select-star")
     catalog = session.catalog
 
     # nodes: (key=alias-or-name-lower, sql_text, resolved_table)
@@ -3930,67 +3643,6 @@ def _maybe_reorder_joins(session, statement: str) -> str:
     return "".join(parts)
 
 
-_TABLE_REF_TAIL = re.compile(
-    r"\s+([\w.]+)"
-    r"(?:\s+(?:AS\s+)?(?!ON\b|WHERE\b|GROUP\b|ORDER\b|LIMIT\b|LEFT\b"
-    r"|RIGHT\b|FULL\b|INNER\b|CROSS\b|JOIN\b|USING\b|ASOF\b|QUALIFY\b"
-    r"|UNION\b|EXCEPT\b|INTERSECT\b|VERSION\b|FOR\b|TIMESTAMP\b"
-    r"|HAVING\b|WINDOW\b|SEMI\b|ANTI\b|NATURAL\b)(\w+))?",
-    re.IGNORECASE)
-_REF_KEYWORD = re.compile(r"(?:FROM|JOIN)\b", re.IGNORECASE)
-
-
-def _top_level_table_refs(s: str) -> "tuple[list[tuple[str, str]], bool]":
-    """FROM/JOIN table references at the MAIN query block's top level
-    only. Parenthesis depth is tracked and single-quoted literals
-    skipped, so scalar syntax (``EXTRACT(MONTH FROM ts)``,
-    ``SUBSTRING(x FROM 1)``), subquery bodies, and ``'from mars'``
-    string literals never produce a spurious reference — a column name
-    colliding with an analyzed table would otherwise yield a dangling
-    BROADCAST hint and polluted ``last_join_decisions`` audit records
-    (round-10 advisor fix). Returns (refs, saw_top_level_join) where
-    each ref is (name, alias_or_empty)."""
-    refs: list[tuple[str, str]] = []
-    saw_join = False
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "'":                       # skip '...' ('' = escaped quote)
-            i += 1
-            while i < n:
-                if s[i] == "'":
-                    if i + 1 < n and s[i + 1] == "'":
-                        i += 2
-                        continue
-                    break
-                i += 1
-            i += 1
-            continue
-        if ch == "(":
-            depth += 1
-            i += 1
-            continue
-        if ch == ")":
-            depth = max(0, depth - 1)
-            i += 1
-            continue
-        if depth == 0 and ch in "FfJj" \
-                and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_")):
-            m = _REF_KEYWORD.match(s, i)
-            if m:
-                if s[i] in "Jj":
-                    saw_join = True
-                t = _TABLE_REF_TAIL.match(s, m.end())
-                if t:
-                    refs.append((t.group(1), t.group(2) or ""))
-                    i = t.end()
-                    continue
-                i = m.end()
-                continue
-        i += 1
-    return refs, saw_join
-
-
 def _inject_stats_hints(session, statement: str):
     """System-R broadcast decision for the dispatched SELECT surface.
 
@@ -4012,7 +3664,7 @@ def _inject_stats_hints(session, statement: str):
     region-statistics-driven planning, on by default for analyzed
     tables."""
     decisions: list[dict] = []
-    if "/*+" in statement \
+    if sqltext.has_hint(statement) \
             or re.search(r"\bASOF\b", statement, re.IGNORECASE):
         # ASOF statements rewrite their join into an operator-backed
         # view — a hint naming the original aliases would dangle.
@@ -4029,7 +3681,7 @@ def _inject_stats_hints(session, statement: str):
         # SHADOWS an analyzed catalog table must never be hinted (the
         # hint would broadcast the derived relation — round-9 review
         # fix).
-        pos = _top_level_find(statement, "SELECT")
+        pos = sqltext.find_top_level(statement, r"SELECT\b")
         if pos < 0:
             return statement, decisions
         inject_at = pos + len("SELECT")
@@ -4037,12 +3689,16 @@ def _inject_stats_hints(session, statement: str):
                      for m in _CTE_NAME.finditer(statement[:inject_at])}
     else:
         return statement, decisions
-    all_refs, saw_join = _top_level_table_refs(statement[inject_at:])
-    refs = [(n, a) for n, a in all_refs if n.lower() not in cte_names]
+    # FROM/JOIN references of the main block; comma references and
+    # derived relations are never hinted.
+    all_refs = [r for r in _table_refs(statement[inject_at:])
+                if r["kw"] != ","]
+    refs = [(r["name"], r["alias"]) for r in all_refs
+            if r["name"] and r["name"].lower() not in cte_names]
     # Only statements that actually JOIN at the main block's top level
     # can use a broadcast hint — counting joins (not refs) keeps
     # CTE ⋈ catalog-dim hintable.
-    if not refs or not saw_join:
+    if not refs or all(r["kw"] != "JOIN" for r in all_refs):
         return statement, decisions
 
     from heracles_spark import planner
@@ -4223,30 +3879,6 @@ def _rewrite_asof_join(session, statement: str):
     return f"{head} {view} {tail}", view, build
 
 
-def _top_level_find(s: str, word: str, start: int = 0) -> int:
-    """Index of the first occurrence of ``word`` (as a whole keyword,
-    case-insensitive) at paren depth 0 outside string literals, or -1."""
-    pat = re.compile(rf"\b{word}\b", re.IGNORECASE)
-    depth, i, n = 0, start, len(s)
-    while i < n:
-        ch = s[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch in ("'", '"'):
-            j = i + 1
-            while j < n and s[j] != ch:
-                j += 2 if s[j] == "\\" else 1
-            i = j
-        elif depth == 0:
-            m = pat.match(s, i)
-            if m:
-                return i
-        i += 1
-    return -1
-
-
 def rewrite_qualify(statement: str) -> str:
     """Rewrite a top-level ``QUALIFY <cond>`` (filter evaluated AFTER
     window functions — Snowflake/DuckDB/BigQuery semantics; Spark has
@@ -4262,14 +3894,14 @@ def rewrite_qualify(statement: str) -> str:
     Trailing ORDER BY / LIMIT stay outermost. Statements without a
     top-level QUALIFY pass through untouched; QUALIFY inside a
     subquery is out of scope (Spark will reject it, loudly)."""
-    pos = _top_level_find(statement, "QUALIFY")
+    pos = sqltext.find_top_level(statement, r"QUALIFY\b")
     if pos < 0:
         return statement
     head = statement[:pos].rstrip().rstrip(";")
     rest = statement[pos + len("QUALIFY"):].strip().rstrip(";")
     cut = len(rest)
-    for stop in (r"ORDER\s+BY", "LIMIT"):
-        p = _top_level_find(rest, stop)
+    for stop in (r"ORDER\s+BY\b", r"LIMIT\b"):
+        p = sqltext.find_top_level(rest, stop)
         if p >= 0:
             cut = min(cut, p)
     cond, tail = rest[:cut].strip(), rest[cut:].strip()
@@ -4298,18 +3930,12 @@ def _parse_merge(statement: str):
 
     source_sql = source_table = None
     if rest.startswith("("):
-        depth, i = 0, 0
-        for i, ch in enumerate(rest):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        if depth != 0:
+        toks = sqltext.lex(rest)
+        close = sqltext.closing(toks, 0)
+        if close < 0:
             raise ValueError("MERGE: unbalanced parens in USING subquery")
-        source_sql = rest[1:i].strip()
-        rest = rest[i + 1:]
+        source_sql = rest[1:toks[close].start].strip()
+        rest = rest[toks[close].end:]
     else:
         m2 = re.match(r"(?P<src>[\w.]+)", rest)
         if not m2:
@@ -4323,19 +3949,18 @@ def _parse_merge(statement: str):
         salias = m3.group("a")
         rest = rest[m3.end():]
 
-    m4 = re.match(r"\s*ON\s+(?P<on>.*?)\s+(?=WHEN\s+(?:NOT\s+)?MATCHED\b)",
-                  rest, re.IGNORECASE | re.DOTALL)
-    if not m4:
+    m4 = re.match(r"\s*ON\s", rest, re.IGNORECASE)
+    starts = [t.start for t in sqltext.lex(rest)
+              if t.depth == 0 and _is_word(t, "WHEN")
+              and _WHEN_MATCHED.match(rest, t.start)]
+    if not m4 or not starts:
         raise ValueError("MERGE: missing ON condition or WHEN clause")
-    on = m4.group("on").strip()
+    on = rest[m4.end():starts[0]].strip()
 
-    clause_text = rest[m4.end():]
-    starts = [mm.start() for mm in re.finditer(
-        r"\bWHEN\s+(?:NOT\s+)?MATCHED\b", clause_text, re.IGNORECASE)]
     clauses = []
     for idx, st in enumerate(starts):
-        end = starts[idx + 1] if idx + 1 < len(starts) else len(clause_text)
-        chunk = re.sub(r"^\s*WHEN\s+", "", clause_text[st:end].strip(),
+        end = starts[idx + 1] if idx + 1 < len(starts) else len(rest)
+        chunk = re.sub(r"^\s*WHEN\s+", "", rest[st:end].strip(),
                        flags=re.IGNORECASE)
         cm = _MERGE_KIND.match(chunk)
         kind = ("not_matched_by_source" if cm.group("bysrc")
@@ -4356,21 +3981,10 @@ def _split_on_then(body: str) -> tuple[str | None, str]:
     paren depth 0 and outside any CASE…END — a condition like
     ``(CASE WHEN x THEN 1 ELSE 0 END) = 1 THEN UPDATE …`` must not split
     at the CASE's THEN."""
-    depth = case_depth = 0
-    for mm in re.finditer(r"'[^']*'|\"[^\"]*\"|\(|\)|\bCASE\b|\bEND\b|"
-                          r"\bTHEN\b", body, re.IGNORECASE):
-        tok = mm.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif tok.upper() == "CASE":
-            case_depth += 1
-        elif tok.upper() == "END":
-            case_depth = max(0, case_depth - 1)
-        elif tok.upper() == "THEN" and depth == 0 and case_depth == 0:
-            cond = body[:mm.start()].strip()
-            return (cond or None), body[mm.end():]
+    for t in sqltext.clause_words(body):
+        if t.text.upper() == "THEN":
+            cond = body[:t.start].strip()
+            return (cond or None), body[t.end:]
     raise ValueError(f"MERGE: WHEN clause missing THEN: {body!r}")
 
 
@@ -4420,29 +4034,40 @@ def _parse_columns(s: str) -> list[tuple[str, str]]:
 def _parse_props(s: str) -> dict[str, str]:
     props: dict[str, str] = {}
     for part in _split_top(s, ","):
-        kv = part.strip()
-        m = re.match(r"'([^']+)'\s*=\s*'([^']*)'", kv)
-        if not m:
-            raise ValueError(f"bad TBLPROPERTIES entry: {kv!r}")
-        props[m.group(1)] = m.group(2)
+        toks = sqltext.lex(part)
+        if len(toks) != 3 or toks[1].text != "=" \
+                or {toks[0].kind, toks[2].kind} - {"str", "dstr"} \
+                or not sqltext.string_value(toks[0].text):
+            raise ValueError(f"bad TBLPROPERTIES entry: {part!r}")
+        props[sqltext.string_value(toks[0].text)] = \
+            sqltext.string_value(toks[2].text)
     return props
 
 
 def _parse_value_rows(s: str) -> list[tuple]:
-    rows = []
-    for grp in re.findall(r"\(([^()]*)\)", s):
-        vals = []
-        for raw in _split_top(grp, ","):
-            raw = raw.strip()
-            if raw.upper() == "NULL":
-                vals.append(None)
-            elif raw.startswith("'") and raw.endswith("'"):
-                vals.append(raw[1:-1].replace("''", "'"))
-            elif raw.startswith('"') and raw.endswith('"'):
-                vals.append(raw[1:-1])
-            else:
-                vals.append(raw)
-        rows.append(tuple(vals))
+    """``(v, ...), (v, ...)``, alone or ending an INSERT statement (its
+    depth-0 words are skipped) → one tuple per row: NULL → None, string
+    literals decoded (adjacent ones concatenate), anything else as its
+    text."""
+    def value(group):
+        if len(group) == 1 and _is_word(group[0], "NULL"):
+            return None
+        if all(u.kind in ("str", "dstr") for u in group):
+            return "".join(sqltext.string_value(u.text) for u in group)
+        return s[group[0].start:group[-1].end]
+
+    rows, vals, group = [], [], []
+    for t in sqltext.lex(s):
+        if t.depth == 1 and t.text == "," and t.kind == "op" \
+                or t.depth == 0 and t.text == ")":
+            if group:
+                vals.append(value(group))
+            group = []
+            if t.depth == 0:
+                rows.append(tuple(vals))
+                vals = []
+        elif t.depth > 0:
+            group.append(t)
     return rows
 
 
@@ -4450,53 +4075,7 @@ def _split_where(s: str) -> tuple[str, str | None]:
     """Split ``<body> [WHERE <pred>]`` at the first WHERE keyword sitting
     at paren depth 0 and outside string literals — a SET value like
     ``name = 'a WHERE b'`` must not split inside the literal."""
-    depth, q, i, n = 0, None, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if q:
-            if ch == q:
-                q = None
-            i += 1
-            continue
-        if ch in "'\"":
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and s[i:i + 5].upper() == "WHERE":
-            before = s[i - 1] if i else " "
-            after = s[i + 5] if i + 5 < n else " "
-            if not (before.isalnum() or before == "_") \
-                    and not (after.isalnum() or after == "_"):
-                return s[:i], s[i + 5:].strip() or None
-        i += 1
-    return s, None
-
-
-def _split_top(s: str, sep: str) -> list[str]:
-    """Split on ``sep`` at paren/quote depth 0."""
-    out, buf, depth, q = [], [], 0, None
-    for ch in s:
-        if q:
-            buf.append(ch)
-            if ch == q:
-                q = None
-            continue
-        if ch in "'\"":
-            q = ch
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == sep and depth == 0:
-            out.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    if buf:
-        out.append("".join(buf))
-    return [p for p in (x.strip() for x in out) if p]
+    pos = sqltext.find_top_level(s, r"WHERE\b")
+    if pos < 0:
+        return s, None
+    return s[:pos], s[pos + len("WHERE"):].strip() or None

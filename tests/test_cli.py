@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import io
 
+import pytest
+
 from heracles_spark.cli import run_statement, HELP
 
 
@@ -230,3 +232,19 @@ def test_demo_script_end_to_end(tmp_path, monkeypatch, capsys):
     assert sorted(d for d in os.listdir(tmp_path / "export")
                   if d.startswith("region=")) == ["region=east",
                                                   "region=west"]
+
+
+def test_split_statements_block_comment_and_escapes():
+    from heracles_spark.cli import _split_statements
+
+    assert _split_statements("SELECT 1 /* x; y */ ; SELECT 2") == \
+        ["SELECT 1", "SELECT 2"]
+    assert _split_statements(
+        "SELECT 'a\\'; b' AS v; /* a /* nested; */ still; */ SELECT 3") == \
+        ["SELECT 'a\\'; b' AS v", "SELECT 3"]
+    # statements keep their inner comments as written; a piece of only
+    # comments is no statement; an unclosed comment is an error
+    assert _split_statements("SET a.b = x /* c; */ y; -- end;\n") == \
+        ["SET a.b = x /* c; */ y"]
+    with pytest.raises(ValueError, match="Unclosed bracketed comment"):
+        _split_statements("SELECT 1; /* SELECT 2;")

@@ -477,3 +477,41 @@ def test_insert_values_uncastable_rejected_whole(hsession, row):
     with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
         hsession.sql(f"INSERT INTO ty VALUES (8, 'ok', 2.0, 2, NULL), {row}")
     assert _typed_rows(hsession) == before
+
+
+def _mk_files(hsession):
+    """``_mk``'s rows, one file per row."""
+    hsession.sql("CREATE TABLE t TBLPROPERTIES('keyCols'='k', "
+                 "'numBuckets'='4') AS SELECT k, name, v FROM VALUES "
+                 "(1, 'a', 10), (2, 'b', 20), (3, 'c', 30), "
+                 "(4, 'd', CAST(NULL AS INT)) AS x(k, name, v)")
+
+
+@pytest.mark.parametrize("where, hit", [
+    ("NOT k = 2 AND k > 1", lambda k, name, v: k in (3, 4)),
+    ("k NOT IN (1, 3) AND k < 4", lambda k, name, v: k == 2),
+    ("k NOT BETWEEN 2 AND 3 AND name <> 'a'", lambda k, name, v: k == 4),
+    ("v IS NOT NULL AND k >= 3 -- AND k = 1\n", lambda k, name, v: k == 3),
+    (r"k = 2 AND name <> 'x\' AND k = 3'", lambda k, name, v: k == 2),
+], ids=["not", "not-in", "not-between", "is-not-null-comment",
+        "escaped-quote"])
+def test_delete_where_shapes_match_model(hsession, where, hit):
+    """NOT / NOT IN / NOT BETWEEN / IS NOT NULL conjuncts, comments and
+    backslash-escaped quotes split like Spark's lexer: the pruned
+    rewrite deletes exactly the model's rows."""
+    rows = [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "d", None)]
+    _mk_files(hsession)
+    assert len(hsession.catalog.get_table("t").files) == 4
+    kept = [r for r in rows if not hit(*r)]
+    assert _delete(hsession, f"WHERE {where}") == len(rows) - len(kept)
+    assert _rows(hsession) == kept
+
+
+def test_where_pred_drops_negated_conjuncts():
+    assert where_to_pruning_pred("NOT k = 2 AND k > 1") == (">", "k", 1)
+    assert where_to_pruning_pred("k NOT IN (1, 3) AND k < 4") == \
+        ("<", "k", 4)
+    assert where_to_pruning_pred("k NOT BETWEEN 2 AND 3 AND k = 4") == \
+        ("=", "k", 4)
+    assert where_to_pruning_pred("k IN ('a,b', 'c')") == \
+        ("in", "k", ["a,b", "c"])

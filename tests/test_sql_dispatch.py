@@ -2755,3 +2755,145 @@ def test_merge_source_head_skips_comments_and_hints(hsession, catalog):
                      "(/* x */ DROP TABLE mhs) s "
                      "ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = 0")
     assert catalog.table_exists("mhs")
+
+
+# -- lexical parity with stock Spark -----------------------------------
+# Comments, backslash escapes and quoted parens must split the way
+# Spark's own lexer splits them: a router may decline or route, but the
+# rows must be the ones stock ``spark.sql`` returns over the view.
+
+_LEX_VALUES = (r"(1, 'a'), (2, 'c'), (5, 'x\' AND k = 7'), (6, 'b'), "
+               r"(7, 'a\\'), (8, 'q')")
+
+
+def _lex_table(hsession, name):
+    """``name(k INT key, s STRING)`` over ``_LEX_VALUES``, one file per
+    row (``numBuckets`` = row count)."""
+    hsession.sql(f"CREATE TABLE {name} TBLPROPERTIES('keyCols'='k', "
+                 f"'numBuckets'='6') AS SELECT CAST(k AS INT) AS k, s "
+                 f"FROM VALUES {_LEX_VALUES} AS v(k, s)")
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.fixture(scope="module")
+def lexsession(spark, tmp_path_factory):
+    from heracles_spark.catalog import HeraclesCatalog
+    from heracles_spark.session import HeraclesSession
+
+    h = HeraclesSession.__new__(HeraclesSession)
+    h.spark = spark
+    h.catalog = HeraclesCatalog(
+        str(tmp_path_factory.mktemp("lex") / "metastore"))
+    _lex_table(h, "lext")
+    assert len(h.catalog.get_table("lext").files) == 6
+    return h
+
+
+@pytest.mark.parametrize("stmt", [
+    "SELECT s FROM lext WHERE k = 6 -- AND k = 5\n",
+    "SELECT count(*) FROM lext WHERE k = 6 -- AND k = 5\n",
+    "SELECT s FROM lext WHERE k = 6 -- AND k = 5\nORDER BY s",
+    r"SELECT count(*) FROM lext WHERE k = 5 AND s = 'x\' AND k = 7'",
+    r"SELECT s FROM lext WHERE k = 5 AND s = 'x\' AND k = 7'",
+    r"SELECT s FROM lext WHERE k = 7 AND s = 'a\\'",
+    r"SELECT count(*) FROM lext WHERE k = 7 AND s = 'a\\'",
+    "SELECT s FROM lext WHERE k = 6 /* /* nested */ AND k = 5 */",
+    "SELECT s, count(*) AS n FROM lext WHERE k BETWEEN 1 AND 6 "
+    "-- AND k = 1\nGROUP BY s",
+    "SELECT a.s FROM lext a JOIN lext b ON a.k = b.k "
+    "WHERE a.k = 6 -- AND b.k = 5\n",
+    "SELECT a.s FROM lext a JOIN lext b ON a.k = b.k "
+    r"WHERE a.k = 5 AND a.s = 'x\' AND b.k = 7'",
+    'SELECT "cosine_distance(k, s)" AS v FROM lext WHERE k = 1',
+    "SELECT s FROM lext WHERE s IN ('it''s', 'b') AND k = 6",
+])
+def test_lexical_parity_select(lexsession, stmt):
+    assert _sorted_rows(lexsession.sql(stmt)) == \
+        _sorted_rows(lexsession.spark.sql(stmt))
+
+
+@pytest.mark.parametrize("rows", [
+    "(1, 'x)y'), (2, 'c')",
+    "(3, 'a(b)'), (4, 'd')",
+    r"(6, 'it\'s')",
+    r"(7, 'a\\b'), (8, 'it''s'), (9, 'a' 'b'), (10, " + '"dq\'x")',
+])
+def test_lexical_parity_insert_values(hsession, rows):
+    hsession.sql("CREATE TABLE lexi (k INT, s STRING) "
+                 "TBLPROPERTIES('keyCols'='k')")
+    hsession.sql(f"INSERT INTO lexi VALUES {rows}")
+    assert _sorted_rows(hsession.sql("SELECT k, s FROM lexi")) == \
+        _sorted_rows(hsession.spark.sql(f"SELECT * FROM VALUES {rows}"))
+
+
+@pytest.mark.parametrize("stmt, affected, expected", [
+    ("DELETE FROM lexd WHERE k = 6 -- AND k = 5\n", 1, {6: None}),
+    (r"DELETE FROM lexd WHERE k = 5 AND s = 'x\' AND k = 7'", 1,
+     {5: None}),
+    (r"DELETE FROM lexd WHERE k = 7 AND s = 'a\\'", 1, {7: None}),
+    (r"UPDATE lexd SET s = 'it\'s' WHERE k = 2", 1, {2: "it's"}),
+    ("UPDATE lexd SET s = 'z' WHERE k = 6 /* AND k = 5 */", 1, {6: "z"}),
+])
+def test_lexical_parity_dml(hsession, stmt, affected, expected):
+    _lex_table(hsession, "lexd")
+    model = {r.k: r.s for r in
+             hsession.spark.sql(f"SELECT * FROM VALUES {_LEX_VALUES} "
+                                f"AS v(k, s)").collect()}
+    for k, s in expected.items():
+        if s is None:
+            del model[k]
+        else:
+            model[k] = s
+    out = hsession.sql(stmt).first()
+    assert out.rows_affected == affected
+    assert dict(hsession.sql("SELECT k, s FROM lexd").collect()) == model
+
+
+@pytest.mark.parametrize("stmt", [
+    "DELETE FROM lexd /* WHERE k = 5",
+    "UPDATE lexd SET s = 'z' /* WHERE k = 1",
+    "DELETE FROM lexd WHERE k = 6 /* /* */ AND k = 5",
+    "UPDATE lexd SET s = 'z' 'WHERE k = 1",
+    "DELETE FROM lexd WHERE k = 5 AND s = 'x",
+    "INSERT INTO lexd VALUES (9, 'q') /* x",
+    "SELECT s FROM lexd WHERE k = 5 /* AND k = 6",
+])
+def test_unclosed_comment_or_literal_is_rejected(hsession, stmt):
+    """An unclosed block comment or literal is a parse error, as in
+    Spark: it never swallows a WHERE and widens a write to every row,
+    nor drops conjuncts from a read."""
+    _lex_table(hsession, "lexd")
+    before = _sorted_rows(hsession.sql("SELECT k, s FROM lexd"))
+    with pytest.raises(Exception, match="(?i)unclosed|syntax error"):
+        hsession.sql(stmt).collect()
+    assert _sorted_rows(hsession.sql("SELECT k, s FROM lexd")) == before
+
+
+def test_show_create_table_round_trips_quoted_properties(hsession):
+    """SHOW CREATE TABLE renders every property through the literal
+    codec, so its output re-creates an identical table even when a
+    value holds a quote or a backslash."""
+    hsession.sql(r"CREATE TABLE scq (k INT, s STRING) TBLPROPERTIES("
+                 r"'keyCols'='k', 'note'='it\'s a\\b', 'q'='say ''hi''')")
+    tbl = hsession.catalog.get_table("scq")
+    assert tbl.properties["note"] == "it's a\\b"
+    assert tbl.properties["q"] == "say 'hi'"
+    ddl = hsession.sql("SHOW CREATE TABLE scq").first().createtab_stmt
+    hsession.sql("DROP TABLE scq")
+    hsession.sql(ddl)
+    again = hsession.catalog.get_table("scq")
+    assert (again.columns, again.key_cols, again.properties) == \
+        (tbl.columns, tbl.key_cols, tbl.properties)
+    assert hsession.sql("SHOW CREATE TABLE scq").first().createtab_stmt \
+        == ddl
+
+
+def test_untouched_statement_reaches_spark_as_written(hsession):
+    """Comments are stripped for the routers only: a statement no
+    rewrite changes runs as written, so SET keeps its raw value the
+    way stock Spark does."""
+    hsession.sql("SET spark.heracles.lexprobe = a -- c")
+    assert hsession.spark.conf.get("spark.heracles.lexprobe") == "a -- c"
