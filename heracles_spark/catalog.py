@@ -72,19 +72,27 @@ class CatalogError(ValueError):
     pass
 
 
-def local_frame(spark: SparkSession, rows: list[tuple],
-                schema: T.StructType) -> DataFrame:
+def local_frame(spark: SparkSession, rows: "list[tuple] | pyarrow.Table",
+                schema: T.StructType | str) -> DataFrame:
     """Driver-side ``rows`` as a DataFrame over a JVM ``LocalRelation``.
 
     ``spark.createDataFrame(<list>)`` plans a ``LogicalRDD`` over a
     parallelized, pickled RDD, so even a one-row frame runs a Spark job
     per collect (~300 ms on a 4-core box). Built from an Arrow table the
     rows live in the plan itself: the optimizer folds projections and
-    filters over them and a collect runs no job (~15-20 ms). The values
-    must already have ``schema``'s Python types; nullability is kept."""
+    filters over them and a collect runs no job (~15-20 ms). ``rows``
+    is a list of tuples whose values already have ``schema``'s Python
+    types, or a ``pyarrow.Table`` in ``schema``'s Arrow layout;
+    nullability is kept. ``schema`` may be a DDL string. The relation
+    stays local while its Arrow bytes are under
+    ``spark.sql.execution.arrow.localRelationThreshold``."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) if rows else [()] * len(arrow)
     table = pa.Table.from_arrays(

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from heracles_spark.catalog import CatalogError, HeraclesCatalog
+from heracles_spark.catalog import CatalogError, HeraclesCatalog, local_frame
 
 
 def table_changes(spark: SparkSession, catalog: HeraclesCatalog,
@@ -55,7 +55,7 @@ def table_changes(spark: SparkSession, catalog: HeraclesCatalog,
     def _read(paths: set[str]) -> DataFrame:
         if paths:
             return spark.read.schema(schema).parquet(*sorted(paths))
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
 
     old = _read(old_paths - new_paths).alias("o")
     new = _read(new_paths - old_paths).alias("n")

@@ -42,7 +42,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from heracles_spark.catalog import HeraclesCatalog
+from heracles_spark.catalog import HeraclesCatalog, local_frame
 from heracles_spark.pruning import prune_files, scan, to_nnf, to_sql
 
 # Max pointer values collected driver-side before falling back to a
@@ -254,7 +254,7 @@ def indexed_lookup(spark: SparkSession, catalog: HeraclesCatalog,
                                  "index_files_read": len(ifiles),
                                  "base_files_read": 0})
         if not ifiles:
-            return spark.createDataFrame([], itbl.schema()).select(*columns)
+            return local_frame(spark, [], itbl.schema()).select(*columns)
         return (spark.read.schema(itbl.schema())
                 .parquet(*[f["path"] for f in ifiles])
                 .where(to_sql(pred))
@@ -266,7 +266,7 @@ def indexed_lookup(spark: SparkSession, catalog: HeraclesCatalog,
     if not ifiles:
         LAST_INDEX_STATS.update({"mode": "index", "index_files_read": 0,
                                  "base_files_read": 0, "pointers": 0})
-        return _proj(spark.createDataFrame([], tbl.schema()))
+        return _proj(local_frame(spark, [], tbl.schema()))
     probe = (spark.read.schema(itbl.schema())
              .parquet(*[f["path"] for f in ifiles])
              .where(to_sql(pred))
@@ -278,7 +278,7 @@ def indexed_lookup(spark: SparkSession, catalog: HeraclesCatalog,
         LAST_INDEX_STATS.update({"mode": "index",
                                  "index_files_read": len(ifiles),
                                  "base_files_read": 0, "pointers": 0})
-        return _proj(spark.createDataFrame([], tbl.schema()))
+        return _proj(local_frame(spark, [], tbl.schema()))
     conj = []
     for i, k in enumerate(tbl.key_cols):
         vals = sorted({r[i] for r in ptrs})
@@ -290,7 +290,7 @@ def indexed_lookup(spark: SparkSession, catalog: HeraclesCatalog,
                              "base_files_read": len(bfiles),
                              "pointers": len(ptrs)})
     if not bfiles:
-        return _proj(spark.createDataFrame([], tbl.schema()))
+        return _proj(local_frame(spark, [], tbl.schema()))
     return _proj(spark.read.schema(tbl.schema())
                  .parquet(*[f["path"] for f in bfiles])
                  .where(to_sql(kpred))

@@ -56,7 +56,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from heracles_spark.catalog import HeraclesCatalog, KeyTable
+from heracles_spark.catalog import HeraclesCatalog, KeyTable, local_frame
 
 _S_MARK = "__merge_src_present__"
 
@@ -221,7 +221,7 @@ def merge_into(spark: SparkSession, catalog: HeraclesCatalog, table: str,
                 tgt = (spark.read.schema(tbl.schema())
                             .parquet(*sorted(tpaths)).alias(t)
                        if touched else
-                       spark.createDataFrame([], tbl.schema()).alias(t))
+                       local_frame(spark, [], tbl.schema()).alias(t))
     if tgt is None:
         tgt = catalog.read_table(spark, table).alias(t)
 

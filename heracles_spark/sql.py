@@ -1012,9 +1012,12 @@ def dispatch(session, statement: str) -> DataFrame | None:
         # ESTIMATE/LAYOUT/REORDER family): run the SAME routers the
         # statement takes at dispatch and surface the verdict — route
         # taken (pruned-scan / indexed / vector-index) with its
-        # pruning facts, or the decline REASON CODE. The pruned-scan
-        # verdict is metadata-only; a vector join-back verdict
-        # executes the k-row probe (the facts ARE its outcome).
+        # pruning facts and whether the survivors are read on the
+        # driver (scan "local", with the LocalRelation's row count) or
+        # by Spark — or the decline REASON CODE. A pruned-scan verdict
+        # reads at most the small files of a local scan; a vector
+        # join-back verdict executes the k-row probe (the facts ARE
+        # its outcome).
         inner = m.group("rest")
         _route_select(session, inner)
         a = dict(session.last_select_route)
@@ -1043,13 +1046,14 @@ def dispatch(session, statement: str) -> DataFrame | None:
               a.get("mode"),
               a.get("index"), a.get("n_probe"), a.get("k"),
               a.get("filtered"), a.get("join_back"),
-              a.get("base_files_read"), a.get("base_files_total"))],
+              a.get("base_files_read"), a.get("base_files_total"),
+              a.get("scan"), a.get("local_rows"))],
             "route: string, reason: string, files_read: long, "
             "files_total: long, files_contained: long, "
             "index_mode: string, vector_index: "
             "string, n_probe: int, k: int, filtered: boolean, "
             "join_back: boolean, base_files_read: long, "
-            "base_files_total: long")
+            "base_files_total: long, scan: string, local_rows: long")
 
     m = _EXPLAIN_LAYOUT.match(statement)
     if m and catalog.table_exists(_resolve(session, m.group("name"))):
@@ -2045,7 +2049,7 @@ def _route_vector_topk(session, statement: str):
         audit.update({"base_files_read": 0,
                       "base_files_total": len(tbl.files)})
         session.last_select_route = audit
-        empty = spark.createDataFrame([], tbl.schema())
+        empty = local_frame(spark, [], tbl.schema())
         if salias is not None:
             return empty.select(
                 *cols, F.lit(None).cast("double").alias(salias))
@@ -2232,13 +2236,24 @@ def _route_metadata_count_range(session, statement: str):
         # on an uncorrelated column): the route would just be a plain
         # filtered scan — take the normal path instead.
         return None
-    session.last_select_route = {
-        "route": "metadata-count-range",
-        "files_total": len(tbl.files), "files_read": len(boundary),
-        "files_contained": contained}
     alias = m.group("alias") or "count(1)"
     spark = session.spark
-    if not boundary:
+    # Boundary files small enough for the point-get path are counted
+    # on the driver: Spark's filter over the LocalRelation runs in the
+    # optimizer, so collecting its rows runs no job.
+    rows = pruning.read_local(tbl, boundary, pred)
+    audit = {"route": "metadata-count-range",
+             "files_total": len(tbl.files), "files_read": len(boundary),
+             "files_contained": contained,
+             "scan": "spark" if rows is None else "local"}
+    if rows is not None:
+        audit["local_rows"] = rows.num_rows
+    session.last_select_route = audit
+    if rows is not None:
+        if rows.num_rows:
+            meta_total += len(local_frame(spark, rows, tbl.schema())
+                              .where(pruning.to_sql(pred))
+                              .select().collect())
         return local_frame(spark, [(meta_total,)],
                            T_meta_count_schema(alias))
     scan = (spark.read.schema(tbl.schema())
@@ -3285,7 +3300,7 @@ def _route_vector_topk_lateral(session, statement: str):
             schema = ", ".join(
                 [f"`{out_qid}` {qid[1]}"]
                 + [f"`{a}` {_out_type(c)}" for c, a in out_items])
-            return session.spark.createDataFrame([], schema)
+            return local_frame(session.spark, [], schema)
         base = catalog.read_table(session.spark, name)
         if pred_sql is not None:
             base = base.where(pred_sql)    # fresh base: no staleness

@@ -256,15 +256,25 @@ def insert_rows(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     The batch is an all-string ``local_frame`` (a JVM LocalRelation, not
     a parallelized Python RDD); ``write_key_organized`` casts each
     column to its declared type, so a value that cannot be cast fails
-    the statement before anything is staged. One output file
-    (``n_buckets=1``): no row count is needed to size the write."""
+    the statement before anything is staged. A string has no cast to an
+    ARRAY column, which keeps its type and takes only NULL; any other
+    value raises ``ValueError`` before anything is staged. One output
+    file (``n_buckets=1``): no row count is needed to size the write."""
     tbl = catalog.get_table(table)
     base = tbl.schema()
     # Accept strings for any field, coerce via cast (reference coerces
     # literal strings to column types).
     from pyspark.sql import types as T
-    loose = T.StructType([T.StructField(f.name, T.StringType(), True)
-                          for f in base.fields])
+    loose = T.StructType([
+        f if isinstance(f.dataType, T.ArrayType)
+        else T.StructField(f.name, T.StringType(), True)
+        for f in base.fields])
+    for r in rows:
+        for f, v in zip(loose.fields, r):
+            if v is not None and isinstance(f.dataType, T.ArrayType):
+                raise ValueError(
+                    f"INSERT VALUES can only set ARRAY column {f.name} "
+                    f"to NULL, got {v}")
     df = local_frame(
         spark,
         [tuple(None if v is None else str(v) for v in r) for r in rows], loose)

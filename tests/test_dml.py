@@ -9,6 +9,8 @@ immutability) and the file-pruning scale path.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from heracles_spark import dml
@@ -477,6 +479,40 @@ def test_insert_values_uncastable_rejected_whole(hsession, row):
     with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
         hsession.sql(f"INSERT INTO ty VALUES (8, 'ok', 2.0, 2, NULL), {row}")
     assert _typed_rows(hsession) == before
+
+
+def _mk_arrays(hsession):
+    hsession.sql("""CREATE TABLE av (k INT, s STRING, ef ARRAY<FLOAT>,
+                    ed ARRAY<DOUBLE>) TBLPROPERTIES('keyCols'='k')""")
+
+
+def test_insert_values_null_into_array_columns(hsession):
+    """A string has no cast to ARRAY: the batch keeps the array
+    columns' types, so NULL inserts."""
+    _mk_arrays(hsession)
+    hsession.sql("INSERT INTO av VALUES (1, 'a', NULL, NULL), "
+                 "(2, NULL, NULL, NULL)")
+    assert [tuple(r) for r in hsession.sql(
+        "SELECT k, s, ef, ed FROM av ORDER BY k").collect()] == [
+        (1, "a", None, None), (2, None, None, None)]
+
+
+@pytest.mark.parametrize("row, col", [
+    ("(2, 'b', array(1.0, 2.0), NULL)", "ef"),
+    ("(2, 'b', NULL, '[1.0]')", "ed"),
+], ids=["float-array", "double-array-string"])
+def test_insert_values_array_value_rejected_before_staging(
+        hsession, catalog, row, col):
+    _mk_arrays(hsession)
+    hsession.sql("INSERT INTO av VALUES (1, 'a', NULL, NULL)")
+    tbl = catalog.get_table("av")
+    staged = sorted(os.listdir(tbl.data_dir))
+    with pytest.raises(ValueError, match=f"ARRAY column {col} "):
+        hsession.sql(f"INSERT INTO av VALUES (3, 'c', NULL, NULL), {row}")
+    after = catalog.get_table("av")
+    assert after.version == tbl.version and after.files == tbl.files
+    assert sorted(os.listdir(tbl.data_dir)) == staged
+    assert [r.k for r in hsession.sql("SELECT k FROM av").collect()] == [1]
 
 
 def _mk_files(hsession):

@@ -50,13 +50,36 @@ def test_point_query_on_full_key(store_sales):
     assert abs(r["ss_list_price"] - 51.26) < 1e-5
 
 
-def test_point_query_pushdown_visible(store_sales):
+def test_point_query_pushdown_visible(store_sales, monkeypatch):
+    """Above the point-get bound the point query is a parquet scan with
+    the key equalities pushed to it. (Below it, the rows are read on
+    the driver: see test_point_query_is_point_get.)"""
+    from heracles_spark import pruning
+
+    monkeypatch.setattr(pruning, "LOCAL_SCAN_ROWS", 0)
     df = store_sales.sql(
         "SELECT ss_quantity FROM store_sales "
         "WHERE ss_item_sk = 2744 AND ss_ticket_number = 1")
+    assert store_sales.last_select_route["scan"] == "spark"
     pf = pushed_filters(df)
     assert any("EqualTo(ss_item_sk,2744)" in f for f in pf)
     assert any("EqualTo(ss_ticket_number,1)" in f for f in pf)
+
+
+def test_point_query_is_point_get(store_sales):
+    """≙ the reference's point-get conversion (HBaseSQLReaderRDD.scala:
+    276-328): a full-key point on a small table reads its row on the
+    driver and plans as a local table scan, no parquet scan."""
+    from heracles_spark.plans import plan_node_names
+
+    df = store_sales.sql(
+        "SELECT ss_quantity FROM store_sales "
+        "WHERE ss_item_sk = 2744 AND ss_ticket_number = 1")
+    assert store_sales.last_select_route["scan"] == "local"
+    assert store_sales.last_select_route["local_rows"] == 1
+    nodes = plan_node_names(df._jdf.queryExecution().executedPlan())
+    assert "LocalTableScanExec" in nodes and "FileSourceScanExec" not in nodes
+    assert [r.ss_quantity for r in df.collect()] == [25]
 
 
 def test_is_null_matrix(store_sales):
