@@ -82,7 +82,11 @@ def build(values: Iterable[Any]) -> dict[str, Any] | None:
 
 def may_contain(bloom: dict[str, Any], value: Any) -> bool:
     """MAY/NO membership. False positives possible (~1%), false
-    negatives impossible — a NO is safe to prune on."""
+    negatives impossible — a NO is safe to prune on. A ``float`` probe
+    is always MAY: ``build``'s set keeps one of -0.0 and 0.0 (equal to
+    Python and to Spark's comparison), whose ``str`` forms differ."""
+    if isinstance(value, float):
+        return True
     m, k = bloom["m"], bloom["k"]
     bits = base64.b64decode(bloom["b64"])
     h1, h2 = _h2(value)

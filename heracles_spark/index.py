@@ -43,7 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from heracles_spark.catalog import HeraclesCatalog, local_frame
-from heracles_spark.pruning import prune_files, scan, to_nnf, to_sql
+from heracles_spark.pruning import (pred_columns, prune_files, scan, to_nnf,
+                                    to_sql)
 
 # Max pointer values collected driver-side before falling back to a
 # direct scan (bounds driver memory like a broadcast threshold).
@@ -312,13 +313,8 @@ def _mentions_isnull(pred: tuple) -> bool:
 
 
 def _pred_col(pred: tuple) -> str:
-    op = pred[0].lower()
-    if op in ("and", "or"):
-        cols = {_pred_col(p) for p in pred[1:]}
-        if len(cols) != 1:
-            raise ValueError(
-                f"indexed_lookup needs a single-column predicate, got {cols}")
-        return cols.pop()
-    if op == "not":
-        return _pred_col(pred[1])
-    return pred[1]
+    cols = pred_columns(pred)
+    if len(cols) != 1:
+        raise ValueError(
+            f"indexed_lookup needs a single-column predicate, got {cols}")
+    return cols.pop()

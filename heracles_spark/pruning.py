@@ -38,33 +38,37 @@ Predicate AST (tuples, nestable):
     (">", col, v) (">=", col, v)
     ("in", col, [v...])   ("between", col, lo, hi)
     ("isnull", col)       ("isnotnull", col)
+
+``parse_where`` is the one compiler from WHERE text to this AST (the
+SQL routers and UPDATE/DELETE all use it; ``to_sql`` is its inverse).
+Its literal rule makes each value compare with the file stats, and hash
+for the bloom probe, the way Spark compares the literal with the
+column: an integral column takes a numeric literal without exponent
+whose exact value is integral, as an ``int`` (``5.0`` → 5); a float or
+double column takes any numeric literal, as a ``float``; a string
+column takes a string literal; a date column takes a canonical
+``'YYYY-MM-DD'`` string. Any other literal — another type, or a column
+of another type (timestamp, boolean, decimal, array) — does not
+compile, so it never prunes. ``IS [NOT] NULL`` compiles on any column.
 """
 
 from __future__ import annotations
 
+import datetime
 import functools
+import math
+import re
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from heracles_spark import sqltext
 from heracles_spark.catalog import (HeraclesCatalog, KeyTable, local_frame,
                                     recorded_rows)
-from heracles_spark.sqltext import quote
 
 MAY, NO = True, False
 
-# Audit record of the most recent ``scan`` call's pruning outcome
-# ({files_read, files_total, scan[, local_rows]}) — consumers (the SQL
-# router's last_select_route) read it instead of re-running
-# prune_files, so a routed statement prunes exactly ONCE (round-10
-# judge ask #5: two O(files) driver passes double route latency at
-# 1e5+ file counts).
-# Concurrency (round-11 advisor fix): rebound to a FRESH dict per scan
-# (one atomic store under the GIL), never mutated in place — a reader
-# in another thread sees a complete previous record, never a
-# half-cleared one. Callers that must not race at all pass
-# ``stats_out`` and read their own private record.
-LAST_SCAN_STATS: dict[str, Any] = {}
 # Monotone call counter, test-visible: pytest pins one prune_files
 # call per routed statement.
 PRUNE_CALLS = 0
@@ -254,8 +258,168 @@ def prune_files(files: list[dict[str, Any]], pred: tuple | None,
             and _bloom.may_match(pred, f.get("bloom", {}))]
 
 
+_INTEGRAL = ("tinyint", "byte", "smallint", "short", "int", "integer",
+             "bigint", "long")
+_FLOATING = ("float", "real", "double")
+# A numeric literal as Spark's lexer reads one; a suffix (5L, 5BD) or a
+# following identifier character makes it no match.
+_NUMBER = re.compile(r"[+-]?(?:\d+\.?\d*|\.\d+)([eE][+-]?\d+)?(?![\w.])")
+_ISO_DATE = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
+_CMP_OPS = {"=": "=", "==": "=", "!=": "!=", "<>": "!=", "<": "<",
+            "<=": "<=", ">": ">", ">=": ">="}
+
+
+def _typed(sql_type: str, value: str, is_string: bool):
+    """A string literal's value, or a numeric literal's text, as the
+    column's stats value it compares with (the module's literal rule);
+    ValueError when the literal does not fit the column."""
+    base = sql_type.lower().split("(")[0]
+    if is_string and base in ("string", "varchar"):
+        return value
+    if is_string and base == "date" and _ISO_DATE.fullmatch(value):
+        datetime.date.fromisoformat(value)       # a real day, or raise
+        return value
+    if not is_string and base in _INTEGRAL and "e" not in value.lower():
+        d = Decimal(value)
+        if d == d.to_integral_value():
+            return int(d)
+    if not is_string and base in _FLOATING and math.isfinite(float(value)):
+        return float(value)
+    raise ValueError(f"literal does not fit a {sql_type} column")
+
+
+def parse_where(text: str, types: dict[str, str],
+                quals: "set[str] | None") -> "tuple | None":
+    """Compile WHERE text into the pruning AST, or None when any part of
+    it falls outside this grammar (the only code that does)::
+
+        expr   := term (OR term)*
+        term   := factor (AND factor)*
+        factor := '(' expr ')' | atom
+        atom   := col (= | == | != | <> | < | <= | > | >=) lit
+                | col BETWEEN lit AND lit | col IN '(' lit, ... ')'
+                | col IS [NOT] NULL
+
+    ``types`` maps each column to its SQL type; a column resolves
+    case-insensitively and may carry a qualifier named in ``quals``
+    (lower case). A literal that does not fit its column (``_typed``)
+    does not compile. ≙ the predicate tree the reference's
+    critical-point collector walks (HBaseCriticalPoint.scala:410-481)."""
+    cmap = {c.lower(): c for c in types}
+    pos = 0
+
+    def _at():
+        return toks[pos] if pos < len(toks) else None
+
+    def _take(*words: str) -> bool:
+        nonlocal pos
+        got = toks[pos:pos + len(words)]
+        if len(got) < len(words) or any(
+                t.text.upper() != w or (t.kind != "word" and w.isalpha())
+                for t, w in zip(got, words)):
+            return False
+        pos += len(words)
+        return True
+
+    def _expect(*words: str) -> None:
+        if not _take(*words):
+            raise ValueError(f"expected {' '.join(words)}")
+
+    def _name() -> str:
+        nonlocal pos
+        t = _at()
+        if t is None or t.kind not in ("word", "ident"):
+            raise ValueError("expected a column")
+        pos += 1
+        return (t.text[1:-1].replace("``", "`") if t.kind == "ident"
+                else t.text).lower()
+
+    def _column() -> str:
+        name = _name()
+        if _take("."):
+            if name not in (quals or ()):
+                raise ValueError(f"unknown qualifier {name!r}")
+            name = _name()
+        if name not in cmap:
+            raise ValueError(f"no such column {name!r}")
+        return cmap[name]
+
+    def _literal(col: str):
+        nonlocal pos
+        parts = []
+        while _at() is not None and _at().kind == "str":
+            parts.append(sqltext.string_value(_at().text))
+            pos += 1
+        if parts:
+            return _typed(types[col], "".join(parts), True)
+        m = _at() and _NUMBER.match(text, _at().start)
+        if not m:
+            raise ValueError("expected a literal")
+        while pos < len(toks) and toks[pos].start < m.end():
+            pos += 1
+        return _typed(types[col], m.group(), False)
+
+    def _atom():
+        nonlocal pos
+        col = _column()
+        if _take("IS", "NULL"):
+            return ("isnull", col)
+        if _take("IS", "NOT", "NULL"):
+            return ("isnotnull", col)
+        if _take("BETWEEN"):
+            lo = _literal(col)
+            _expect("AND")
+            return ("between", col, lo, _literal(col))
+        if _take("IN", "("):
+            vals = [_literal(col)]
+            while _take(","):
+                vals.append(_literal(col))
+            _expect(")")
+            return ("in", col, vals)
+        op = ""
+        while _at() is not None and _at().kind == "op" \
+                and _at().text in "<>=!" \
+                and (not op or _at().start == toks[pos - 1].end):
+            op += _at().text
+            pos += 1
+        if op not in _CMP_OPS:
+            raise ValueError(f"not a comparison: {op!r}")
+        return (_CMP_OPS[op], col, _literal(col))
+
+    def _chain(word: str, part):
+        node = [part()]
+        while _take(word):
+            node.append(part())
+        return node[0] if len(node) == 1 else (word.lower(), *node)
+
+    def _factor():
+        if not _take("("):
+            return _atom()
+        node = _expr()
+        _expect(")")
+        return node
+
+    def _expr():
+        return _chain("OR", lambda: _chain("AND", _factor))
+
+    try:
+        toks = sqltext.lex(text)
+        node = _expr()
+    except (ValueError, RecursionError):       # RecursionError: deep parens
+        return None
+    return node if pos == len(toks) else None
+
+
+def pred_columns(pred: tuple) -> set[str]:
+    """Every column a pruning AST tests."""
+    if pred[0].lower() in ("and", "or", "not"):
+        return set().union(*map(pred_columns, pred[1:]))
+    return {pred[1]}
+
+
 def to_sql(pred: tuple) -> str:
-    """Render the AST as a SQL condition for the residual scan filter."""
+    """Render the AST as a SQL condition for the residual scan filter —
+    the inverse of ``parse_where``."""
     op = pred[0].lower()
     if op in ("and", "or"):
         return "(" + f" {op.upper()} ".join(to_sql(p) for p in pred[1:]) + ")"
@@ -275,7 +439,7 @@ def to_sql(pred: tuple) -> str:
 
 def _lit(v: Any) -> str:
     if isinstance(v, str):
-        return quote(v)
+        return sqltext.quote(v)
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
     return str(v)
@@ -455,16 +619,13 @@ def scan(spark: SparkSession, catalog: HeraclesCatalog, table: str,
 
     ``stats_out`` (optional) receives this call's own pruning record —
     ``files_read``, ``files_total``, ``scan`` ("local" or "spark") and,
-    for a local scan, ``local_rows`` — the race-free way for a caller
-    to consume the outcome; the module global only mirrors the most
-    recent call.
+    for a local scan, ``local_rows``.
 
     ``residual=False`` returns the pruned files WITHOUT the row filter
     — for callers that re-apply the original predicate text themselves
     (the SQL agg router swaps the table ref for this relation and
     keeps the statement's own WHERE, so the filter runs exactly once);
     a local scan still drops rows whose keys cannot match."""
-    global LAST_SCAN_STATS
     tbl = catalog.get_table(table)
     keep = prune_files(tbl.files, pred, tbl.key_cols)
     stats: dict[str, Any] = {"files_read": len(keep),
@@ -479,7 +640,6 @@ def scan(spark: SparkSession, catalog: HeraclesCatalog, table: str,
         df = local_frame(spark, rows, tbl.schema())
     if stats_out is not None:
         stats_out.update(stats)
-    LAST_SCAN_STATS = stats
     if pred is not None and residual:
         df = df.where(to_sql(pred))
     return df

@@ -80,6 +80,7 @@ from heracles_spark import sqltext
 from heracles_spark.sqltext import split_top as _split_top
 from heracles_spark.sqltext import split_top_and as _split_top_and
 from heracles_spark.catalog import local_frame, recorded_rows
+from heracles_spark.pruning import parse_where, pred_columns, to_sql
 
 _CLONE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?P<dst>[\w.]+)\s+(?:SHALLOW\s+)?CLONE\s+"
@@ -1499,18 +1500,6 @@ _SIMPLE_SELECT = re.compile(
     r"(?:\s+ORDER\s+BY\s+(?P<ocol>\w+)(?:\s+(?P<odir>ASC|DESC))?)?"
     r"(?:\s+LIMIT\s+(?P<limit>\d+))?\s*;?\s*$",
     re.IGNORECASE)
-_LIT = rf"(?:-?\d+(?:\.\d+)?|{sqltext.STRING})"
-_SIMPLE_PRED = re.compile(
-    rf"(?P<col>\w+(?:\.\w+)?)\s*(?:(?P<op><=|>=|=|<|>)\s*(?P<val>{_LIT})"
-    rf"|BETWEEN\s+(?P<lo>{_LIT})\s+AND\s+(?P<hi>{_LIT})"
-    rf"|IN\s*\((?P<vals>\s*{_LIT}(?:\s*,\s*{_LIT})*\s*)\))",
-    re.IGNORECASE)
-# No 'decimal': a routed residual would compare against a DOUBLE
-# literal while the unrouted path compares decimals exactly — rows
-# could differ at >15 significant digits (round-9 review fix).
-_ROUTE_TYPES = ("int", "integer", "bigint", "long", "smallint",
-                "tinyint", "float", "double", "string",
-                "varchar", "char")
 # A CTE may declare a column list — ``WITH c(a, b) AS (...)`` — and
 # such a name shadows catalog tables exactly like the bare form
 # (round-10 advisor fix: the hint guard must see it). Group 1 is the
@@ -1576,124 +1565,6 @@ def _broadcast_threshold(session) -> int:
         return planner.DEFAULT_BROADCAST_BYTES
 
 
-def _lit_value(raw: str, sql_type: str):
-    raw = raw.strip()
-    text = sqltext.literal_value(raw)
-    if text is not None:
-        return text
-    base = sql_type.lower().split("(")[0]
-    if base in ("float", "double", "decimal") or "." in raw:
-        return float(raw)
-    return int(raw)
-
-
-_OR_KW = re.compile(r"OR\b", re.IGNORECASE)
-_AND_KW = re.compile(r"AND\b", re.IGNORECASE)
-
-
-def _parse_route_pred(text: str, cmap: dict, types: dict,
-                      quals: "set[str] | None" = None):
-    """Recursive-descent parse of a routable WHERE clause into the
-    pruning AST: AND/OR/parenthesis combinations over simple typed
-    atoms (``col op lit`` | ``BETWEEN`` | ``IN``; ``quals`` names the
-    table qualifiers a ``q.col`` atom may carry). Grammar::
-
-        expr   := term (OR term)*
-        term   := factor (AND factor)*
-        factor := '(' expr ')' | atom
-
-    Returns ``(ast, cols_referenced, n_atoms)`` or None when any part
-    falls outside the routable shape (unknown column, unroutable type,
-    unparsed trailing text) — the caller then takes the normal Spark
-    path. BETWEEN's own AND is consumed by the atom pattern, never a
-    separator. ≙ the predicate tree the reference's critical-point
-    collector walks (HBaseCriticalPoint.scala:410-481), OR shapes
-    included."""
-    n = len(text)
-    cols: list = []
-    atoms = [0]
-
-    def _ws(p: int) -> int:
-        while p < n and text[p].isspace():
-            p += 1
-        return p
-
-    def _factor(p: int):
-        p = _ws(p)
-        if p < n and text[p] == "(":
-            node, q = _expr(p + 1)
-            if node is None:
-                return None, p
-            q = _ws(q)
-            if q >= n or text[q] != ")":
-                return None, p
-            return node, q + 1
-        pm = _SIMPLE_PRED.match(text, p)
-        if pm is None:
-            return None, p
-        cname = pm.group("col")
-        if "." in cname:
-            q, cname = cname.split(".", 1)
-            if quals is None or q.lower() not in quals:
-                raise ValueError("unroutable column")
-        col = cmap.get(cname.lower())
-        if col is None or types[col].lower().split("(")[0] \
-                not in _ROUTE_TYPES:
-            raise ValueError("unroutable column")
-        if pm.group("op"):
-            node = (pm.group("op"), col,
-                    _lit_value(pm.group("val"), types[col]))
-        elif pm.group("lo"):
-            node = ("between", col,
-                    _lit_value(pm.group("lo"), types[col]),
-                    _lit_value(pm.group("hi"), types[col]))
-        else:
-            node = ("in", col,
-                    [_lit_value(v, types[col])
-                     for v in re.findall(_LIT, pm.group("vals"))])
-        cols.append(col)
-        atoms[0] += 1
-        return node, pm.end()
-
-    def _term(p: int):
-        node, p = _factor(p)
-        if node is None:
-            return None, p
-        while True:
-            q = _ws(p)
-            kw = _AND_KW.match(text, q)
-            if not kw:
-                return node, p
-            nxt, r = _factor(kw.end())
-            if nxt is None:
-                return None, p
-            node = ("and", node, nxt)
-            p = r
-
-    def _expr(p: int):
-        node, p = _term(p)
-        if node is None:
-            return None, p
-        while True:
-            q = _ws(p)
-            kw = _OR_KW.match(text, q)
-            if not kw:
-                return node, p
-            nxt, r = _term(kw.end())
-            if nxt is None:
-                return None, p
-            node = ("or", node, nxt)
-            p = r
-
-    try:
-        node, p = _expr(0)
-    except ValueError:
-        return None
-    if node is None or _ws(p) != n:
-        return None
-    return node, cols, atoms[0]
-
-
 def _route_pruned_select(session, statement: str):
     """Access-path selection for the dispatched SELECT surface
     (round-9): a single-table statement whose WHERE is ONE simple
@@ -1740,11 +1611,9 @@ def _route_pruned_select(session, statement: str):
     types = dict(tbl.columns)
     cmap = {c.lower(): c for c in types}
 
-    parsed = _parse_route_pred(m.group("pred").strip(), cmap, types)
-    if parsed is None:
+    pred = parse_where(m.group("pred"), types, None)
+    if pred is None:
         return _decline("unroutable-predicate")
-    pred, pcols, n_atoms = parsed
-    col = pcols[0]
     cols = None
     if m.group("cols").strip() != "*":
         cols = [cmap.get(c.strip().lower())
@@ -1774,7 +1643,7 @@ def _route_pruned_select(session, statement: str):
     from heracles_spark import index as index_mod
     from heracles_spark import pruning
 
-    if any(c in tbl.key_cols for c in pcols):
+    if pred_columns(pred) & set(tbl.key_cols):
         # Any key atom makes the whole AST prunable: MAY-match file
         # pruning is sound over and/or/not trees, non-key atoms ride
         # along as residual (and bloom probes where declared). The
@@ -1911,7 +1780,7 @@ def _route_vector_topk(session, statement: str):
     probed cells read via partition pruning, exact rerank inside them
     (``vectorindex.vector_index_topk``).
 
-    * WHERE — any predicate ``_parse_route_pred`` accepts (AND/OR
+    * WHERE — any predicate ``pruning.parse_where`` compiles (AND/OR
       trees of typed atoms) is applied INSIDE the probed cells before
       the rank (the IVF store carries every base column, so the filter
       is a codegen'd pre-filter, not a post-rank over-fetch); rows
@@ -1983,10 +1852,9 @@ def _route_vector_topk(session, statement: str):
     k = int(m.group("k"))
     pred = None
     if m.group("pred"):
-        parsed = _parse_route_pred(m.group("pred").strip(), cmap, types)
-        if parsed is None:
+        pred = parse_where(m.group("pred"), types, None)
+        if pred is None:
             return _decline("unroutable-predicate")
-        pred = parsed[0]
     # FILTERED queries always join back, even for a key-only
     # projection (round-11 advisor fix, medium): the vector store is
     # stale between refreshes, so a store-side WHERE alone could
@@ -2188,14 +2056,12 @@ def _route_metadata_count_range(session, statement: str):
         return None
     tbl = catalog.get_table(name)
     types = dict(tbl.columns)
-    cmap = {c.lower(): c for c in types}
     qual = (m.group("talias")
             or m.group("name").split(".")[-1]).lower()
-    parsed = _parse_route_pred(m.group("pred").strip(), cmap, types,
-                               quals={qual})
-    if parsed is None:
+    pred = parse_where(m.group("pred"), types, {qual})
+    if pred is None:
         return None               # later routers record their reasons
-    pred, pcols, _n = parsed
+    pcols = pred_columns(pred)
     # A MUST-decidable atom needs stats: a key column always, or
     # (round-13) any column the extended footer harvest recorded a
     # box + null count for — checked per file by must_match itself;
@@ -2317,14 +2183,11 @@ def _route_pruned_general(session, statement: str):
 
     tbl = catalog.get_table(name)
     types = dict(tbl.columns)
-    cmap = {c.lower(): c for c in types}
     qual = (m.group("alias") or m.group("name").split(".")[-1]).lower()
-    parsed = _parse_route_pred(m.group("pred").strip(), cmap, types,
-                               quals={qual})
-    if parsed is None:
+    pred = parse_where(m.group("pred"), types, {qual})
+    if pred is None:
         return _decline("unroutable-predicate")
-    pred, pcols, _n = parsed
-    if not any(c in tbl.key_cols for c in pcols):
+    if not pred_columns(pred) & set(tbl.key_cols):
         return _decline("no-access-path:no-key-atom")
     if _view_is_shadowed(session, name):
         return _decline("shadowed-view")
@@ -2655,14 +2518,13 @@ def _prune_main_refs(session, statement: str,
 
     OUTER-JOIN soundness: swapping a reference for a pruned relation
     is a filter pushdown below whatever join consumes it. That is
-    valid below LEFT/RIGHT/FULL joins ONLY because every atom
-    ``_parse_route_pred`` can produce (comparison/BETWEEN/IN against
-    literals) is NULL-REJECTING on its column — a row pruning could
+    valid below LEFT/RIGHT/FULL joins ONLY because every conjunct it
+    prunes on is NULL-REJECTING on its columns (``_null_rejecting_pred``:
+    comparison/BETWEEN/IN atoms against literals) — a row pruning could
     remove can never satisfy the statement's WHERE, and a NULL-
     extended row produced by the narrower build side is dropped by
-    the same WHERE (UNKNOWN). An IS NULL atom would break this;
-    ``_null_rejecting_pred`` guards the invariant in depth should the
-    routable grammar ever widen.
+    the same WHERE (UNKNOWN). An IS [NOT] NULL conjunct, which
+    ``parse_where`` compiles, is not pruned on.
 
     Conservative guards (decline = normal Spark path, never an
     error): no top-level set operations (each branch has its own
@@ -2777,9 +2639,8 @@ def _prune_main_refs(session, statement: str,
     for conj in conjs:
         owners = []
         for idx, (r, qual, resolved) in enumerate(cat_refs):
-            types, cmap = schemas[idx]
-            p = _parse_route_pred(conj, cmap, types, quals={qual})
-            if p is not None:
+            p = parse_where(conj, schemas[idx][0], {qual})
+            if p is not None and _null_rejecting_pred(p):
                 owners.append((idx, p))
         if len(owners) == 1:
             idx, p = owners[0]
@@ -2802,8 +2663,7 @@ def _prune_main_refs(session, statement: str,
             plist = per_ref.get(src)
             if not plist:
                 continue
-            src_pred = plist[0][0] if len(plist) == 1 \
-                else ("and", *[p[0] for p in plist])
+            src_pred = plist[0] if len(plist) == 1 else ("and", *plist)
             if not _null_rejecting_pred(src_pred):
                 continue
             stbl = catalog.get_table(cat_refs[src][2])
@@ -2821,11 +2681,11 @@ def _prune_main_refs(session, statement: str,
         r, qual, resolved = cat_refs[idx]
         tbl = catalog.get_table(resolved)
         plist = per_ref.get(idx, [])
-        preds = [p[0] for p in plist] + derived.get(idx, [])
+        preds = plist + derived.get(idx, [])
         pred = preds[0] if len(preds) == 1 else ("and", *preds)
         if not _null_rejecting_pred(pred):
             continue             # outer-join soundness (see docstring)
-        pcols = {c for p in plist for c in p[1]}
+        pcols = set().union(*map(pred_columns, plist))
         blooms = set(_bloom.bloom_cols(tbl.properties))
         keyed = bool(pcols & set(tbl.key_cols) or pcols & blooms)
         # Round-13: the extended footer harvest records min/max boxes
@@ -3233,21 +3093,17 @@ def _route_vector_topk_lateral(session, statement: str):
             return _decline("lateral:unknown-score-column")
         out_items.append((col, om.group(3) or om.group(2)))
     # Filtered form (round-12 judge ask #3): a WHERE inside the
-    # lateral subquery — any predicate _parse_route_pred accepts over
+    # lateral subquery — any predicate parse_where compiles over
     # the inner table's columns — plumbs into the batch probe's
     # pred_sql; winners are re-checked against FRESH base rows (store
     # staleness — the same contract as the single-query route).
     pred_sql = None
     if m.group("pred"):
-        inner_types = dict(tbl.columns)
-        parsed = _parse_route_pred(
-            m.group("pred").strip(), ttypes, inner_types,
-            quals={m.group("name").split(".")[-1].lower()})
-        if parsed is None:
+        pred = parse_where(m.group("pred"), dict(tbl.columns),
+                           {m.group("name").split(".")[-1].lower()})
+        if pred is None:
             return _decline("lateral:unroutable-predicate")
-        from heracles_spark import pruning
-
-        pred_sql = pruning.to_sql(parsed[0])
+        pred_sql = to_sql(pred)
     out_qid = m.group("qida") or qid[0]
     out_names = [out_qid.lower()] + [a.lower() for _, a in out_items]
     if len(set(out_names)) != len(out_names):

@@ -45,8 +45,6 @@ _ESCAPE = {q: re.compile(
     re.DOTALL) for q in "'\""}
 _ESCAPED_CHAR = {"0": "\0", "b": "\b", "n": "\n", "r": "\r", "t": "\t",
                  "Z": "\x1a", "%": "\\%", "_": "\\_"}
-# A single-quoted literal as a regex fragment, for statement patterns.
-STRING = r"(?:'(?:[^'\\]|\\.|'')*')"
 
 
 class Tok(NamedTuple):

@@ -53,6 +53,15 @@ def test_bloom_ast_semantics():
     assert bloom.may_match(("<", "v", "a"), b)                # range: MAY
 
 
+def test_bloom_float_probe_is_may():
+    # The set keeps -0.0 only; a probe for 0.0 (equal in Spark's
+    # comparison) must not read NO.
+    b = {"v": bloom.build([-0.0, 0.0, 2.5])}
+    assert bloom.may_match(("=", "v", 0.0), b)
+    assert bloom.may_match(("=", "v", -0.0), b)
+    assert bloom.may_match(("in", "v", [0.0, 7.0]), b)
+
+
 # -- end-to-end through writer + pruner -----------------------------------
 
 @pytest.fixture()

@@ -37,39 +37,50 @@ def _delete(hsession, where=""):
 
 # -- WHERE → pruning AST compiler -----------------------------------------
 
+_T = {"k": "int", "name": "string", "v": "double"}
+
+
 def test_where_pred_conjuncts():
-    assert where_to_pruning_pred("k = 3") == ("=", "k", 3)
-    assert where_to_pruning_pred("k = 3 AND v > 1.5") == \
+    assert where_to_pruning_pred("k = 3", _T) == ("=", "k", 3)
+    assert where_to_pruning_pred("k = 3 AND v > 1.5", _T) == \
         ("and", ("=", "k", 3), (">", "v", 1.5))
-    assert where_to_pruning_pred("k BETWEEN 2 AND 5 AND name = 'x'") == \
+    assert where_to_pruning_pred("k BETWEEN 2 AND 5 AND name = 'x'",
+                                 _T) == \
         ("and", ("between", "k", 2, 5), ("=", "name", "x"))
-    assert where_to_pruning_pred("k IN (1, 2, 3)") == ("in", "k", [1, 2, 3])
-    assert where_to_pruning_pred("name IS NOT NULL") == ("isnotnull", "name")
-    assert where_to_pruning_pred("name <> 'it''s'") == ("!=", "name", "it's")
+    assert where_to_pruning_pred("k IN (1, 2, 3)", _T) == \
+        ("in", "k", [1, 2, 3])
+    assert where_to_pruning_pred("name IS NOT NULL", _T) == \
+        ("isnotnull", "name")
+    assert where_to_pruning_pred("name <> 'it''s'", _T) == \
+        ("!=", "name", "it's")
 
 
 def test_where_pred_conservative_bailouts():
-    # OR / NOT at top level: no pruning (full rewrite), never wrong rows.
-    assert where_to_pruning_pred("k = 1 OR k = 9") is None
-    assert where_to_pruning_pred("NOT (k = 1)") is None
-    assert where_to_pruning_pred(None) is None
+    # A top-level OR compiles as a whole; NOT never compiles (no
+    # pruning, full rewrite), never wrong rows.
+    assert where_to_pruning_pred("k = 1 OR k = 9", _T) == \
+        ("or", ("=", "k", 1), ("=", "k", 9))
+    assert where_to_pruning_pred("NOT (k = 1)", _T) is None
+    assert where_to_pruning_pred(None, _T) is None
     # Unparseable conjunct is dropped; parseable one still prunes.
-    assert where_to_pruning_pred("length(name) > 2 AND k = 7") == ("=", "k", 7)
+    assert where_to_pruning_pred("length(name) > 2 AND k = 7", _T) == \
+        ("=", "k", 7)
     # String containing ' AND ' must not be split inside the literal.
-    assert where_to_pruning_pred("name = 'x AND y'") == ("=", "name", "x AND y")
+    assert where_to_pruning_pred("name = 'x AND y'", _T) == \
+        ("=", "name", "x AND y")
 
 
-def test_where_pred_temporal_literal_normalized_to_stats_encoding():
-    # File stats store timestamps as isoformat ('T' separator); the SQL
-    # literal form uses a space. Without normalization, lexicographic
-    # 'T' (0x54) vs ' ' (0x20) misorders same-day values.
+def test_where_pred_temporal_literals():
+    # Timestamp atoms never compile: the stats hold no INT96 box, and
+    # the bloom hashes values, not the SQL literal's text.
     assert where_to_pruning_pred(
-        "ts < '2024-06-01 12:00:00'", {"ts": "timestamp"}) == \
-        ("<", "ts", "2024-06-01T12:00:00")
-    # Date literals have no separator to rewrite.
+        "ts < '2024-06-01 12:00:00'", {"ts": "timestamp"}) is None
+    # A canonical date literal compares as a date on the ISO stats.
     assert where_to_pruning_pred("d = '2024-06-01'", {"d": "date"}) == \
         ("=", "d", "2024-06-01")
-    # Non-string literal on a temporal column: conjunct dropped (sound).
+    # A non-canonical one ('2024-6-1' sorts above every ISO box) or a
+    # non-string literal does not compile (sound).
+    assert where_to_pruning_pred("d = '2024-6-1'", {"d": "date"}) is None
     assert where_to_pruning_pred("ts < 42", {"ts": "timestamp"}) is None
 
 
@@ -156,6 +167,20 @@ def test_update_unknown_column_rejected(hsession):
         hsession.sql("UPDATE t SET nope = 1")
 
 
+def test_update_set_target_resolves_case_insensitively(hsession):
+    _mk(hsession)
+    hsession.sql("UPDATE t SET V = 0, Name = 'z' WHERE k = 3")
+    assert _rows(hsession) == [(1, "a", 10), (2, "b", 20), (3, "z", 0),
+                               (4, "d", None)]
+
+
+def test_update_key_column_rejected_in_any_case(hsession):
+    _mk(hsession)
+    with pytest.raises(ValueError, match="key column"):
+        hsession.sql("UPDATE t SET K = 9 WHERE k = 1")
+    assert _rows(hsession)[0] == (1, "a", 10)
+
+
 def test_update_where_keyword_inside_string_literal(hsession):
     _mk(hsession, rows="(1,'a',10),(2,'b',20)")
     # The WHERE split must scan at quote depth 0 — 'a WHERE b' is a value.
@@ -229,12 +254,45 @@ def test_update_prunes_rewrite_set(hsession, spark, catalog):
 def test_update_unprunable_predicate_full_rewrite_still_correct(
         hsession, spark, catalog):
     _mk_wide(hsession, spark, catalog)
-    hsession.sql("UPDATE w SET v = -5 WHERE k = 3 OR k = 790")
+    hsession.sql("UPDATE w SET v = -5 WHERE k = 3 OR k + 0 = 790")
     st = dml.LAST_DML_STATS
-    assert st["files_rewritten"] == 8      # OR disables pruning
+    assert st["files_rewritten"] == 8      # an OR arm that never compiles
     assert st["rows_affected"] == 2
     n = hsession.sql("SELECT COUNT(*) AS n FROM w WHERE v = -5").collect()[0].n
     assert n == 2
+
+
+@pytest.mark.parametrize("where, hit", [
+    ("K = 4", lambda k: k == 4),
+    ("k < 5 OR k > 95", lambda k: k < 5 or k > 95),
+    ("(k = 7)", lambda k: k == 7),
+], ids=["column-case", "or", "parenthesized"])
+@pytest.mark.parametrize("stmt", ["delete", "update"])
+def test_dml_prunes_case_or_and_parens_match_model(
+        hsession, spark, catalog, stmt, where, hit):
+    """A column named in another case, an OR and a parenthesized atom
+    compile like the SELECT routers' WHERE: the rewrite touches only
+    the files that may hold a hit and leaves the model's rows."""
+    from heracles_spark import writer
+    hsession.sql("""CREATE TABLE h (k INT, v INT)
+                    TBLPROPERTIES('keyCols'='k')""")
+    writer.write_key_organized(
+        spark, catalog, "h",
+        spark.range(100).selectExpr("CAST(id AS INT) k",
+                                    "CAST(id AS INT) v"), n_buckets=8)
+    catalog.read_table(spark, "h").createOrReplaceTempView(
+        catalog.view_name("h"))
+    if stmt == "delete":
+        hsession.sql(f"DELETE FROM h WHERE {where}")
+        want = [(k, k) for k in range(100) if not hit(k)]
+    else:
+        hsession.sql(f"UPDATE h SET v = -1 WHERE {where}")
+        want = [(k, -1 if hit(k) else k) for k in range(100)]
+    st = dml.LAST_DML_STATS
+    assert st["files_total"] == 8 and st["files_rewritten"] < 8
+    assert st["rows_affected"] == sum(map(hit, range(100)))
+    assert [tuple(r) for r in hsession.sql(
+        "SELECT k, v FROM h ORDER BY k").collect()] == want
 
 
 def test_dml_respects_time_travel(hsession, spark, catalog):
@@ -544,10 +602,11 @@ def test_delete_where_shapes_match_model(hsession, where, hit):
 
 
 def test_where_pred_drops_negated_conjuncts():
-    assert where_to_pruning_pred("NOT k = 2 AND k > 1") == (">", "k", 1)
-    assert where_to_pruning_pred("k NOT IN (1, 3) AND k < 4") == \
+    assert where_to_pruning_pred("NOT k = 2 AND k > 1", _T) == \
+        (">", "k", 1)
+    assert where_to_pruning_pred("k NOT IN (1, 3) AND k < 4", _T) == \
         ("<", "k", 4)
-    assert where_to_pruning_pred("k NOT BETWEEN 2 AND 3 AND k = 4") == \
-        ("=", "k", 4)
-    assert where_to_pruning_pred("k IN ('a,b', 'c')") == \
+    assert where_to_pruning_pred("k NOT BETWEEN 2 AND 3 AND k = 4",
+                                 _T) == ("=", "k", 4)
+    assert where_to_pruning_pred("k IN ('a,b', 'c')", {"k": "string"}) == \
         ("in", "k", ["a,b", "c"])
