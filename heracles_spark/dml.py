@@ -27,12 +27,27 @@ are kept as-is in the file index. A point DELETE against a 100 TB table
 costs O(touched files). A conjunct outside that grammar (NOT, a
 function, a literal that does not fit its column's type) is dropped:
 it prunes less, never changes semantics — the exact predicate is
-always re-applied row-level inside the rewrite. The rewrite is sized
-from the touched files' recorded row counts, and DELETE's
-``rows_affected`` is those rows minus the rows harvested from the files
-it wrote, so a DELETE reads the touched files once (the rewrite) and an
-UPDATE twice (its ``rows_affected`` count, then the rewrite). An index
-entry without a row count falls back to counting the rows.
+always re-applied row-level inside the rewrite.
+
+Point-put (≙ HBase ``Put``/``Delete`` of the touched rows; see
+heracles_spark.writer): when the touched files hold at most
+``pruning.LOCAL_SCAN_ROWS`` rows and ``pruning.read_local`` can read
+them, they are read on the driver and split by ``pruning.key_mask``
+into candidates and rows whose keys cannot satisfy the WHERE. Spark
+evaluates the WHERE and the SET over a ``LocalRelation`` of the
+candidates only (no job); the other rows are copied unchanged, and
+``writer.put_rows`` writes the result as one file. ``rows_affected``
+comes from the collected candidates. ``LAST_DML_STATS["write"]`` says
+which path ran: ``"local"``, ``"spark"``, or None when no file
+is touched.
+
+On the Spark path (larger touched sets, files ``read_local`` declines,
+tables with ``bloomCols``) the rewrite is sized from the touched files'
+recorded row counts, and DELETE's ``rows_affected`` is those rows minus
+the rows harvested from the files it wrote, so a DELETE reads the
+touched files once (the rewrite) and an UPDATE twice (its
+``rows_affected`` count, then the rewrite). An index entry without a
+row count falls back to counting the rows.
 """
 
 from __future__ import annotations
@@ -44,7 +59,8 @@ from pyspark.sql import functions as F
 
 from heracles_spark.catalog import (HeraclesCatalog, KeyTable, local_frame,
                                     recorded_rows)
-from heracles_spark.pruning import parse_where, prune_files
+from heracles_spark.pruning import (key_mask, parse_where, prune_files,
+                                    read_local, to_nnf)
 from heracles_spark.sqltext import split_top_and
 
 # Observability for tests / EXPLAIN-style introspection.
@@ -66,12 +82,13 @@ def where_to_pruning_pred(where: str | None,
 
 
 def _touched_and_kept(tbl: KeyTable, where: str | None):
+    """(pruning AST, files the WHERE may touch, files it cannot)."""
     pred = where_to_pruning_pred(where, dict(tbl.columns))
     if pred is None:
-        return list(tbl.files), []
+        return None, list(tbl.files), []
     touched = prune_files(tbl.files, pred, tbl.key_cols)
     tpaths = {f["path"] for f in touched}
-    return touched, [f for f in tbl.files if f["path"] not in tpaths]
+    return pred, touched, [f for f in tbl.files if f["path"] not in tpaths]
 
 
 def _read_files(spark: SparkSession, tbl: KeyTable, files: list[dict]):
@@ -81,6 +98,45 @@ def _read_files(spark: SparkSession, tbl: KeyTable, files: list[dict]):
             .parquet(*sorted(f["path"] for f in files)))
 
 
+def _local_split(tbl: KeyTable, touched: list[dict], pred: tuple | None):
+    """The touched rows read on the driver, as (candidates, rows whose
+    keys cannot satisfy ``pred``) Arrow tables, or None for the Spark
+    path (see the module docstring)."""
+    import pyarrow.compute as pc
+
+    from heracles_spark import writer
+
+    total = recorded_rows(touched)
+    if total is None or not writer.put_eligible(tbl, total):
+        return None
+    rows = read_local(tbl, touched, None)
+    if rows is None:
+        return None
+    mask = None if pred is None else key_mask(to_nnf(pred), rows,
+                                              tbl.key_cols)
+    if mask is None:
+        return rows, rows.slice(0, 0)
+    mask = pc.fill_null(mask, True)
+    return rows.filter(mask), rows.filter(pc.invert(mask))
+
+
+def _hit(where: str | None):
+    return (F.coalesce(F.expr(where).cast("boolean"), F.lit(False))
+            if where else F.lit(True))
+
+
+def _put(catalog: HeraclesCatalog, tbl: KeyTable, others, out,
+         kept: list[dict]) -> KeyTable:
+    """Commit ``others`` plus the Arrow rows ``out`` as one new file in
+    place of the touched files."""
+    import pyarrow as pa
+
+    from heracles_spark import writer
+
+    return writer.put_rows(catalog, tbl, pa.concat_tables([others, out]),
+                           kept, "merge-cow", tbl.version)
+
+
 def delete_from(spark: SparkSession, catalog: HeraclesCatalog, table: str,
                 where: str | None = None) -> KeyTable:
     """DELETE FROM table [WHERE pred] via file-level copy-on-write."""
@@ -88,14 +144,24 @@ def delete_from(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     from heracles_spark import writer
 
     tbl = catalog.get_table(table)
-    touched, kept = _touched_and_kept(tbl, where)
+    pred, touched, kept = _touched_and_kept(tbl, where)
+    stats = {"op": "delete", "files_total": len(tbl.files),
+             "files_rewritten": len(touched)}
     if not touched:
-        LAST_DML_STATS = {"op": "delete", "files_total": len(tbl.files),
-                          "files_rewritten": 0, "rows_affected": 0}
+        LAST_DML_STATS = {**stats, "write": None, "rows_affected": 0}
         return tbl
+    split = _local_split(tbl, touched, pred)
+    if split is not None:
+        cand, others = split
+        df = local_frame(spark, cand, tbl.schema()).where(~_hit(where))
+        writer.validate_constraints(df, tbl)
+        survivors = writer.collect_local(df, tbl.schema())
+        out = _put(catalog, tbl, others, survivors, kept)
+        LAST_DML_STATS = {**stats, "write": "local",
+                          "rows_affected": cand.num_rows - survivors.num_rows}
+        return out
     df = _read_files(spark, tbl, touched)
-    hit = (F.coalesce(F.expr(where).cast("boolean"), F.lit(False))
-           if where else F.lit(True))
+    hit = _hit(where)
     n_touched = recorded_rows(touched)
     n_hit = None if n_touched is not None else df.where(hit).count()
     out = writer.write_cow_files(
@@ -108,9 +174,7 @@ def delete_from(spark: SparkSession, catalog: HeraclesCatalog, table: str,
         kept_paths = {f["path"] for f in kept}
         n_hit = n_touched - recorded_rows(
             [f for f in out.files if f["path"] not in kept_paths])
-    LAST_DML_STATS = {"op": "delete", "files_total": len(tbl.files),
-                      "files_rewritten": len(touched),
-                      "rows_affected": n_hit}
+    LAST_DML_STATS = {**stats, "write": "spark", "rows_affected": n_hit}
     return out
 
 
@@ -132,28 +196,49 @@ def update_table(spark: SparkSession, catalog: HeraclesCatalog, table: str,
             raise ValueError(
                 f"UPDATE cannot SET key column {lhs!r} (row identity); "
                 f"use DELETE + INSERT or MERGE")
+        if col in sets:
+            raise ValueError(f"UPDATE: column {col!r} is SET twice")
         sets[col] = rhs
 
-    touched, kept = _touched_and_kept(tbl, where)
+    pred, touched, kept = _touched_and_kept(tbl, where)
+    stats = {"op": "update", "files_total": len(tbl.files),
+             "files_rewritten": len(touched)}
     if not touched:
-        LAST_DML_STATS = {"op": "update", "files_total": len(tbl.files),
-                          "files_rewritten": 0, "rows_affected": 0}
+        LAST_DML_STATS = {**stats, "write": None, "rows_affected": 0}
         return tbl
-    df = _read_files(spark, tbl, touched)
-    hit = (F.coalesce(F.expr(where).cast("boolean"), F.lit(False))
-           if where else F.lit(True))
-    n_hit = df.where(hit).count()
+    hit = _hit(where)
     # One select: every assignment sees the pre-update row.
     sel = [(F.when(hit, F.expr(sets[c])).otherwise(F.col(c))
             .alias(c) if c in sets else F.col(c))
            for c, _ in tbl.columns]
+    split = _local_split(tbl, touched, pred)
+    if split is not None:
+        import pyarrow.compute as pc
+        from pyspark.sql import types as T
+
+        cand, others = split
+        schema = tbl.schema()
+        flag = "__hit"
+        while flag in cmap:
+            flag += "_"
+        df = local_frame(spark, cand, schema).select(
+            *[c.cast(f.dataType).alias(f.name)
+              for c, f in zip(sel, schema.fields)],
+            hit.alias(flag))
+        writer.validate_constraints(df, tbl)
+        out = writer.collect_local(df, T.StructType(
+            schema.fields + [T.StructField(flag, T.BooleanType())]))
+        n_hit = pc.sum(out.column(flag)).as_py() or 0
+        written = _put(catalog, tbl, others, out.drop_columns([flag]), kept)
+        LAST_DML_STATS = {**stats, "write": "local", "rows_affected": n_hit}
+        return written
+    df = _read_files(spark, tbl, touched)
+    n_hit = df.where(hit).count()
     n_touched = recorded_rows(touched)
     out = writer.write_cow_files(
         spark, catalog, table, df.select(*sel), kept,
         n_buckets=(None if n_touched is None
                    else writer.buckets_for_rows(n_touched)),
         base_version=tbl.version)
-    LAST_DML_STATS = {"op": "update", "files_total": len(tbl.files),
-                      "files_rewritten": len(touched),
-                      "rows_affected": n_hit}
+    LAST_DML_STATS = {**stats, "write": "spark", "rows_affected": n_hit}
     return out

@@ -74,6 +74,14 @@ MAY, NO = True, False
 PRUNE_CALLS = 0
 
 
+def nan_bound(lo: Any, hi: Any) -> bool:
+    """Whether a min/max box has a NaN bound. Spark's footers record
+    max = NaN for a float column holding one, and every comparison with
+    NaN is False in Python while Spark orders NaN above every number:
+    such a box decides nothing."""
+    return any(isinstance(v, float) and math.isnan(v) for v in (lo, hi))
+
+
 def may_match(pred: tuple, mins: dict[str, Any], maxs: dict[str, Any],
               key_cols: list[str],
               nulls: "dict[str, int] | None" = None,
@@ -122,6 +130,8 @@ def may_match(pred: tuple, mins: dict[str, Any], maxs: dict[str, Any],
             return NO
         return MAY
     lo, hi = mins[col], maxs[col]
+    if nan_bound(lo, hi):
+        return MAY
 
     try:
         if op == "=":
@@ -183,6 +193,8 @@ def must_match(pred: tuple, mins: dict[str, Any], maxs: dict[str, Any],
     if col not in mins or col not in maxs:
         return False
     lo, hi = mins[col], maxs[col]
+    if nan_bound(lo, hi):
+        return False
     try:
         if op == "=":
             return lo == hi == pred[2]

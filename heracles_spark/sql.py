@@ -80,7 +80,8 @@ from heracles_spark import sqltext
 from heracles_spark.sqltext import split_top as _split_top
 from heracles_spark.sqltext import split_top_and as _split_top_and
 from heracles_spark.catalog import local_frame, recorded_rows
-from heracles_spark.pruning import parse_where, pred_columns, to_sql
+from heracles_spark.pruning import (nan_bound, parse_where, pred_columns,
+                                    to_sql)
 
 _CLONE = re.compile(
     r"^\s*CREATE\s+TABLE\s+(?P<dst>[\w.]+)\s+(?:SHALLOW\s+)?CLONE\s+"
@@ -603,6 +604,9 @@ def dispatch(session, statement: str) -> DataFrame | None:
             am = re.match(r"^\s*(\w+)\s*=\s*(.+)$", part, re.DOTALL)
             if not am:
                 raise ValueError(f"UPDATE: bad assignment {part!r}")
+            if am.group(1).lower() in map(str.lower, assignments):
+                raise ValueError(
+                    f"UPDATE: column {am.group(1)!r} is SET twice")
             assignments[am.group(1)] = am.group(2).strip()
         dml.update_table(spark, catalog, name, assignments, where)
         writer.post_write_maintenance(spark, catalog, name)
@@ -2471,7 +2475,7 @@ def _join_derived_pred(sfiles: list, scol: str, tcol: str,
     for f in sfiles:
         lo = f.get("min", {}).get(scol)
         hi = f.get("max", {}).get(scol)
-        if lo is None or hi is None:
+        if lo is None or hi is None or nan_bound(lo, hi):
             return None
         boxes.append((lo, hi))
     try:

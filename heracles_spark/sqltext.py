@@ -234,15 +234,6 @@ def string_value(token: str) -> str:
     return _ESCAPE[token[0]].sub(_unescape, token[1:-1])
 
 
-def literal_value(sql: str) -> "str | None":
-    """The value of ``sql`` when it is nothing but single-quoted
-    literals (adjacent ones concatenate), else None."""
-    toks = lex(sql)
-    if not toks or any(t.kind != "str" for t in toks):
-        return None
-    return "".join(string_value(t.text) for t in toks)
-
-
 def quote(value: str) -> str:
     """Render ``value`` as a Spark string literal that reads back to
     exactly ``value``."""

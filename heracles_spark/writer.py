@@ -25,17 +25,34 @@ Scale: the shuffle is one range-exchange over the load — the same cost
 the reference pays in its bulk-load shuffle (HBaseShuffledRDD.scala:25-48).
 Sorted-by-key parquet gives min/max stats that are disjoint across files,
 which is what makes file pruning (heracles_spark.pruning) effective.
+
+Point-put (≙ the HBase ``Put`` an INSERT VALUES becomes,
+HBaseRelation.insert, HBaseRelation.scala:672-723): a write whose rows
+are already on the driver and number at most ``pruning.LOCAL_SCAN_ROWS``
+— an INSERT VALUES batch, or a small UPDATE/DELETE rewrite
+(heracles_spark.dml) — runs no Spark job. Spark still evaluates every
+cast and expression over a ``LocalRelation`` (folded by the optimizer,
+so the collect runs no job); ``put_rows`` sorts the rows by key, writes
+them as one parquet file with pyarrow, encoded so that Spark's reader
+and ``pruning.read_local`` read the same rows as from a Spark-written
+file and the footer harvests to the same index entry, and commits
+through the same harvest and catalog commit. Upsert batches, tables
+with ``bloomCols`` (pyarrow writes no parquet bloom filters) and larger
+writes take the Spark write.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from heracles_spark import pruning
 from heracles_spark.catalog import HeraclesCatalog, KeyTable, local_frame
 
 # Target rows per output file for the local harness; on a cluster you'd
@@ -68,7 +85,6 @@ def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
     file index. ``mode`` is 'append' or 'overwrite'."""
     tbl = catalog.get_table(table)
     keys = tbl.key_cols
-    fields = tbl.schema().fields
 
     # Pre-split parity (reference HBaseCatalog.scala:130-149 splitKeys →
     # createHBaseUserTable): CREATE TABLE ... TBLPROPERTIES(
@@ -85,21 +101,7 @@ def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
         if n_buckets < 1:
             raise ValueError("numBuckets must be >= 1")
 
-    # INSERT semantics are positional (standard SQL; ≙ reference insert
-    # path coercing the SELECT output to the table schema): rename by
-    # position, then cast to the declared types.
-    if len(df.columns) != len(fields):
-        raise ValueError(
-            f"column count mismatch: table {table} has {len(fields)}, "
-            f"input has {len(df.columns)}")
-    df = df.toDF(*[f.name for f in fields])
-    df = df.select(*[F.col(f.name).cast(f.dataType) for f in fields])
-
-    # Reject null keys (HBaseRelation.scala:668 non-nullable key columns).
-    df = df.where(F.expr(" AND ".join(f"`{k}` IS NOT NULL" for k in keys)))
-
-    validate_constraints(df, tbl)
-
+    df = _conform(df, tbl)
     if upsert:
         # HBase semantics: one row per key, last write wins. Expressed as a
         # per-key reduce — a single shuffle, map-side combinable.
@@ -133,6 +135,174 @@ def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
     return catalog.update_file_index(table, new_entries, append=True,
                                      op=op or "append",
                                      properties=commit_properties)
+
+
+def _conform(df: DataFrame, tbl: KeyTable) -> DataFrame:
+    """``df`` as rows of ``tbl``: columns renamed by position and cast
+    to the declared types (standard SQL INSERT semantics; ≙ reference
+    insert path coercing the SELECT output to the table schema), rows
+    with a null key dropped (HBaseRelation.scala:668 non-nullable key
+    columns), CHECK constraints enforced."""
+    fields = tbl.schema().fields
+    names = [f.name for f in fields]
+    if len(df.columns) != len(fields):
+        raise ValueError(
+            f"column count mismatch: table {tbl.name} has {len(fields)}, "
+            f"input has {len(df.columns)}")
+    if df.columns != names:
+        df = df.toDF(*names)
+    df = df.select(*[F.col(f.name).cast(f.dataType) for f in fields])
+    df = df.where(F.expr(" AND ".join(f"`{k}` IS NOT NULL"
+                                      for k in tbl.key_cols)))
+    validate_constraints(df, tbl)
+    return df
+
+
+def put_eligible(tbl: KeyTable, n_rows: int) -> bool:
+    """Whether ``n_rows`` driver-side rows of ``tbl`` are written by
+    ``put_rows``: at most ``pruning.LOCAL_SCAN_ROWS`` of them, and no
+    ``bloomCols`` (pyarrow writes no parquet bloom filters)."""
+    return n_rows <= pruning.LOCAL_SCAN_ROWS and not _bloom_cols(tbl)
+
+
+def collect_local(df: DataFrame, schema: T.StructType):
+    """The rows of ``df`` (whose columns are ``schema``'s fields, in
+    order) as an Arrow table in ``schema``'s layout. Over a
+    ``LocalRelation`` the collect runs no job. Timestamps travel as
+    ``unix_micros``, so no value makes a round trip through the
+    session's local time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    is_ts = [isinstance(f.dataType, T.TimestampType) for f in schema.fields]
+    if any(is_ts):
+        df = df.select(*[F.unix_micros(f.name).alias(f.name) if ts
+                         else F.col(f.name)
+                         for f, ts in zip(schema.fields, is_ts)])
+    rows = df.collect()
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+
+
+def _plain_width(t) -> "int | None":
+    """Bytes the PLAIN encoding spends on one value of Arrow type
+    ``t``, or None for other types."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t) or pa.types.is_int64(t) \
+            or pa.types.is_float64(t):
+        return 8
+    if pa.types.is_integer(t) or pa.types.is_float32(t) \
+            or pa.types.is_date32(t):
+        return 4
+    return None
+
+
+def _dictionary_columns(rows) -> list[str]:
+    """The columns Spark's parquet writer (parquet-mr) would
+    dictionary-encode: those whose dictionary plus its bit-packed
+    indices is smaller than the PLAIN encoding. parquet-mr decides on
+    the first page, which at this writer's sizes is the whole column.
+    Booleans and arrays stay PLAIN: parquet-mr never dictionary-encodes
+    booleans, and array values rarely repeat."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def byte_array_size(values) -> int:
+        return 4 * len(values) + (pc.sum(pc.binary_length(values)).as_py()
+                                  or 0)
+
+    out = []
+    for f, col in zip(rows.schema, rows.columns):
+        width = _plain_width(f.type)
+        if width is None and not pa.types.is_string(f.type):
+            continue
+        values = col.drop_null()
+        distinct = pc.unique(values)
+        if width is None:
+            plain, dictionary = (byte_array_size(values),
+                                 byte_array_size(distinct))
+        else:
+            plain, dictionary = width * len(values), width * len(distinct)
+        bits = max(len(distinct) - 1, 0).bit_length()
+        if dictionary + 1 + (len(values) * bits + 7) // 8 < plain:
+            out.append(f.name)
+    return out
+
+
+def _nan_columns(rows) -> list[str]:
+    """Float and double columns holding a NaN. pyarrow leaves NaN out
+    of a column's min/max, so their footer statistics would claim a
+    range the NaN rows (which Spark orders above every number) lie
+    outside."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return [f.name for f, col in zip(rows.schema, rows.columns)
+            if pa.types.is_floating(f.type)
+            and pc.any(pc.is_nan(col)).as_py()]
+
+
+def _write_like_spark(rows, path: str, nan: list[str]) -> None:
+    """One parquet file of Arrow table ``rows``, encoded as Spark
+    writes it: snappy, one row group, dictionaries by parquet-mr's size
+    rule, no Arrow schema in the footer, and no statistics on the
+    ``nan`` columns (see ``_nan_columns``) or on timestamps.
+
+    Timestamps are INT64 microseconds adjusted to UTC, which Spark reads
+    as TIMESTAMP, not Spark's INT96: pyarrow 16.1 writes an INT96 before
+    1970 with a negative time of day (Spark's writer floors it), which
+    Spark reads right but pyarrow's own reader, and so ``read_local``,
+    turns into a date centuries off. Spark writes no INT96 statistics,
+    and none are written for these either, so both index entries
+    match."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    stats = [f.name + (".list.element" if pa.types.is_list(f.type) else "")
+             for f in rows.schema
+             if f.name not in nan and not pa.types.is_timestamp(f.type)]
+    pq.write_table(rows, path, row_group_size=max(rows.num_rows, 1),
+                   compression="snappy",
+                   use_dictionary=_dictionary_columns(rows),
+                   write_statistics=stats, store_schema=False)
+
+
+def put_rows(catalog: HeraclesCatalog, tbl: KeyTable, rows,
+             keep: "list[dict[str, Any]] | None", op: str,
+             base_version: "int | None") -> KeyTable:
+    """Point-put: write Arrow table ``rows`` (in ``tbl``'s Arrow schema,
+    keys non-null, already cast and checked) into ``tbl`` as one parquet
+    file, on the driver, with no Spark job (≙ HBase ``Put``). The rows
+    are sorted by key and written under a generation-unique name in the
+    data dir (nothing when there are none); the file's index entry is
+    harvested from its footer like any other. ``keep=None`` appends;
+    otherwise the new file replaces every live file not in ``keep``
+    (retired in place, as in ``write_cow_files``), committed against
+    ``base_version``."""
+    entries: list[dict[str, Any]] = []
+    if rows.num_rows:
+        path = os.path.join(
+            tbl.data_dir, f"g{tbl.version + 1}-put-{uuid.uuid4().hex}.parquet")
+        rows = rows.sort_by([(k, "ascending") for k in tbl.key_cols])
+        nan = _nan_columns(rows)
+        _write_like_spark(rows, path, nan)
+        entries = harvest_file_index(tbl.data_dir, tbl.key_cols, paths=[path])
+        if nan:
+            # A NaN column's footer has no statistics; its null count,
+            # which Spark's footer would have recorded, is known here.
+            nulls = entries[0].setdefault("nulls", {})
+            nulls.update({c: rows.column(c).null_count for c in nan})
+            entries[0]["nulls"] = dict(sorted(nulls.items()))
+    if keep is None:
+        return catalog.update_file_index(tbl.name, entries, append=True,
+                                         op=op)
+    return catalog.update_file_index(tbl.name, list(keep) + entries,
+                                     append=False, op=op,
+                                     base_version=base_version)
 
 
 def _bloom_cols(tbl: KeyTable) -> list[str]:
@@ -254,17 +424,18 @@ def insert_rows(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     hbaseCommands.scala:62-80; string→type coercion DataTypeUtils.scala:117-135).
 
     The batch is an all-string ``local_frame`` (a JVM LocalRelation, not
-    a parallelized Python RDD); ``write_key_organized`` casts each
-    column to its declared type, so a value that cannot be cast fails
-    the statement before anything is staged. A string has no cast to an
-    ARRAY column, which keeps its type and takes only NULL; any other
-    value raises ``ValueError`` before anything is staged. One output
-    file (``n_buckets=1``): no row count is needed to size the write."""
+    a parallelized Python RDD), cast to the declared column types, so a
+    value that cannot be cast fails the statement before anything is
+    written. A string has no cast to an ARRAY column, which keeps its
+    type and takes only NULL; any other value raises ``ValueError``
+    before anything is written. A batch ``put_eligible`` allows is
+    collected (no job) and written by ``put_rows``; an upsert batch or
+    a larger one is one Spark write of one file (``n_buckets=1``: no
+    row count is needed to size it)."""
     tbl = catalog.get_table(table)
     base = tbl.schema()
     # Accept strings for any field, coerce via cast (reference coerces
     # literal strings to column types).
-    from pyspark.sql import types as T
     loose = T.StructType([
         f if isinstance(f.dataType, T.ArrayType)
         else T.StructField(f.name, T.StringType(), True)
@@ -278,8 +449,11 @@ def insert_rows(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     df = local_frame(
         spark,
         [tuple(None if v is None else str(v) for v in r) for r in rows], loose)
-    return write_key_organized(spark, catalog, table, df, mode="append",
-                               upsert=upsert, n_buckets=1)
+    if upsert or not put_eligible(tbl, len(rows)):
+        return write_key_organized(spark, catalog, table, df, mode="append",
+                                   upsert=upsert, n_buckets=1)
+    return put_rows(catalog, tbl, collect_local(_conform(df, tbl), base),
+                    None, "append", None)
 
 
 def harvest_file_index(data_dir: str, key_cols: list[str],
@@ -351,7 +525,9 @@ def harvest_file_index(data_dir: str, key_cols: list[str],
                     nulls[name] = nulls.get(name, 0) + st.null_count
                 else:
                     nulls_bad.add(name)
-                if st.has_min_max:
+                if st.has_min_max and pruning.nan_bound(st.min, st.max):
+                    box_bad.add(name)
+                elif st.has_min_max:
                     mn, mx = st.min, st.max
                     if name not in mins or mn < mins[name]:
                         mins[name] = mn

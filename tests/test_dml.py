@@ -394,12 +394,14 @@ def _optimized_nodes(df):
 
 def test_write_statements_job_counts_and_local_leaves(hsession, spark,
                                                       monkeypatch):
-    """INSERT VALUES batches and the UPDATE/DELETE result rows are JVM
-    local relations (no parallelized Python RDD, no job to collect
-    them), DELETE sizes its rewrite and counts its rows from the file
-    index, and UPDATE counts its hits once."""
-    from heracles_spark import writer
+    """On the Spark write path, INSERT VALUES batches and the
+    UPDATE/DELETE result rows are JVM local relations (no parallelized
+    Python RDD, no job to collect them), DELETE sizes its rewrite and
+    counts its rows from the file index, and UPDATE counts its hits
+    once."""
+    from heracles_spark import pruning, writer
 
+    monkeypatch.setattr(pruning, "LOCAL_SCAN_ROWS", 0)
     _mk(hsession)
     batches = []
     real = writer.write_key_organized
@@ -459,9 +461,11 @@ def test_dml_without_index_rowcounts_falls_back_to_counting(
         hsession, catalog, monkeypatch):
     """An index entry without a recorded row count: UPDATE and DELETE
     count the rows instead (the rewrite is sized by a count, DELETE's
-    rows_affected is counted), and the answers stay the same."""
-    from heracles_spark import writer
+    rows_affected is counted), and the answers stay the same. The
+    Spark write path is pinned: the driver path needs row counts."""
+    from heracles_spark import pruning, writer
 
+    monkeypatch.setattr(pruning, "LOCAL_SCAN_ROWS", 0)
     def strip_rows():
         catalog.update_file_index(
             "t", [{k: v for k, v in f.items() if k != "rows"}
