@@ -200,6 +200,9 @@ class HeraclesCatalog:
         self._cache_mtime: dict[str, int] = {}
         self._lock = threading.Lock()
         self._txn: Transaction | None = None
+        # publish(): tables changed since; per view (live key, DataFrame)
+        self._changed: set[str] = set()
+        self._published: dict[str, tuple[tuple, DataFrame]] = {}
         self._recover_transactions()
 
     # -- databases (≙ HBase namespaces; HBaseCatalog.scala:219-286) --------
@@ -292,6 +295,7 @@ class HeraclesCatalog:
         with self._lock:
             self._cache.pop(name, None)
             self._cache_mtime.pop(name, None)
+            self._changed.add(name)
         if os.path.exists(path):
             os.remove(path)
         self._gc_markers(name, 1 + self.HISTORY_MAX + tbl.version)
@@ -466,6 +470,7 @@ class HeraclesCatalog:
         txn.active = False
         if not txn.working:
             return []
+        self._mark(txn.working)   # republished on success and conflict
         claimed: list[tuple[str, int, str]] = []
 
         def _release_claims() -> None:
@@ -512,13 +517,13 @@ class HeraclesCatalog:
         return sorted(txn.working)
 
     def rollback_transaction(self) -> list[str]:
-        """Discard the open transaction; returns the touched table names
-        (so callers can restore any views refreshed mid-transaction)."""
+        """Discard the open transaction; returns the touched table names."""
         if self._txn is None:
             raise CatalogError("no open transaction")
         touched = sorted(self._txn.working)
         self._txn.active = False
         self._txn = None
+        self._mark(touched)
         return touched
 
     def transaction(self):
@@ -621,6 +626,7 @@ class HeraclesCatalog:
                 self._txn.working[name] = tbl
                 self._txn.base_versions[name] = tbl.version
             self._apply_update(tbl, files, append, op, properties)
+            self._mark([name])
             return tbl                  # buffered; persisted at COMMIT
         if not self.table_exists(name):
             raise CatalogError(f"no such table: {name}")
@@ -793,10 +799,49 @@ class HeraclesCatalog:
 
     def register_all(self, spark: SparkSession) -> None:
         """Register every table as a temp view (≙ HBaseSourceAnalysis
-        resolving CatalogRelation → LogicalRelation, HBaseStrategies.scala:231)."""
-        for name in self.list_tables():
-            self.read_table(spark, name).createOrReplaceTempView(
-                self.view_name(name))
+        resolving CatalogRelation → LogicalRelation, HBaseStrategies.scala:231):
+        mark every table changed, then ``publish``."""
+        self._mark(self.list_tables())
+        self.publish(spark)
+
+    def _mark(self, names) -> None:
+        with self._lock:
+            self._changed.update(names)
+
+    def _live_key(self, name: str) -> tuple:
+        tbl = self.get_table(name)
+        return tuple(f["path"] for f in tbl.files), tbl.schema()
+
+    def publish(self, spark: SparkSession) -> None:
+        """The one place a table view is registered or dropped. For each
+        table changed since (a commit, a write buffered in a transaction,
+        COMMIT even when it fails, ROLLBACK, DROP): drop the view of a
+        dropped table, else register ``read_table`` as ``view_name`` unless
+        the live files and columns are those last published (ANALYZE and
+        other properties-only commits rebuild nothing). Every
+        ``HeraclesSession.sql`` statement publishes before and after it
+        runs, so a library write through this catalog replaces the view,
+        a user's too, at the next statement or when its caller publishes.
+        Commits by other catalog instances are not seen here."""
+        with self._lock:
+            names, self._changed = self._changed, set()
+        for name in sorted(names):
+            view = self.view_name(name)
+            if not self.table_exists(name):
+                self._published.pop(name, None)
+                spark.catalog.dropTempView(view)
+                continue
+            key = self._live_key(name)
+            if self._published.get(name, (None,))[0] != key:
+                df = self.read_table(spark, name)
+                df.createOrReplaceTempView(view)
+                self._published[name] = (key, df)
+
+    def published_frame(self, name: str) -> DataFrame | None:
+        """The DataFrame ``publish`` registered as ``name``'s view; None
+        if the live files or columns changed since (a foreign commit)."""
+        key, df = self._published.get(name.lower(), (None, None))
+        return df if key == self._live_key(name) else None
 
     # -- persistence -------------------------------------------------------
     #
@@ -847,6 +892,7 @@ class HeraclesCatalog:
             mt = None
         os.replace(tmp, self._path(tbl.name))
         with self._lock:
+            self._changed.add(tbl.name)
             self._cache[tbl.name] = tbl
             if mt is not None:
                 self._cache_mtime[tbl.name] = mt

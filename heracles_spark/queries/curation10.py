@@ -43,7 +43,6 @@ def orders_routed_sql_or(spark, sf_dir):
         spark, cat, "rtor",
         o.select(F.col("o_orderkey").cast("bigint"),
                  F.col("o_totalprice").cast("double")), n_buckets=4)
-    cat.register_all(spark)
 
     lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     a, b = int(lo) + 100, int(hi) - 100
@@ -108,7 +107,6 @@ def embedding_ann_sql_routed(spark, sf_dir):
         spark, cat, "annq",
         e.select(F.col("vec_id").cast("bigint"), "embedding"),
         n_buckets=4)
-    cat.register_all(spark)
     qvec = [float(x) for x in
             e.orderBy("vec_id").first()["embedding"]]
     lit = ", ".join(repr(v) for v in qvec)
@@ -193,7 +191,6 @@ def orders_join_reorder(spark, sf_dir):
          .orderBy("o_orderkey").limit(100), n_buckets=1)
     for t in ("jra", "jrb", "jrd"):
         writer.analyze_table(spark, cat, t, for_columns=True)
-    cat.register_all(spark)
 
     stmt = ("SELECT CAST(COUNT(*) AS BIGINT) AS n_rows, "
             "CAST(SUM(CAST(jra.l_quantity AS DECIMAL(38,2))) AS DOUBLE)"

@@ -52,7 +52,6 @@ def embedding_ann_sql_filtered(spark, sf_dir):
         spark, cat, "annf",
         e.select(F.col("vec_id").cast("bigint"), "embedding",
                  F.col("label").cast("int")), n_buckets=4)
-    cat.register_all(spark)
     qvec = [float(x) for x in e.orderBy("vec_id").first()["embedding"]]
     lit = ", ".join(repr(v) for v in qvec)
     stmt = (f"SELECT vec_id, label FROM annf WHERE label = 1 ORDER BY "
@@ -134,7 +133,6 @@ def embedding_ann_clustered_default(spark, sf_dir):
         spark.createDataFrame(
             rows, "vec_id long, embedding array<float>, label int"),
         n_buckets=4)
-    cat.register_all(spark)
     hs.sql("CREATE VECTOR INDEX ancv ON annc (embedding) "
            "WITH (cells=16, sample=1600)")
 
@@ -188,7 +186,6 @@ def embedding_ann_sql_scored(spark, sf_dir):
         spark, cat, "anns",
         e.select(F.col("vec_id").cast("bigint"), "embedding"),
         n_buckets=4)
-    cat.register_all(spark)
     qvec = [float(x) for x in e.orderBy("vec_id").first()["embedding"]]
     lit = ", ".join(repr(v) for v in qvec)
     stmt = (f"SELECT vec_id, cosine_distance(embedding, array({lit})) "
@@ -258,7 +255,6 @@ def customer_indexed_residual_sql(spark, sf_dir):
                  F.col("c_nationkey").cast("bigint"),
                  F.col("c_acctbal").cast("double")), n_buckets=8)
     index_mod.create_index(spark, cat, "custr", "c_acctbal")
-    cat.register_all(spark)
 
     got = hs.sql("SELECT c_custkey, c_nationkey, c_acctbal FROM custr "
                  "WHERE c_acctbal BETWEEN 9000.0 AND 9999.0 "
@@ -315,7 +311,6 @@ def embedding_ann_lateral_sql(spark, sf_dir):
         e.where(F.col("vec_id").isin(3, 17))
          .select((F.col("vec_id") + 1000).cast("bigint").alias("pid"),
                  F.col("embedding").alias("pvec")), n_buckets=1)
-    cat.register_all(spark)
     hs.sql("CREATE VECTOR INDEX anlv ON annl (embedding) "
            "WITH (cells=16, sample=2048)")
     spark.conf.set("spark.sql.heracles.annProbe", "16")   # full = exact
@@ -390,7 +385,6 @@ def lineitem_routed_agg_sql(spark, sf_dir):
                   F.col("l_linenumber").cast("int"),
                   "l_returnflag",
                   F.col("l_quantity").cast("double")), n_buckets=8)
-    cat.register_all(spark)
     lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 4
     b = int(lo) + (int(hi) - int(lo)) // 2
@@ -449,7 +443,6 @@ def orders_metadata_count(spark, sf_dir):
         spark, cat, "mcto",
         o.select(F.col("o_orderkey").cast("bigint"),
                  F.col("o_totalprice").cast("double")), n_buckets=4)
-    cat.register_all(spark)
     n0 = int(hs.sql("SELECT COUNT(*) FROM mcto").first()[0])
     r0 = dict(hs.last_select_route)
     lo = int(o.agg(F.min("o_orderkey")).first()[0])

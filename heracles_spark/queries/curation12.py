@@ -57,7 +57,6 @@ def lineitem_star_join_pruned_sql(spark, sf_dir):
         spark, cat, "sjo",
         o.select(F.col("o_orderkey").cast("bigint"),
                  "o_orderpriority"), n_buckets=4)
-    cat.register_all(spark)
     lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 4
     b = int(lo) + (int(hi) - int(lo)) // 2
@@ -119,7 +118,6 @@ def orders_range_metadata_count(spark, sf_dir):
         spark, cat, "rmco",
         o.select(F.col("o_orderkey").cast("bigint"),
                  F.col("o_totalprice").cast("double")), n_buckets=8)
-    cat.register_all(spark)
     lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 8
     b = int(lo) + 3 * (int(hi) - int(lo)) // 4
@@ -178,7 +176,6 @@ def embedding_ann_lateral_filtered(spark, sf_dir):
         e.where(F.col("vec_id").isin(5, 23))
          .select((F.col("vec_id") + 2000).cast("bigint").alias("pid"),
                  F.col("embedding").alias("pvec")), n_buckets=1)
-    cat.register_all(spark)
     hs.sql("CREATE VECTOR INDEX anlfv ON anlf (embedding) "
            "WITH (cells=16, sample=2048)")
     spark.conf.set("spark.sql.heracles.annProbe", "16")   # full = exact
@@ -259,7 +256,6 @@ def lineitem_fallback_pruned_sql(spark, sf_dir):
                   F.col("l_linenumber").cast("int"),
                   "l_returnflag",
                   F.col("l_quantity").cast("double")), n_buckets=8)
-    cat.register_all(spark)
     lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     b = int(lo) + (int(hi) - int(lo)) // 4
     got = hs.sql(
@@ -328,7 +324,6 @@ def lineitem_cte_pruned_sql(spark, sf_dir):
         spark, cat, "cto",
         o.select(F.col("o_orderkey").cast("bigint"),
                  "o_orderpriority"), n_buckets=4)
-    cat.register_all(spark)
     lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 4
     b = int(lo) + (int(hi) - int(lo)) // 2
@@ -397,7 +392,6 @@ def customer_subquery_pruned_sql(spark, sf_dir):
         spark, cat, "sqc",
         c.select(F.col("c_custkey").cast("bigint"),
                  "c_mktsegment"), n_buckets=4)
-    cat.register_all(spark)
     lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 8
     b = int(lo) + (int(hi) - int(lo)) // 2
@@ -458,7 +452,6 @@ def lineitem_union_pruned_sql(spark, sf_dir):
         li.select(F.col("l_orderkey").cast("bigint"),
                   F.col("l_linenumber").cast("int"),
                   F.col("l_quantity").cast("double")), n_buckets=8)
-    cat.register_all(spark)
     lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 8
     b = int(lo) + 7 * (int(hi) - int(lo)) // 8

@@ -57,7 +57,6 @@ def lineitem_join_derived_pruned_sql(spark, sf_dir):
         spark, cat, "jdo",
         o.select(F.col("o_orderkey").cast("bigint"),
                  "o_orderpriority"), n_buckets=4)
-    cat.register_all(spark)
     lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 4
     b = int(lo) + (int(hi) - int(lo)) // 2
@@ -123,7 +122,6 @@ def orders_nonkey_range_metadata_count(spark, sf_dir):
         o.select(F.col("o_orderkey").cast("bigint"),
                  (F.col("o_orderkey") * 2 + 7).cast("bigint")
                  .alias("o_seq")), n_buckets=8)
-    cat.register_all(spark)
     lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     a = (int(lo) + (int(hi) - int(lo)) // 8) * 2 + 7
     b = (int(lo) + 3 * (int(hi) - int(lo)) // 4) * 2 + 7
@@ -175,7 +173,6 @@ def lineitem_nonkey_pruned_sql(spark, sf_dir):
                   (F.col("l_orderkey") * 10).cast("bigint")
                   .alias("l_seq"),
                   F.col("l_quantity").cast("double")), n_buckets=8)
-    cat.register_all(spark)
     lo, hi = li.agg(F.min("l_orderkey"), F.max("l_orderkey")).first()
     b = (int(lo) + (int(hi) - int(lo)) // 4) * 10
     got = hs.sql(

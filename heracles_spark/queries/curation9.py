@@ -161,7 +161,6 @@ def orders_stats_sql_join(spark, sf_dir):
         writer.write_key_organized(spark, cat, name, dim_src,
                                    n_buckets=2)
     writer.analyze_table(spark, cat, "sqldim", for_columns=True)
-    cat.register_all(spark)
 
     stmt = """
         SELECT CAST(d.c_nationkey AS INT) AS c_nationkey,
@@ -982,7 +981,6 @@ def orders_explain_chain(spark, sf_dir):
                  "n_name"), n_buckets=1)
     for t in ("chf", "chc", "chn"):
         writer.analyze_table(spark, cat, t, for_columns=True)
-    cat.register_all(spark)
 
     steps = hs.sql(
         "EXPLAIN ESTIMATE SELECT * FROM chf "
@@ -1057,7 +1055,6 @@ def orders_routed_sql_lookup(spark, sf_dir):
                  F.col("o_totalprice").cast("double")), n_buckets=4)
     index_mod.create_index(spark, cat, "rto", "o_totalprice",
                            name="rto_px")
-    cat.register_all(spark)
 
     key = int(o.agg(F.max("o_orderkey")).first()[0])
     point = hs.sql(f"SELECT o_orderkey, o_custkey, o_totalprice "

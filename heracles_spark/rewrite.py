@@ -134,7 +134,7 @@ def try_rollup_rewrite(session, statement: str) -> DataFrame | None:
     to let the statement run as written."""
     global LAST_REWRITE
     from heracles_spark.rollup import _SPEC_PROP
-    from heracles_spark.sql import _resolve, _split_top
+    from heracles_spark.sql import _resolve, _split_top, _view_is_shadowed
 
     LAST_REWRITE = None
     if not getattr(session, "rollup_rewrite", True):
@@ -196,11 +196,12 @@ def try_rollup_rewrite(session, statement: str) -> DataFrame | None:
         if order and not _idents(order) <= allowed_post:
             continue
 
-        view = catalog.view_name(cand)
-        # Fresh registration: temp views capture the file list at
-        # registration time, and the rollup may have refreshed since.
-        catalog.read_table(spark, cand).createOrReplaceTempView(view)
-        sql = f"SELECT {', '.join(items)} FROM {view}"
+        # Read the rollup's published view only: not a user's view of
+        # that name, nor one a foreign commit left stale.
+        if catalog.published_frame(cand) is None \
+                or _view_is_shadowed(session, cand):
+            continue
+        sql = f"SELECT {', '.join(items)} FROM {catalog.view_name(cand)}"
         if where:
             sql += f" WHERE {where}"
         sql += f" GROUP BY {', '.join(groups)}"

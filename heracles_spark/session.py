@@ -104,9 +104,16 @@ class HeraclesSession:
         self.catalog.register_all(self.spark)
 
     def sql(self, statement: str):
+        """Dispatch one statement between two ``catalog.publish`` calls
+        (the second also when it raises): library writes through this
+        catalog reach the views before it runs, its own writes after."""
         from heracles_spark.sql import dispatch
 
-        return dispatch(self, statement)
+        self.catalog.publish(self.spark)
+        try:
+            return dispatch(self, statement)
+        finally:
+            self.catalog.publish(self.spark)
 
     def table(self, name: str):
         return self.catalog.read_table(self.spark, name)

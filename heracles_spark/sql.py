@@ -163,11 +163,8 @@ _VERSION_ASOF = re.compile(
 _TS_ASOF = re.compile(
     r"\b([\w.]+)\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'", re.IGNORECASE)
 _RESTORE = re.compile(
-    r"^\s*RESTORE\s+TABLE\s+(?P<name>[\w.]+)\s+TO\s+VERSION\s+AS\s+OF\s+"
-    r"(?P<v>\d+)\s*$", re.IGNORECASE)
-_RESTORE_TS = re.compile(
-    r"^\s*RESTORE\s+TABLE\s+(?P<name>[\w.]+)\s+TO\s+TIMESTAMP\s+AS\s+OF"
-    r"\s+'(?P<ts>[^']+)'\s*$", re.IGNORECASE)
+    r"^\s*RESTORE\s+TABLE\s+(?P<name>[\w.]+)\s+TO\s+(?:VERSION\s+AS\s+OF\s+"
+    r"(?P<v>\d+)|TIMESTAMP\s+AS\s+OF\s+'(?P<ts>[^']+)')\s*$", re.IGNORECASE)
 _VACUUM = re.compile(
     r"^\s*VACUUM\s+(?P<name>[\w.]+)"
     r"(?:\s+RETAIN\s+(?P<n>\d+)\s+VERSIONS?)?"
@@ -316,9 +313,7 @@ def _parse_est_conjunction(where: str):
 _TRUNCATE = re.compile(
     r"^\s*TRUNCATE\s+TABLE\s+(?P<name>[\w.]+)\s*$", re.IGNORECASE)
 _CACHE = re.compile(
-    r"^\s*CACHE\s+TABLE\s+(?P<name>[\w.]+)\s*$", re.IGNORECASE)
-_UNCACHE = re.compile(
-    r"^\s*UNCACHE\s+TABLE\s+(?P<name>[\w.]+)\s*$", re.IGNORECASE)
+    r"^\s*(?P<un>UN)?CACHE\s+TABLE\s+(?P<name>[\w.]+)\s*$", re.IGNORECASE)
 _BEGIN = re.compile(r"^\s*(?:BEGIN|START)(?:\s+TRANSACTION)?\s*$",
                     re.IGNORECASE)
 _COMMIT = re.compile(r"^\s*COMMIT(?:\s+TRANSACTION)?\s*$", re.IGNORECASE)
@@ -351,6 +346,19 @@ def _query_head_kw(text: str) -> str:
         if t.text != "(" and t.kind != "hint":
             return t.text.upper() if t.kind == "word" else ""
     return ""
+
+
+def _epoch(raw: str) -> float:
+    """A ``TIMESTAMP AS OF`` operand in epoch seconds: a number, or an
+    ISO date-time (naive ⇒ UTC)."""
+    try:
+        return float(raw)
+    except ValueError:
+        from datetime import datetime, timezone
+        dt = datetime.fromisoformat(raw)
+        if dt.tzinfo is None:
+            dt = dt.replace(tzinfo=timezone.utc)
+        return dt.timestamp()
 
 
 def _resolve(session, name: str) -> str:
@@ -395,20 +403,11 @@ def dispatch(session, statement: str) -> DataFrame | None:
         return None
 
     if _COMMIT.match(statement):
-        touched = catalog.commit_transaction()
-        for name in touched:
-            # Committed tables get fresh views (inside the transaction
-            # the session reads working copies via read_table directly).
-            catalog.read_table(spark, name).createOrReplaceTempView(
-                catalog.view_name(name))
+        catalog.commit_transaction()
         return None
 
     if _ROLLBACK.match(statement):
-        for name in catalog.rollback_transaction():
-            # Views refreshed mid-transaction must fall back to the
-            # committed state the rollback restored.
-            catalog.read_table(spark, name).createOrReplaceTempView(
-                catalog.view_name(name))
+        catalog.rollback_transaction()
         return None
 
     m = _CREATE_DB.match(statement)
@@ -441,24 +440,18 @@ def dispatch(session, statement: str) -> DataFrame | None:
         name = _resolve(session, m.group("name"))
         for col, typ in _parse_columns(m.group("cols")):
             catalog.alter_add_column(name, col, typ)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     m = _ALTER_DROP.match(statement)
     if m:
         name = _resolve(session, m.group("name"))
         catalog.alter_drop_column(name, m.group("col"))
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     m = _CLONE.match(statement)
     if m:
         dst = _resolve(session, m.group("dst"))
         catalog.clone_table(_resolve(session, m.group("src")), dst)
-        catalog.read_table(spark, dst).createOrReplaceTempView(
-            catalog.view_name(dst))
         return None
 
     m = _CTAS.match(statement)
@@ -481,11 +474,8 @@ def dispatch(session, statement: str) -> DataFrame | None:
                     f"CAST it to one of {sorted(SUPPORTED_TYPES)} in the "
                     f"SELECT")
             cols.append((f.name, t))
-        tbl = catalog.create_table(name, cols, key_cols, properties=props)
-        writer.write_key_organized(spark, catalog, tbl.name, df,
-                                   mode="overwrite")
-        catalog.read_table(spark, tbl.name).createOrReplaceTempView(
-            catalog.view_name(tbl.name))
+        catalog.create_table(name, cols, key_cols, properties=props)
+        writer.write_key_organized(spark, catalog, name, df, mode="overwrite")
         return None
 
     m = _CREATE.match(statement)
@@ -498,9 +488,7 @@ def dispatch(session, statement: str) -> DataFrame | None:
         key_cols = [k for k in props.get("keyCols", "").split(";") if k]
         if not key_cols:
             raise ValueError("CREATE TABLE requires TBLPROPERTIES keyCols")
-        tbl = catalog.create_table(name, cols, key_cols, properties=props)
-        catalog.read_table(spark, tbl.name).createOrReplaceTempView(
-            catalog.view_name(tbl.name))
+        catalog.create_table(name, cols, key_cols, properties=props)
         return None
 
     m = _DROP.match(statement)
@@ -511,7 +499,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
                 return None
             raise ValueError(f"no such table: {name}")
         catalog.drop_table(name)
-        spark.catalog.dropTempView(catalog.view_name(name))
         return None
 
     m = _LOAD.match(statement)
@@ -521,8 +508,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
                              overwrite=bool(m.group("overwrite")),
                              bad_records_dir=m.group("bad"))
         writer.post_write_maintenance(spark, catalog, name)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     m = _INSERT_VALUES.match(statement)
@@ -531,8 +516,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
         # parsed from the statement's own (cached) tokens
         writer.insert_rows(spark, catalog, name, _parse_value_rows(statement))
         writer.post_write_maintenance(spark, catalog, name)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     m = _INSERT_SELECT.match(statement)
@@ -551,8 +534,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
         mode = "overwrite" if m.group("over") else "append"
         writer.write_key_organized(spark, catalog, name, df, mode=mode)
         writer.post_write_maintenance(spark, catalog, name)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     parsed = _parse_merge(statement)
@@ -590,8 +571,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
             source_alias=parsed["salias"] or parsed["source_table"]
             or "source")
         writer.post_write_maintenance(spark, catalog, name)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     m = _UPDATE.match(statement)
@@ -610,8 +589,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
             assignments[am.group(1)] = am.group(2).strip()
         dml.update_table(spark, catalog, name, assignments, where)
         writer.post_write_maintenance(spark, catalog, name)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return _dml_stats_frame(spark)
 
     m = _DELETE.match(statement)
@@ -624,8 +601,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
                 f"DELETE: unexpected tokens before WHERE: {tail.strip()!r}")
         dml.delete_from(spark, catalog, name, where)
         writer.post_write_maintenance(spark, catalog, name)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return _dml_stats_frame(spark)
 
     m = _OPTIMIZE.match(statement)
@@ -641,8 +616,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
             st = writer.compact_small_files(spark, catalog, name,
                                             target_rows=target,
                                             dry_run=bool(m.group("dry")))
-            catalog.read_table(spark, name).createOrReplaceTempView(
-                catalog.view_name(name))
             return spark.createDataFrame(
                 [(st["files_total"], st["files_compacted"],
                   st["files_written"], st["rows_compacted"])],
@@ -681,8 +654,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
             # split/merge in the reference's storage model)
             nb = int(m.group("nbuckets")) if m.group("nbuckets") else None
             writer.optimize_table(spark, catalog, name, n_buckets=nb)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     m = _CREATE_ROLLUP.match(statement)
@@ -715,26 +686,9 @@ def dispatch(session, statement: str) -> DataFrame | None:
     m = _RESTORE.match(statement)
     if m:
         name = _resolve(session, m.group("name"))
-        writer.restore_table(catalog, name, int(m.group("v")))
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
-        return None
-
-    m = _RESTORE_TS.match(statement)
-    if m:
-        name = _resolve(session, m.group("name"))
-        raw = m.group("ts")
-        try:
-            epoch = float(raw)
-        except ValueError:
-            from datetime import datetime, timezone
-            dt = datetime.fromisoformat(raw)
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=timezone.utc)
-            epoch = dt.timestamp()
-        writer.restore_table(catalog, name, catalog.version_at(name, epoch))
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
+        v = m.group("v")
+        writer.restore_table(catalog, name, int(v) if v else
+                             catalog.version_at(name, _epoch(m.group("ts"))))
         return None
 
     m = _VACUUM.match(statement)
@@ -1257,16 +1211,11 @@ def dispatch(session, statement: str) -> DataFrame | None:
 
     m = _CACHE.match(statement)
     if m:
-        name = _resolve(session, m.group("name"))
-        view = catalog.view_name(name)
-        catalog.read_table(spark, name).createOrReplaceTempView(view)
-        spark.catalog.cacheTable(view)
-        return None
-
-    m = _UNCACHE.match(statement)
-    if m:
         view = catalog.view_name(_resolve(session, m.group("name")))
-        spark.catalog.uncacheTable(view)
+        if m.group("un"):
+            spark.catalog.uncacheTable(view)
+        else:
+            spark.catalog.cacheTable(view)
         return None
 
     m = _DESC_HISTORY.match(statement)
@@ -1282,8 +1231,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
         from heracles_spark import rollup as rollup_mod
         name = _resolve(session, m.group("name"))
         st = rollup_mod.refresh_rollup(spark, catalog, name)
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return spark.createDataFrame(
             [(st["mode"], st["new_files"])], "mode: string, new_files: int")
 
@@ -1295,8 +1242,6 @@ def dispatch(session, statement: str) -> DataFrame | None:
         # WHERE's copy-on-write pass.
         name = _resolve(session, m.group("name"))
         catalog.update_file_index(name, [], append=False, op="truncate")
-        catalog.read_table(spark, name).createOrReplaceTempView(
-            catalog.view_name(name))
         return None
 
     if _SHOW.match(statement):
@@ -1386,25 +1331,8 @@ def dispatch(session, statement: str) -> DataFrame | None:
         name = _resolve(session, m.group(1))
         if not catalog.table_exists(name):
             return m.group(0)
-        view = f"{catalog.view_name(name)}__v{m.group(2)}"
-        catalog.read_table(spark, name, version=int(m.group(2))) \
-               .createOrReplaceTempView(view)
-        return view
-
-    def _ts_asof(m):
-        name = _resolve(session, m.group(1))
-        if not catalog.table_exists(name):
-            return m.group(0)
-        raw = m.group(2)
-        try:
-            epoch = float(raw)
-        except ValueError:
-            from datetime import datetime, timezone
-            dt = datetime.fromisoformat(raw)
-            if dt.tzinfo is None:
-                dt = dt.replace(tzinfo=timezone.utc)   # naive ⇒ UTC
-            epoch = dt.timestamp()
-        v = catalog.version_at(name, epoch)
+        v = (int(m.group(2)) if m.re is _VERSION_ASOF
+             else catalog.version_at(name, _epoch(m.group(2))))
         view = f"{catalog.view_name(name)}__v{v}"
         catalog.read_table(spark, name, version=v) \
                .createOrReplaceTempView(view)
@@ -1469,7 +1397,7 @@ def dispatch(session, statement: str) -> DataFrame | None:
         # dropped as soon as the plan is resolved.
         statement, view, build = asof_rw
         final = rewrite_qualify(_VERSION_ASOF.sub(_asof, _TS_ASOF.sub(
-            _ts_asof, statement)))
+            _asof, statement)))
         build().createOrReplaceTempView(view)
         try:
             return spark.sql(final)
@@ -1493,7 +1421,7 @@ def dispatch(session, statement: str) -> DataFrame | None:
         session.last_select_route = jp_audit
         return out
     final = rewrite_qualify(_VERSION_ASOF.sub(_asof, _TS_ASOF.sub(
-        _ts_asof, statement)))
+        _asof, statement)))
     return spark.sql(written if final == stripped else final)
 
 
@@ -1516,40 +1444,22 @@ def _view_is_shadowed(session, name: str) -> bool:
     dispatcher's own registration. A user-created temp view that
     shadows a catalog table name must win for EVERY statement shape
     (round-10 advisor fix: access-path routing used to bypass it for
-    exactly the predicate shapes that route). The dispatcher's
-    registrations are plain reads of the current file set, so semantic
-    plan equality against ``read_table`` identifies them; anything
-    else — a user view, or a stale pre-write registration — takes the
-    normal (view-resolving) Spark path. Driver-only, no data read.
-
-    The reference plan is CACHED per (table, version): building
-    ``read_table`` lists every current file at analysis (O(files)
-    driver work — at 1e5 files that would dwarf the prune pass the
-    router saves), so only the first routed statement per table
-    version pays it. Errors resolve conservatively: a missing view
-    means nothing is shadowed; any other analyzer failure disables
-    routing rather than risk bypassing a real user view."""
+    exactly the predicate shapes that route). The dispatcher's own view
+    is semantically the DataFrame ``catalog.publish`` registered over the
+    live files; a user's, or one a foreign commit left stale, is not.
+    No relation is built. A missing view shadows nothing; an analyzer
+    error disables routing."""
     catalog = session.catalog
     try:
         cur_view = session.spark.table(catalog.view_name(name))
     except Exception:
         return False          # no such view: nothing is shadowed
-    tbl = catalog.get_table(name)
-    cache = getattr(session, "_shadow_ref_cache", None)
-    if cache is None:
-        cache = session._shadow_ref_cache = {}
-    ent = cache.get(name)
-    if ent is None or ent[0] != tbl.version:
-        try:
-            ref = (catalog.read_table(session.spark, name)
-                   ._jdf.queryExecution().analyzed())
-        except Exception:
-            return True       # can't build the reference: don't route
-        ent = (tbl.version, ref)
-        cache[name] = ent
+    ref = catalog.published_frame(name)
+    if ref is None:
+        return True           # not published here, or stale
     try:
         return not cur_view._jdf.queryExecution().analyzed().sameResult(
-            ent[1])
+            ref._jdf.queryExecution().analyzed())
     except Exception:
         return True           # analyzer error: conservative, no routing
 

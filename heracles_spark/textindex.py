@@ -90,12 +90,11 @@ def create_text_index(spark: SparkSession, catalog, table: str,
         properties={"textCol": text_col, "baseTable": table})
     writer.write_key_organized(spark, catalog, name, postings,
                                mode="overwrite", n_buckets=n_buckets)
-    catalog.read_table(spark, name).createOrReplaceTempView(
-        catalog.view_name(name))
     reg = _registry(tbl)
     reg[iname] = {"col": text_col, "table": name,
                   "built_version": catalog.get_table(table).version + 1}
     _commit_registry(catalog, table, reg, f"create-text-index:{iname}")
+    catalog.publish(spark)
     return catalog.get_table(name)
 
 
@@ -163,14 +162,13 @@ def refresh_text_index(spark: SparkSession, catalog, table: str,
         "new_files": (len(cur_paths - old_paths)
                       if old_paths is not None else None)}
 
-    catalog.read_table(spark, name).createOrReplaceTempView(
-        catalog.view_name(name))
     reg = _registry(catalog.get_table(table))
     if iname in reg:
         reg[iname]["built_version"] = \
             catalog.get_table(table).version + 1
         _commit_registry(catalog, table, reg,
                          f"refresh-text-index:{iname}")
+    catalog.publish(spark)
     return catalog.get_table(name)
 
 

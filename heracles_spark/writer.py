@@ -1412,13 +1412,11 @@ def write_audit_publish(spark: SparkSession, catalog: HeraclesCatalog,
         spark.catalog.dropTempView(v_before)
     if failed:
         restored = restore_table(catalog, table, v0)
-        catalog.read_table(spark, table).createOrReplaceTempView(
-            catalog.view_name(table))
+        catalog.publish(spark)
         return {"published": False, "version": restored.version,
                 "failed": failed, "restored_to": v0,
                 "rows_before": rows_before, "rows_after": rows_before}
-    catalog.read_table(spark, table).createOrReplaceTempView(
-        catalog.view_name(table))
+    catalog.publish(spark)
     return {"published": True,
             "version": catalog.get_table(table).version,
             "failed": [], "rows_before": rows_before,

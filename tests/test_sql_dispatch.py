@@ -1681,10 +1681,12 @@ def test_route_metadata_count(hsession, catalog):
     assert hsession.sql(
         "SELECT count(1) AS n FROM mc").first().n == 500
 
-    # stays exact across append + COW delete (through the SQL surface,
-    # which refreshes the session view; a LIBRARY-level dml call would
-    # leave the view stale and the shadow guard would correctly route
-    # the count to the stale view instead — the documented contract)
+    # stays exact across append + COW delete (the catalog publishes the
+    # session view after each statement; a LIBRARY-level dml call
+    # through this catalog is published before the next statement, and
+    # only a commit by another catalog instance leaves the view stale,
+    # so the shadow guard routes the count to that stale view instead —
+    # the documented contract)
     hsession.sql("INSERT INTO mc VALUES (1000, 1.0), (1001, 2.0)")
     hsession.sql("DELETE FROM mc WHERE k < 100")
     assert hsession.sql("SELECT COUNT(*) AS n FROM mc").first().n == 402

@@ -63,7 +63,6 @@ def main() -> None:
         spark, cat, "rao",
         o.select(F.col("o_orderkey").cast("bigint"), "o_orderpriority"),
         n_buckets=16)
-    cat.register_all(spark)
 
     lo, hi = o.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     a = int(lo) + (int(hi) - int(lo)) // 4
