@@ -60,9 +60,8 @@ SUPPORTED_TYPES = {
     "date": T.DateType(),
     "timestamp": T.TimestampType(),
     # Embedding columns (vector indexes). Non-key only in practice:
-    # parquet writes no min/max stats for arrays, so an array key col
-    # would index nothing — harvest_file_index reads key-col stats and
-    # arrays simply never appear there.
+    # an array is a nested parquet leaf, which harvest_file_index skips,
+    # so an array key col would have no min/max box to prune on.
     "array<float>": T.ArrayType(T.FloatType()),
     "array<double>": T.ArrayType(T.DoubleType()),
 }

@@ -40,7 +40,6 @@ import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from heracles_spark.catalog import HeraclesCatalog, local_frame
 from heracles_spark.pruning import (pred_columns, prune_files, scan, to_nnf,
@@ -122,9 +121,7 @@ def _build(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     base = catalog.read_table(spark, table)
     tbl = catalog.get_table(table)
     rest = [k for k in tbl.key_cols if k not in icols]
-    proj = (base.select(*icols, *rest, *(include or []))
-                .where(F.expr(" AND ".join(
-                    f"`{c}` IS NOT NULL" for c in icols))))
+    proj = base.select(*icols, *rest, *(include or []))
     writer.write_key_organized(spark, catalog, itable, proj,
                                mode="overwrite")
 
@@ -163,9 +160,7 @@ def refresh_index(spark: SparkSession, catalog: HeraclesCatalog,
             icols = entry.get("cols", [entry["col"]])
             rest = [k for k in tbl.key_cols if k not in icols]
             base = (spark.read.schema(tbl.schema()).parquet(*new_paths)
-                    .select(*icols, *rest, *entry.get("include", []))
-                    .where(F.expr(" AND ".join(
-                        f"`{c}` IS NOT NULL" for c in icols))))
+                    .select(*icols, *rest, *entry.get("include", [])))
             writer.write_key_organized(spark, catalog, entry["table"],
                                        base, mode="append")
         mode = "incremental"

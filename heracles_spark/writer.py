@@ -16,10 +16,24 @@ Reference behavior being re-expressed:
   documented divergence (SURVEY §7.2.3); ``upsert=True`` opts into
   last-write-wins dedup on the key.
 
-After every write the per-file key ranges are harvested from parquet
-footers (pyarrow, driver-side, no data read) into the catalog's file
-index — the analogue of region boundary metadata
-(HBaseRelation.fetchPartitions, HBaseRelation.scala:203-235).
+Every file-writing path goes through one funnel, each step in one place:
+
+1. Conform — ``_conform`` turns incoming rows into table rows: column
+   count, positional rename, cast, null-key filter, CHECK constraints.
+2. Lay out — the caller picks the file layout: the range layout
+   (``_range_layout``: ``write_key_organized``, ``write_cow_files`` for
+   UPDATE/DELETE/MERGE/COMPACT, ``append_batch_exactly_once``), a
+   space-filling curve (``zorder.write_zordered``), or the driver's
+   sorted Arrow rows (``put_rows``).
+3. Stage and move — ``_stage`` writes the parquet, with the table's
+   parquet bloom options, into a staging dir unique to the write (the
+   stream's per-batch dir), and moves the parts in under generation
+   names. It is the only DataFrame parquet write of table data.
+4. Harvest and commit — ``_commit`` harvests the new files' footers
+   into index entries (the analogue of region boundary metadata,
+   HBaseRelation.fetchPartitions, HBaseRelation.scala:203-235; catalog
+   blooms for ``bloomCols``) and commits them through
+   ``catalog.update_file_index``.
 
 Scale: the shuffle is one range-exchange over the load — the same cost
 the reference pays in its bulk-load shuffle (HBaseShuffledRDD.scala:25-48).
@@ -36,7 +50,7 @@ so the collect runs no job); ``put_rows`` sorts the rows by key, writes
 them as one parquet file with pyarrow, encoded so that Spark's reader
 and ``pruning.read_local`` read the same rows as from a Spark-written
 file and the footer harvests to the same index entry, and commits
-through the same harvest and catalog commit. Upsert batches, tables
+through the same harvest and commit step. Upsert batches, tables
 with ``bloomCols`` (pyarrow writes no parquet bloom filters) and larger
 writes take the Spark write.
 """
@@ -113,28 +127,20 @@ def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
         else:
             df = df.dropDuplicates(keys)
 
-    n = _n_buckets(df, n_buckets)
-    laid_out = (df.repartitionByRange(n, *keys)
-                  .sortWithinPartitions(*keys))
-    # Every write is a new file GENERATION: stage, then move parts in
-    # under generation-unique names. The input plan may read the table
-    # itself (MERGE, INSERT ... SELECT FROM self, OPTIMIZE) — staging
-    # first means we never overwrite our own input. On overwrite the
-    # previous generation's files are RETIRED in place (kept on disk for
-    # time travel until VACUUM, invisible to readers — reads go by the
-    # catalog's explicit file list); the catalog update is the atomic
-    # commit.
-    new_paths = _stage_and_move(laid_out, tbl)
-    new_entries = harvest_file_index(tbl.data_dir, keys, paths=new_paths,
-                                     bloom_cols=_bloom_cols(tbl))
-    if mode == "overwrite":
-        return catalog.update_file_index(table, new_entries, append=False,
-                                         op=op or "overwrite",
-                                         properties=commit_properties,
-                                         base_version=base_version)
-    return catalog.update_file_index(table, new_entries, append=True,
-                                     op=op or "append",
-                                     properties=commit_properties)
+    paths = _stage(_range_layout(df, keys, _n_buckets(df, n_buckets)), tbl,
+                   f"g{tbl.version + 1}", None, None)
+    # Overwrite retires the previous generation's files in place (kept
+    # on disk for time travel until VACUUM, invisible to readers).
+    overwrite = mode == "overwrite"
+    return _commit(catalog, tbl, paths, [] if overwrite else None,
+                   op or ("overwrite" if overwrite else "append"),
+                   base_version, commit_properties, {})
+
+
+def _range_layout(df: DataFrame, keys: list[str], n: int) -> DataFrame:
+    """The range layout: ``n`` files with disjoint key ranges, each
+    sorted by key."""
+    return df.repartitionByRange(n, *keys).sortWithinPartitions(*keys)
 
 
 def _conform(df: DataFrame, tbl: KeyTable) -> DataFrame:
@@ -278,31 +284,21 @@ def put_rows(catalog: HeraclesCatalog, tbl: KeyTable, rows,
     keys non-null, already cast and checked) into ``tbl`` as one parquet
     file, on the driver, with no Spark job (≙ HBase ``Put``). The rows
     are sorted by key and written under a generation-unique name in the
-    data dir (nothing when there are none); the file's index entry is
-    harvested from its footer like any other. ``keep=None`` appends;
-    otherwise the new file replaces every live file not in ``keep``
-    (retired in place, as in ``write_cow_files``), committed against
-    ``base_version``."""
-    entries: list[dict[str, Any]] = []
+    data dir (nothing when there are none), then committed by
+    ``_commit`` with ``keep``, ``op`` and ``base_version``."""
+    paths: list[str] = []
+    nulls: dict[str, int] = {}
     if rows.num_rows:
         path = os.path.join(
             tbl.data_dir, f"g{tbl.version + 1}-put-{uuid.uuid4().hex}.parquet")
         rows = rows.sort_by([(k, "ascending") for k in tbl.key_cols])
         nan = _nan_columns(rows)
         _write_like_spark(rows, path, nan)
-        entries = harvest_file_index(tbl.data_dir, tbl.key_cols, paths=[path])
-        if nan:
-            # A NaN column's footer has no statistics; its null count,
-            # which Spark's footer would have recorded, is known here.
-            nulls = entries[0].setdefault("nulls", {})
-            nulls.update({c: rows.column(c).null_count for c in nan})
-            entries[0]["nulls"] = dict(sorted(nulls.items()))
-    if keep is None:
-        return catalog.update_file_index(tbl.name, entries, append=True,
-                                         op=op)
-    return catalog.update_file_index(tbl.name, list(keep) + entries,
-                                     append=False, op=op,
-                                     base_version=base_version)
+        paths = [path]
+        # A NaN column's footer has no statistics; its null count,
+        # which Spark's footer would have recorded, is known here.
+        nulls = {c: rows.column(c).null_count for c in nan}
+    return _commit(catalog, tbl, paths, keep, op, base_version, None, nulls)
 
 
 def _bloom_cols(tbl: KeyTable) -> list[str]:
@@ -311,15 +307,23 @@ def _bloom_cols(tbl: KeyTable) -> list[str]:
     return _bloom.bloom_cols(tbl.properties)
 
 
-def _stage_and_move(laid_out: DataFrame, tbl: KeyTable) -> list[str]:
-    """Write a new file generation: parquet into a sibling staging dir,
-    then move the parts into the data dir as ``g<version>-<part>``.
-    Version numbers are monotone, so generations never collide (single
-    writer per table — the reference's model too)."""
+def _stage(laid_out: DataFrame, tbl: KeyTable, tag: str,
+           staging: "str | None", publish) -> list[str]:
+    """The funnel's stage-and-move step: write ``laid_out`` as parquet
+    into a staging dir, then move the parts into the data dir as
+    ``<tag>-<part>`` and return their paths. Staging first means a plan
+    that reads the table itself (MERGE, INSERT ... SELECT FROM self,
+    OPTIMIZE) never overwrites its own input.
+
+    ``staging`` is None for a directory unique to this write, so two
+    writers of one table never share (or remove) each other's staged
+    parts; the stream passes its per-batch dir. ``publish`` (the
+    stream's commit marker, or None) receives the [staged, final] path
+    pairs before any move; once it has run, a failed move leaves
+    staging in place for the replay to finish."""
     import shutil
 
-    staging = tbl.data_dir.rstrip("/") + "~staging"
-    shutil.rmtree(staging, ignore_errors=True)
+    staging = staging or f"{tbl.data_dir.rstrip('/')}~stage-{uuid.uuid4().hex}"
     w = laid_out.write.mode("overwrite")
     ndv = tbl.properties.get("bloomNdv", "100000")
     for c in _bloom_cols(tbl):
@@ -331,17 +335,48 @@ def _stage_and_move(laid_out: DataFrame, tbl: KeyTable) -> list[str]:
         # distinct values per file; parquet sizes ~1.2 bytes per value).
         w = (w.option(f"parquet.bloom.filter.enabled#{c}", "true")
               .option(f"parquet.bloom.filter.expected.ndv#{c}", ndv))
-    w.parquet(staging)
-    tag = f"g{tbl.version + 1}"
-    out: list[str] = []
-    for fn in sorted(os.listdir(staging)):
-        if not fn.endswith(".parquet"):
-            continue
-        dst = os.path.join(tbl.data_dir, f"{tag}-{fn}")
-        os.replace(os.path.join(staging, fn), dst)
-        out.append(dst)
-    shutil.rmtree(staging, ignore_errors=True)
-    return out
+    pending = False
+    try:
+        w.parquet(staging)
+        moves = [[os.path.join(staging, fn),
+                  os.path.join(tbl.data_dir, f"{tag}-{fn}")]
+                 for fn in sorted(os.listdir(staging))
+                 if fn.endswith(".parquet")]
+        if publish is not None:
+            publish(moves)
+            pending = True
+        for src, dst in moves:
+            os.replace(src, dst)
+        pending = False
+    finally:
+        if not pending:
+            shutil.rmtree(staging, ignore_errors=True)
+    return [dst for _, dst in moves]
+
+
+def _commit(catalog: HeraclesCatalog, tbl: KeyTable, paths: list[str],
+            keep: "list[dict[str, Any]] | None", op: str,
+            base_version: "int | None",
+            properties: "dict[str, str] | None",
+            nulls: dict[str, int]) -> KeyTable:
+    """The funnel's harvest-and-commit step: index the new files
+    ``paths`` from their footers (plus catalog blooms of the table's
+    ``bloomCols``) and commit them — appended when ``keep`` is None,
+    otherwise in place of every live file not in ``keep`` (retired in
+    place: still on disk for time travel until VACUUM). A non-None
+    ``base_version`` makes a moved table raise instead of dropping a
+    concurrent writer's files; ``properties`` ride the same commit.
+    ``nulls`` fills the null counts a footer without statistics lacks
+    (``put_rows``'s NaN columns)."""
+    entries = harvest_file_index(paths, _bloom_cols(tbl))
+    if nulls:
+        for e in entries:
+            e["nulls"] = dict(sorted({**e.get("nulls", {}),
+                                      **nulls}.items()))
+    return catalog.update_file_index(
+        tbl.name, entries if keep is None else list(keep) + entries,
+        append=keep is None, op=op, properties=properties,
+        base_version=base_version)
 
 
 def bulk_load_csv(spark: SparkSession, catalog: HeraclesCatalog, table: str,
@@ -456,40 +491,27 @@ def insert_rows(spark: SparkSession, catalog: HeraclesCatalog, table: str,
                     None, "append", None)
 
 
-def harvest_file_index(data_dir: str, key_cols: list[str],
-                       paths: list[str] | None = None,
+def harvest_file_index(paths: list[str],
                        bloom_cols: list[str] | None = None
                        ) -> list[dict[str, Any]]:
-    """Per-file min/max of every leaf column plus per-column null
-    counts, from parquet footers (no data read). ``key_cols`` is kept
-    for signature stability; since round 13 every column with sound
-    footer stats is harvested (non-key stats power pruning and
-    range-covered metadata COUNTs on correlated columns, null counts
-    make the MUST reduction decidable for nullable columns).
+    """Index entries of the parquet files ``paths``: per-file min/max of
+    every leaf column plus per-column null counts, from the footers (no
+    data read). Non-key stats power pruning and range-covered metadata
+    COUNTs on correlated columns; null counts make the MUST reduction
+    decidable for nullable columns.
 
     ≙ region boundary metadata (HBasePartition.scala:29-38). Footer stats
     are exact for the types we allow (no truncated binary stats at these
     value sizes matters only for very long strings — acceptable: pruning
     is advisory, the scan re-filters).
 
-    ``paths`` restricts harvesting to those files (incremental index
-    maintenance — copy-on-write MERGE splices new entries into the index
-    instead of re-reading every footer in the table).
-
     ``bloom_cols`` additionally builds a per-file bloom filter per listed
-    column (one column read per file — incremental like the min/max
-    harvest; see heracles_spark.bloom for the file-skipping story).
+    column (one column read per file; see heracles_spark.bloom for the
+    file-skipping story).
     """
     import pyarrow.parquet as pq
 
     from heracles_spark import bloom as _bloom
-
-    if paths is None:
-        paths = []
-        for root, _, names in os.walk(data_dir):
-            for fn in sorted(names):
-                if fn.endswith(".parquet"):
-                    paths.append(os.path.join(root, fn))
 
     out: list[dict[str, Any]] = []
     for path in paths:
@@ -611,8 +633,7 @@ def restore_table(catalog: HeraclesCatalog, table: str,
         raise CatalogError(
             f"{table}@v{version}: {len(missing)} data files were "
             f"VACUUMed; cannot restore")
-    files = harvest_file_index(tbl.data_dir, tbl.key_cols,
-                               paths=list(entry["paths"]))
+    files = harvest_file_index(list(entry["paths"]))
     return catalog.update_file_index(table, files, append=False,
                                      op=f"restore:v{version}")
 
@@ -728,40 +749,38 @@ def append_batch_exactly_once(spark: SparkSession, catalog: HeraclesCatalog,
     atomic-rename object-store/HDFS commit — the protocol is unchanged.
     """
     import json
+    import shutil
 
     tbl = catalog.get_table(table)
-    keys = tbl.key_cols
     commits_dir = os.path.join(tbl.data_dir, "_batch_commits")
     os.makedirs(commits_dir, exist_ok=True)
     marker = os.path.join(commits_dir, f"{batch_id}.json")
     staging = tbl.data_dir.rstrip("/") + f"~batch{batch_id}stage"
 
-    def _publish(moves: list[list[str]]) -> KeyTable:
-        for src, dst in moves:
-            if not os.path.exists(dst) and os.path.exists(src):
-                os.replace(src, dst)
+    def _publish(moves: list[list[str]]) -> None:
+        tmp = marker + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(moves, fh)
+        os.replace(tmp, marker)                # atomic commit point
+
+    def _commit_batch(dsts: list[str]) -> KeyTable:
         # A marker-listed file must now exist at its final path: the
         # marker is the commit record, so a file in neither staging nor
         # its final location means committed data was lost (e.g. an
         # over-eager VACUUM removed it before the index referenced it).
         # Publishing the remainder would silently drop rows — refuse.
-        lost = [dst for _, dst in moves if not os.path.exists(dst)]
+        lost = [dst for dst in dsts if not os.path.exists(dst)]
         if lost:
             raise IOError(
                 f"batch {batch_id} replay: {len(lost)} committed file(s) "
                 f"missing from both staging and {tbl.data_dir} "
                 f"(first: {lost[0]}); data loss — restore the files or "
                 f"delete the marker {marker} to re-ingest the batch")
-        import shutil
         shutil.rmtree(staging, ignore_errors=True)
-        dsts = [d for _, d in moves]
-        new_entries = harvest_file_index(tbl.data_dir, keys, paths=dsts,
-                                         bloom_cols=_bloom_cols(tbl))
         dset = set(dsts)
-        kept = [f for f in tbl.files if f["path"] not in dset]
-        out = catalog.update_file_index(table, kept + new_entries,
-                                        append=False, op="stream-append",
-                                        base_version=tbl.version)
+        out = _commit(catalog, tbl, dsts,
+                      [f for f in tbl.files if f["path"] not in dset],
+                      "stream-append", tbl.version, None, {})
         # The checkpointed stream replays at most the LAST uncommitted
         # batch: once this batch's index commit lands, older markers can
         # never be replayed — prune them so VACUUM's marker protection
@@ -777,30 +796,16 @@ def append_batch_exactly_once(spark: SparkSession, catalog: HeraclesCatalog,
 
     if os.path.exists(marker):                 # replay of a committed batch
         with open(marker) as fh:
-            return _publish(json.load(fh))
+            moves = json.load(fh)
+        for src, dst in moves:
+            if not os.path.exists(dst) and os.path.exists(src):
+                os.replace(src, dst)
+        return _commit_batch([dst for _, dst in moves])
 
-    fields = tbl.schema().fields
-    if len(df.columns) != len(fields):
-        raise ValueError(f"column count mismatch for {table}")
-    df = df.toDF(*[f.name for f in fields])
-    df = df.select(*[F.col(f.name).cast(f.dataType) for f in fields])
-    df = df.where(F.expr(" AND ".join(f"`{k}` IS NOT NULL" for k in keys)))
-
-    import shutil
-    shutil.rmtree(staging, ignore_errors=True)
-    n = _n_buckets(df, n_buckets)
-    (df.repartitionByRange(n, *keys)
-       .sortWithinPartitions(*keys)
-       .write.mode("overwrite").parquet(staging))
-
-    moves = [[os.path.join(staging, fn),
-              os.path.join(tbl.data_dir, f"b{batch_id}-{fn}")]
-             for fn in sorted(os.listdir(staging)) if fn.endswith(".parquet")]
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(moves, fh)
-    os.replace(tmp, marker)                    # atomic commit point
-    return _publish(moves)
+    df = _conform(df, tbl)
+    return _commit_batch(_stage(
+        _range_layout(df, tbl.key_cols, _n_buckets(df, n_buckets)), tbl,
+        f"b{batch_id}", staging, _publish))
 
 
 def write_cow_files(spark: SparkSession, catalog: HeraclesCatalog,
@@ -820,10 +825,8 @@ def write_cow_files(spark: SparkSession, catalog: HeraclesCatalog,
     ranges may overlap the kept files' ranges (pruning stays correct —
     per-file min/max boxes are independent — just marginally less tight
     than a full global re-sort, which `OPTIMIZE`-style maintenance can
-    restore).
-
-    ``df`` must already have the table's exact schema (the caller — MERGE
-    — produces it from the table's own columns).
+    restore). Kept entries stay as-is (no footer re-read); only the new
+    files are harvested — O(touched), not O(table).
 
     ``n_buckets`` sizes the rewrite. UPDATE and DELETE pass the touched
     files' recorded row count through ``buckets_for_rows`` (exact for
@@ -831,53 +834,17 @@ def write_cow_files(spark: SparkSession, catalog: HeraclesCatalog,
     count, so none of them scans ``df`` to size it; when it is None
     (MERGE) ``df`` is counted first.
     """
-    import uuid
-
     tbl = catalog.get_table(table)
     if base_version is None:
         # OCC read-version: the kept-file list is only valid against
-        # this snapshot — the commit below raises on a concurrent
-        # foreign write instead of dropping its files (round-10).
+        # this snapshot — the commit raises on a concurrent foreign
+        # write instead of dropping its files.
         base_version = tbl.version
-    keys = tbl.key_cols
-    keep_paths = {f["path"] for f in keep}
-    old_paths = [f["path"] for f in tbl.files if f["path"] not in keep_paths]
-
-    df = df.select(*[F.col(f.name).cast(f.dataType)
-                     for f in tbl.schema().fields])
-    df = df.where(F.expr(" AND ".join(f"`{k}` IS NOT NULL" for k in keys)))
-    validate_constraints(df, tbl)
-
-    staging = tbl.data_dir.rstrip("/") + "~cowstage"
-    import shutil
-    shutil.rmtree(staging, ignore_errors=True)
-    n = _n_buckets(df, n_buckets)
-    (df.repartitionByRange(n, *keys)
-       .sortWithinPartitions(*keys)
-       .write.mode("overwrite").parquet(staging))
-
-    # Move staged parts into the data dir under collision-free names,
-    # then splice the index: kept entries stay as-is (no footer re-read),
-    # new entries are harvested from the new files only — O(touched),
-    # not O(table). The replaced files are RETIRED in place: still on
-    # disk for time travel, dropped from the index, reclaimed by VACUUM.
-    token = uuid.uuid4().hex[:12]
-    new_paths: list[str] = []
-    for fn in sorted(os.listdir(staging)):
-        if not fn.endswith(".parquet"):
-            continue
-        dst = os.path.join(tbl.data_dir, f"cow-{token}-{fn}")
-        os.replace(os.path.join(staging, fn), dst)
-        new_paths.append(dst)
-    shutil.rmtree(staging, ignore_errors=True)
-    del old_paths   # retired, not deleted
-
-    new_entries = harvest_file_index(tbl.data_dir, keys, paths=new_paths,
-                                     bloom_cols=_bloom_cols(tbl))
-    return catalog.update_file_index(table, list(keep) + new_entries,
-                                     append=False, op=op,
-                                     properties=commit_properties,
-                                     base_version=base_version)
+    df = _conform(df, tbl)
+    paths = _stage(_range_layout(df, tbl.key_cols, _n_buckets(df, n_buckets)),
+                   tbl, f"g{tbl.version + 1}", None, None)
+    return _commit(catalog, tbl, paths, keep, op, base_version,
+                   commit_properties, {})
 
 
 def compact_small_files(spark: SparkSession, catalog: HeraclesCatalog,

@@ -180,11 +180,7 @@ def write_zordered(spark, catalog: HeraclesCatalog, table: str,
     from heracles_spark import writer
 
     tbl = catalog.get_table(table)
-    fields = tbl.schema().fields
-    df = df.toDF(*[f.name for f in fields])
-    df = df.select(*[F.col(f.name).cast(f.dataType) for f in fields])
-    df = df.where(F.expr(" AND ".join(
-        f"`{k}` IS NOT NULL" for k in tbl.key_cols)))
+    df = writer._conform(df, tbl)
     stats = df.agg(*[f(F.col(k).cast("double")).alias(f"{tag}_{k}")
                      for k in tbl.key_cols
                      for tag, f in (("lo", F.min), ("hi", F.max))]).first()
@@ -200,13 +196,11 @@ def write_zordered(spark, catalog: HeraclesCatalog, table: str,
     laid_out = (df.repartitionByRange(n_buckets, "__z")
                   .sortWithinPartitions("__z")
                   .drop("__z"))
-    new_paths = writer._stage_and_move(laid_out, tbl)
-    files = writer.harvest_file_index(tbl.data_dir, tbl.key_cols,
-                                      paths=new_paths)
+    paths = writer._stage(laid_out, tbl, f"g{tbl.version + 1}", None, None)
     # Overwrite replaces the whole file set computed from THIS snapshot
-    # — OCC-guard it so a concurrent foreign append isn't dropped
-    # (round-10 multi-writer); appends compose and need no guard.
-    return catalog.update_file_index(table, files, append=(mode == "append"),
-                                     op=f"zorder-{curve}",
-                                     base_version=(None if mode == "append"
-                                                   else tbl.version))
+    # — OCC-guard it so a concurrent foreign append isn't dropped;
+    # appends compose and need no guard.
+    append = mode == "append"
+    return writer._commit(catalog, tbl, paths, None if append else [],
+                          f"zorder-{curve}", None if append else tbl.version,
+                          None, {})

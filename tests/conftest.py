@@ -48,6 +48,34 @@ def hsession(spark, catalog):
     return h
 
 
+@pytest.fixture()
+def bloom_offsets(spark):
+    """``offsets(path)`` → {column: the smallest parquet bloom filter
+    offset over the file's row groups}, read from the footer through
+    Spark's bundled parquet-mr (``ColumnChunkMetaData.
+    getBloomFilterOffset``; pyarrow does not expose it). -1 means some
+    row group of that column has no bloom filter."""
+    jvm = spark._jvm
+
+    def offsets(path: str) -> dict[str, int]:
+        f = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(path),
+            spark._jsc.hadoopConfiguration())
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(f)
+        try:
+            out: dict[str, int] = {}
+            for block in reader.getFooter().getBlocks():
+                for col in block.getColumns():
+                    name = col.getPath().toDotString()
+                    off = col.getBloomFilterOffset()
+                    out[name] = min(out.get(name, off), off)
+            return out
+        finally:
+            reader.close()
+
+    return offsets
+
+
 # ---------------------------------------------------------------------
 # Sharded full-suite runner (round-13 judge ask #2).
 #

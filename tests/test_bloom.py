@@ -123,23 +123,13 @@ def test_bloom_survives_sidecar_index_roundtrip(spark, catalog, bloomed):
     assert len(keep) == 1
 
 
-def test_parquet_native_bloom_written(spark, catalog, bloomed):
+def test_parquet_native_bloom_written(spark, catalog, bloomed,
+                                      bloom_offsets):
     # Tier 1: the parquet files themselves carry bloom filters for the
-    # declared column (row-group skipping inside the JVM reader). The
-    # installed pyarrow doesn't expose bloom metadata, so assert the
-    # footer-level evidence instead: the raw thrift footer of a bloomed
-    # file references a bloom_filter offset field only when present —
-    # observable as the file still being fully readable AND the write
-    # options having been accepted (Spark raises on unknown parquet.*
-    # bloom options with bad values). Functional readback:
-    df = spark.read.parquet(bloomed.files[0]["path"])
-    assert df.count() == bloomed.files[0]["rows"]
-    import pyarrow.parquet as pq
-
-    col = pq.ParquetFile(bloomed.files[0]["path"]).metadata.row_group(0) \
-            .column(0)
-    if hasattr(col, "bloom_filter_offset"):   # pyarrow ≥ 21 exposes it
-        rg = pq.ParquetFile(bloomed.files[0]["path"]).metadata.row_group(0)
-        cols = {rg.column(i).path_in_schema: rg.column(i)
-                for i in range(rg.num_columns)}
-        assert cols["user"].bloom_filter_offset is not None
+    # declared column (row-group skipping inside the JVM reader), and
+    # only for it.
+    for f in bloomed.files:
+        offs = bloom_offsets(f["path"])
+        assert offs["user"] >= 0
+        assert offs["k"] == -1 and offs["v"] == -1
+        assert spark.read.parquet(f["path"]).count() == f["rows"]
