@@ -32,14 +32,17 @@ always re-applied row-level inside the rewrite.
 Point-put (≙ HBase ``Put``/``Delete`` of the touched rows; see
 heracles_spark.writer): when the touched files hold at most
 ``pruning.LOCAL_SCAN_ROWS`` rows and ``pruning.read_local`` can read
-them, they are read on the driver and split by ``pruning.key_mask``
-into candidates and rows whose keys cannot satisfy the WHERE. Spark
-evaluates the WHERE and the SET over a ``LocalRelation`` of the
-candidates only (no job); the other rows are copied unchanged, and
-``writer.put_rows`` writes the result as one file. ``rows_affected``
-comes from the collected candidates. ``LAST_DML_STATS["write"]`` says
-which path ran: ``"local"``, ``"spark"``, or None when no file
-is touched.
+them, they are read on the driver and split by ``pruning.eval_arrow``'s
+exact mask of the compiled conjuncts into candidates (the rows for
+which they are TRUE) and rows that cannot satisfy the WHERE. When every
+conjunct compiled, the candidates are exactly the matched rows: a
+DELETE keeps the others and counts the candidates on the driver, with
+no DataFrame. Otherwise Spark evaluates the WHERE over a
+``LocalRelation`` of the candidates only (no job); an UPDATE always
+lets Spark evaluate the SET there. The other rows are copied unchanged,
+and ``writer.put_rows`` writes the result as one file.
+``LAST_DML_STATS["write"]`` says which path ran: ``"local"``,
+``"spark"``, or None when no file is touched.
 
 On the Spark path (larger touched sets, files ``read_local`` declines,
 tables with ``bloomCols``) the rewrite is sized from the touched files'
@@ -59,8 +62,8 @@ from pyspark.sql import functions as F
 
 from heracles_spark.catalog import (HeraclesCatalog, KeyTable, local_frame,
                                     recorded_rows)
-from heracles_spark.pruning import (key_mask, parse_where, prune_files,
-                                    read_local, to_nnf)
+from heracles_spark.pruning import (eval_arrow, parse_where, prune_files,
+                                    read_local)
 from heracles_spark.sqltext import split_top_and
 
 # Observability for tests / EXPLAIN-style introspection.
@@ -72,23 +75,33 @@ def where_to_pruning_pred(where: str | None,
     """The pruning AST of the WHERE clause's top-level AND conjuncts
     that ``pruning.parse_where`` compiles against ``col_types``, ANDed;
     None when none does. Dropping a conjunct only loosens pruning."""
+    return _compile_where(where, col_types)[0]
+
+
+def _compile_where(where: str | None, col_types: dict[str, str]):
+    """(``where_to_pruning_pred``'s AST, whether it is the whole WHERE:
+    every conjunct compiled, or there is no WHERE)."""
     if not where:
-        return None
-    preds = [p for c in split_top_and(where) or [where]
-             if (p := parse_where(c, col_types, None)) is not None]
-    if not preds:
-        return None
-    return preds[0] if len(preds) == 1 else ("and", *preds)
+        return None, True
+    preds = [parse_where(c, col_types, None)
+             for c in split_top_and(where) or [where]]
+    kept = [p for p in preds if p is not None]
+    if not kept:
+        return None, False
+    return (kept[0] if len(kept) == 1 else ("and", *kept),
+            len(kept) == len(preds))
 
 
 def _touched_and_kept(tbl: KeyTable, where: str | None):
-    """(pruning AST, files the WHERE may touch, files it cannot)."""
-    pred = where_to_pruning_pred(where, dict(tbl.columns))
+    """(pruning AST, whether it is the whole WHERE, files the WHERE may
+    touch, files it cannot)."""
+    pred, exact = _compile_where(where, dict(tbl.columns))
     if pred is None:
-        return None, list(tbl.files), []
+        return None, exact, list(tbl.files), []
     touched = prune_files(tbl.files, pred, tbl.key_cols)
     tpaths = {f["path"] for f in touched}
-    return pred, touched, [f for f in tbl.files if f["path"] not in tpaths]
+    return (pred, exact, touched,
+            [f for f in tbl.files if f["path"] not in tpaths])
 
 
 def _read_files(spark: SparkSession, tbl: KeyTable, files: list[dict]):
@@ -99,9 +112,9 @@ def _read_files(spark: SparkSession, tbl: KeyTable, files: list[dict]):
 
 
 def _local_split(tbl: KeyTable, touched: list[dict], pred: tuple | None):
-    """The touched rows read on the driver, as (candidates, rows whose
-    keys cannot satisfy ``pred``) Arrow tables, or None for the Spark
-    path (see the module docstring)."""
+    """The touched rows read on the driver, as (rows for which ``pred``
+    is TRUE, the others) Arrow tables, or None for the Spark path (see
+    the module docstring)."""
     import pyarrow.compute as pc
 
     from heracles_spark import writer
@@ -112,11 +125,12 @@ def _local_split(tbl: KeyTable, touched: list[dict], pred: tuple | None):
     rows = read_local(tbl, touched, None)
     if rows is None:
         return None
-    mask = None if pred is None else key_mask(to_nnf(pred), rows,
-                                              tbl.key_cols)
-    if mask is None:
+    if pred is None:
         return rows, rows.slice(0, 0)
-    mask = pc.fill_null(mask, True)
+    mask = eval_arrow(pred, rows)
+    if mask is None:
+        return None             # not covered: read_local's rule
+    mask = pc.fill_null(mask, False)
     return rows.filter(mask), rows.filter(pc.invert(mask))
 
 
@@ -127,7 +141,7 @@ def _hit(where: str | None):
 
 def _put(catalog: HeraclesCatalog, tbl: KeyTable, others, out,
          kept: list[dict]) -> KeyTable:
-    """Commit ``others`` plus the Arrow rows ``out`` as one new file in
+    """Commit the Arrow rows ``others`` plus ``out`` as one new file in
     place of the touched files."""
     import pyarrow as pa
 
@@ -144,7 +158,7 @@ def delete_from(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     from heracles_spark import writer
 
     tbl = catalog.get_table(table)
-    pred, touched, kept = _touched_and_kept(tbl, where)
+    pred, exact, touched, kept = _touched_and_kept(tbl, where)
     stats = {"op": "delete", "files_total": len(tbl.files),
              "files_rewritten": len(touched)}
     if not touched:
@@ -153,9 +167,13 @@ def delete_from(spark: SparkSession, catalog: HeraclesCatalog, table: str,
     split = _local_split(tbl, touched, pred)
     if split is not None:
         cand, others = split
-        df = local_frame(spark, cand, tbl.schema()).where(~_hit(where))
-        writer.validate_constraints(df, tbl)
-        survivors = writer.collect_local(df, tbl.schema())
+        if exact:
+            # The AST is the whole WHERE: every candidate is deleted.
+            survivors = cand.slice(0, 0)
+        else:
+            df = local_frame(spark, cand, tbl.schema()).where(~_hit(where))
+            writer.validate_constraints(df, tbl)
+            survivors = writer.collect_local(df, tbl.schema())
         out = _put(catalog, tbl, others, survivors, kept)
         LAST_DML_STATS = {**stats, "write": "local",
                           "rows_affected": cand.num_rows - survivors.num_rows}
@@ -200,7 +218,7 @@ def update_table(spark: SparkSession, catalog: HeraclesCatalog, table: str,
             raise ValueError(f"UPDATE: column {col!r} is SET twice")
         sets[col] = rhs
 
-    pred, touched, kept = _touched_and_kept(tbl, where)
+    pred, _exact, touched, kept = _touched_and_kept(tbl, where)
     stats = {"op": "update", "files_total": len(tbl.files),
              "files_rewritten": len(touched)}
     if not touched:

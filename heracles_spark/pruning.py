@@ -24,13 +24,18 @@ points and narrow ranges become batched ``Get``s instead of a scan):
 when the surviving files hold at most ``LOCAL_SCAN_ROWS`` rows (by the
 index's recorded ``rows``, decided before anything is read; the bound
 covers the small pruned sets of serving reads, where it was measured),
-``read_local`` reads them on the driver with pyarrow and keeps the rows
-whose keys MAY satisfy the predicate (``may_match`` over each row as a
-one-point box, vectorized); ``scan`` hands them to Spark as a JVM
-``LocalRelation``. Spark still applies the full predicate, and a
-collect runs no job. Anything larger is read by ``spark.read.parquet``
-as before. Parquet INT96 timestamps come back from pyarrow as naive
-values; they are UTC instants and are read as such.
+``read_local`` reads them on the driver with pyarrow and keeps exactly
+the rows for which the predicate is TRUE: ``eval_arrow`` evaluates it
+with pyarrow compute under SQL's three-valued logic and Spark's
+comparison semantics (≙ the reference's server-side filters, evaluated
+next to the data). ``scan`` hands the kept rows to Spark as a JVM
+``LocalRelation`` with no filter over it, so a collect runs no job; the
+range COUNT and UPDATE/DELETE use the same evaluator. A predicate
+``eval_arrow`` does not cover (a literal of another type, from a
+library caller) and anything larger are read by ``spark.read.parquet``
+with the predicate as a Spark filter. Parquet INT96 timestamps come
+back from pyarrow as naive values; they are UTC instants and are read
+as such.
 
 Predicate AST (tuples, nestable):
     ("and", p, q...)   ("or", p, q...)   ("not", p)
@@ -525,81 +530,130 @@ def _read_file(pf, arrow):
     return pa.Table.from_arrays(cols, schema=arrow)
 
 
-def _lit_type(arrow_type):
-    """The Python type a literal needs to be compared exactly against
-    a column of ``arrow_type``: integral and string columns only.
-    Floats are excluded (Spark orders NaN above every number), and so
-    is every other type."""
-    import pyarrow as pa
-
-    if pa.types.is_integer(arrow_type):
-        return int
-    if pa.types.is_string(arrow_type):
-        return str
-    return None
-
-
 _ARROW_CMP = {"=": "equal", "!=": "not_equal", "<": "less",
               "<=": "less_equal", ">": "greater", ">=": "greater_equal"}
 
 
-def key_mask(pred: tuple, table, key_cols: list[str]):
-    """Rows of ``table`` whose keys MAY satisfy NNF ``pred`` —
-    ``may_match`` over each row as a one-point box — as a boolean mask,
-    or None for every row. Sound by the file-pruning argument: a row
-    Spark's WHERE keeps satisfies ``pred``, and a one-point box holding
-    a satisfying row MAY match. Only key atoms on integral or string
-    columns with a literal of the matching Python type decide; non-key
-    atoms, NOT, float keys and mismatched literals keep every row (a
-    string literal against an int key is cast by Spark)."""
+def _arrow_operand(arrow_type):
+    """The Arrow type a column of ``arrow_type`` is compared in, or None
+    for a column ``eval_arrow`` does not cover: integral columns compare
+    as BIGINT (Spark widens the column to the literal's type), float
+    and double columns as DOUBLE, strings as UTF-8 bytes, dates as
+    days."""
+    import pyarrow as pa
+
+    if pa.types.is_signed_integer(arrow_type):
+        return pa.int64()
+    if pa.types.is_float32(arrow_type) or pa.types.is_float64(arrow_type):
+        return pa.float64()
+    if pa.types.is_string(arrow_type) or pa.types.is_date32(arrow_type):
+        return arrow_type
+    return None
+
+
+def _arrow_literal(as_type, v):
+    """``parse_where``'s literal ``v`` as a value of ``_arrow_operand``
+    type ``as_type`` (an ``int``, a non-NaN ``float``, a ``str``, a
+    canonical ``'YYYY-MM-DD'`` string); TypeError for any other."""
+    import pyarrow as pa
+
+    if pa.types.is_int64(as_type) and type(v) is int:
+        return v
+    if pa.types.is_float64(as_type) and type(v) is float \
+            and not math.isnan(v):
+        return v + 0.0                 # -0.0 → 0.0: SQL says they are =
+    if pa.types.is_string(as_type) and type(v) is str:
+        return v
+    if pa.types.is_date32(as_type) and type(v) is str \
+            and _ISO_DATE.fullmatch(v):
+        return datetime.date.fromisoformat(v)
+    raise TypeError(f"{v!r} is not a literal for a {as_type} column")
+
+
+def _compile_arrow(pred: tuple, schema):
+    """``pred`` compiled against Arrow ``schema``: a function from a
+    table in that schema to the predicate's Kleene mask, or None when
+    some atom is not covered (see ``eval_arrow``). Deciding from the
+    schema alone lets ``read_local`` decline before reading a file."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     op = pred[0].lower()
-    if op in ("and", "or"):
-        masks = [key_mask(p, table, key_cols) for p in pred[1:]]
-        if op == "or" and None in masks:
+    if op in ("and", "or", "not"):
+        parts = [_compile_arrow(p, schema) for p in pred[1:]]
+        if None in parts:
             return None
-        masks = [m for m in masks if m is not None]
-        if not masks:
-            return None
-        return functools.reduce(
-            pc.and_kleene if op == "and" else pc.or_kleene, masks)
-    if op == "not" or pred[1] not in key_cols:
+        if op == "not":
+            return lambda t: pc.invert(parts[0](t))
+        join = pc.and_kleene if op == "and" else pc.or_kleene
+        return lambda t: functools.reduce(join, [f(t) for f in parts])
+    i = schema.get_field_index(pred[1])
+    if i < 0:
         return None
-    col = table.column(pred[1])
     if op == "isnull":
-        return pc.is_null(col)
+        return lambda t: pc.is_null(t.column(i))
     if op == "isnotnull":
-        return pc.is_valid(col)
-    vals = pred[2] if op == "in" else pred[2:]
-    want = _lit_type(col.type)
-    if want is None or any(type(v) is not want for v in vals):
+        return lambda t: pc.is_valid(t.column(i))
+    as_type = _arrow_operand(schema.field(i).type)
+    if as_type is None or op not in (*_ARROW_CMP, "in", "between"):
         return None
     try:
-        if op == "in":
-            return pc.is_in(col, value_set=pa.array(vals, col.type))
-        lits = [pa.scalar(v, col.type) for v in vals]
-    except (pa.ArrowException, OverflowError):
+        lits = pa.array([_arrow_literal(as_type, v) for v in
+                         (pred[2] if op == "in" else pred[2:])], as_type)
+    except (TypeError, ValueError, OverflowError, pa.ArrowException):
         return None             # e.g. a literal outside the column's range
-    if op == "between":
-        return pc.and_kleene(pc.greater_equal(col, lits[0]),
-                             pc.less_equal(col, lits[1]))
-    return getattr(pc, _ARROW_CMP[op])(col, lits[0])
+    floating = pa.types.is_floating(as_type)
+
+    def cmp(c, o, v):
+        m = getattr(pc, _ARROW_CMP[o])(c, v)
+        # Spark orders NaN above every number (IEEE says unordered).
+        return pc.or_kleene(m, pc.is_nan(c)) if floating and o in (
+            ">", ">=") else m
+
+    def mask(t):
+        c = t.column(i)
+        if c.type != as_type:
+            c = c.cast(as_type)
+        if op == "between":
+            return pc.and_kleene(cmp(c, ">=", lits[0]), cmp(c, "<=", lits[1]))
+        if op != "in":
+            return cmp(c, op, lits[0])
+        if floating:
+            c = pc.add(c, 0.0)                  # -0.0 → 0.0 for the hash
+        # is_in says FALSE for a NULL input; SQL says NULL.
+        return pc.if_else(pc.is_valid(c), pc.is_in(c, value_set=lits), None)
+
+    return mask
+
+
+def eval_arrow(pred: tuple, table):
+    """SQL's three-valued mask of pruning AST ``pred`` over Arrow
+    ``table`` (TRUE, FALSE or NULL per row; a WHERE keeps the TRUE
+    rows), computed with pyarrow compute exactly as Spark evaluates
+    ``to_sql(pred)`` — or None when some atom is not covered. Covered:
+    every AST ``parse_where`` emits, i.e. IS [NOT] NULL on any column
+    and comparisons, IN and BETWEEN on integral, float/double, string
+    and date columns with literals of ``parse_where``'s types. Spark's
+    float semantics hold: NaN = NaN, NaN sorts above every number and
+    -0.0 = 0.0. A literal outside the column's range, or of another
+    type, is not covered (None), never an error."""
+    fn = _compile_arrow(pred, table.schema)
+    return None if fn is None else fn(table)
 
 
 def read_local(tbl: KeyTable, files: list[dict[str, Any]],
                pred: tuple | None) -> "pyarrow.Table | None":
-    """Point-get conversion: the rows of ``files`` that MAY satisfy
-    ``pred`` (no residual filter applied), read on the driver into
-    ``tbl``'s Arrow schema — or None, decided before any data is read,
-    when the files are for Spark to read: some entry has no recorded
-    ``rows``, they hold more than ``LOCAL_SCAN_ROWS`` rows, or a file's
-    footer shows Spark would read it differently (``_readable``)."""
+    """Point-get conversion: the rows of ``files`` for which ``pred`` is
+    TRUE (all of them when ``pred`` is None), read and filtered on the
+    driver into ``tbl``'s Arrow schema by ``eval_arrow`` — or None,
+    decided before any data is read, when the files are for Spark to
+    read: some entry has no recorded ``rows``, they hold more than
+    ``LOCAL_SCAN_ROWS`` rows, a file's footer shows Spark would read it
+    differently (``_readable``), or ``eval_arrow`` does not cover
+    ``pred``."""
     import contextlib
 
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -607,6 +661,9 @@ def read_local(tbl: KeyTable, files: list[dict[str, Any]],
     if total is None or total > LOCAL_SCAN_ROWS:
         return None
     arrow = to_arrow_schema(tbl.schema())
+    mask_of = None if pred is None else _compile_arrow(pred, arrow)
+    if pred is not None and mask_of is None:
+        return None
     with contextlib.ExitStack() as stack:
         pfs = [stack.enter_context(pq.ParquetFile(
             f["path"], coerce_int96_timestamp_unit="us")) for f in files]
@@ -614,9 +671,7 @@ def read_local(tbl: KeyTable, files: list[dict[str, Any]],
             return None
         parts = [_read_file(pf, arrow) for pf in pfs]
     table = pa.concat_tables(parts) if parts else arrow.empty_table()
-    mask = None if pred is None else key_mask(to_nnf(pred), table,
-                                              tbl.key_cols)
-    return table if mask is None else table.filter(pc.fill_null(mask, True))
+    return table if mask_of is None else table.filter(mask_of(table))
 
 
 def scan(spark: SparkSession, catalog: HeraclesCatalog, table: str,
@@ -624,20 +679,22 @@ def scan(spark: SparkSession, catalog: HeraclesCatalog, table: str,
          stats_out: "dict[str, Any] | None" = None,
          residual: bool = True) -> DataFrame:
     """Pruned scan: file-index pruning, then a read of the survivors
-    with the full predicate as a residual filter — a driver-side
-    ``read_local`` when they are small, else a parquet read (the
-    filter pushed to parquet row groups by Spark — ≙ per-partition
-    predicate specialization, HBasePartition.computePredicate).
+    filtered by the full predicate — on the driver by ``read_local``
+    when they are small and ``eval_arrow`` covers the predicate (the
+    frame carries no filter), else a parquet read with the predicate as
+    a Spark residual filter (pushed to parquet row groups by Spark — ≙
+    per-partition predicate specialization,
+    HBasePartition.computePredicate).
 
     ``stats_out`` (optional) receives this call's own pruning record —
     ``files_read``, ``files_total``, ``scan`` ("local" or "spark") and,
-    for a local scan, ``local_rows``.
+    for a local scan, ``local_rows``: the rows the predicate keeps.
 
-    ``residual=False`` returns the pruned files WITHOUT the row filter
-    — for callers that re-apply the original predicate text themselves
-    (the SQL agg router swaps the table ref for this relation and
-    keeps the statement's own WHERE, so the filter runs exactly once);
-    a local scan still drops rows whose keys cannot match."""
+    ``residual=False`` returns the pruned files WITHOUT the Spark row
+    filter — for callers that re-apply the original predicate text
+    themselves (the SQL agg router swaps the table ref for this
+    relation and keeps the statement's own WHERE, so the filter runs
+    exactly once); a local scan has filtered its rows already."""
     tbl = catalog.get_table(table)
     keep = prune_files(tbl.files, pred, tbl.key_cols)
     stats: dict[str, Any] = {"files_read": len(keep),
@@ -647,11 +704,11 @@ def scan(spark: SparkSession, catalog: HeraclesCatalog, table: str,
         stats["scan"] = "spark"
         df = spark.read.schema(tbl.schema()).parquet(
             *[f["path"] for f in keep])
+        if pred is not None and residual:
+            df = df.where(to_sql(pred))
     else:
         stats.update(scan="local", local_rows=rows.num_rows)
         df = local_frame(spark, rows, tbl.schema())
     if stats_out is not None:
         stats_out.update(stats)
-    if pred is not None and residual:
-        df = df.where(to_sql(pred))
     return df

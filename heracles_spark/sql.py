@@ -2019,8 +2019,9 @@ def _route_metadata_count_range(session, statement: str):
     alias = m.group("alias") or "count(1)"
     spark = session.spark
     # Boundary files small enough for the point-get path are counted
-    # on the driver: Spark's filter over the LocalRelation runs in the
-    # optimizer, so collecting its rows runs no job.
+    # on the driver: read_local keeps the rows for which the predicate
+    # is TRUE (pruning.eval_arrow), so the only frame built is the
+    # one-row answer, and its collect runs no job.
     rows = pruning.read_local(tbl, boundary, pred)
     audit = {"route": "metadata-count-range",
              "files_total": len(tbl.files), "files_read": len(boundary),
@@ -2030,11 +2031,7 @@ def _route_metadata_count_range(session, statement: str):
         audit["local_rows"] = rows.num_rows
     session.last_select_route = audit
     if rows is not None:
-        if rows.num_rows:
-            meta_total += len(local_frame(spark, rows, tbl.schema())
-                              .where(pruning.to_sql(pred))
-                              .select().collect())
-        return local_frame(spark, [(meta_total,)],
+        return local_frame(spark, [(meta_total + rows.num_rows,)],
                            T_meta_count_schema(alias))
     scan = (spark.read.schema(tbl.schema())
             .parquet(*[f["path"] for f in boundary])

@@ -633,7 +633,7 @@ def restore_table(catalog: HeraclesCatalog, table: str,
         raise CatalogError(
             f"{table}@v{version}: {len(missing)} data files were "
             f"VACUUMed; cannot restore")
-    files = harvest_file_index(list(entry["paths"]))
+    files = harvest_file_index(list(entry["paths"]), _bloom_cols(tbl))
     return catalog.update_file_index(table, files, append=False,
                                      op=f"restore:v{version}")
 

@@ -2,13 +2,14 @@
 
 When the files a predicate prunes to hold at most
 ``pruning.LOCAL_SCAN_ROWS`` rows, ``pruning.read_local`` reads them with
-pyarrow, keeps the rows whose keys may satisfy the predicate and hands
+pyarrow, keeps the rows for which the predicate is TRUE and hands
 them to Spark as a ``LocalRelation`` (≙ the reference's batched ``Get``s,
 HBaseSQLReaderRDD.scala:276-328). These tests pin that the driver path
 returns exactly what Spark's parquet reader returns over the same files
-(every supported type, NULLs, time zones, schema evolution), that the
-key prefilter never drops a row Spark's WHERE keeps, and that eligible
-statements run no Spark job while larger ones still take Spark.
+(every supported type, NULLs, time zones, schema evolution), that
+``pruning.eval_arrow`` keeps exactly the rows Spark's WHERE keeps, and
+that eligible statements run no Spark job and build no Spark filter
+while larger ones still take Spark.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ import datetime
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -163,18 +164,26 @@ def test_parity_after_add_and_drop_columns(hsession, spark, catalog):
                    (6, None, None), (7, "q", None)]
 
 
-# -- key prefilter soundness -------------------------------------------------
+# -- exact driver-side predicate evaluation ---------------------------------
 
 _KEYS = ["k", "s", "d"]
 _DATES = [datetime.date(2024, 1, 1) + datetime.timedelta(days=i)
-          for i in range(3)]
-_STRS = ["", "a", "ab", "b", "é", "z"]
+          for i in range(3)] + [datetime.date(1500, 3, 1),
+                                datetime.date(9999, 12, 31)]
+_STRS = ["", "a", "ab", "b", "é", "日本", "z"]
+_FLOATS = [None, float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 1.0,
+           1.5, -2.0]
+# Integral literals outside INT, and outside BIGINT (Spark compares
+# those as decimals): eval_arrow answers the first exactly and need
+# not decide the second.
+_WIDE = [2 ** 31, -2 ** 31 - 1, 2 ** 63 - 1, 2 ** 63, -2 ** 63 - 1, 2 ** 70]
 
 
 def _probe_table():
-    """Every combination of a small key domain, plus a nullable non-key
-    column, as one Arrow table."""
-    rows = [(k, s, d) for k in range(-3, 4) for s in _STRS[:5]
+    """Every combination of a small key domain, plus a nullable int
+    ``v`` and a nullable double ``f`` (NaN, ±Inf, -0.0 and 0.0), as one
+    Arrow table."""
+    rows = [(k, s, d) for k in range(-3, 4) for s in _STRS[:6]
             for d in _DATES]
     return pa.table({
         "id": pa.array(range(len(rows)), pa.int64()),
@@ -183,18 +192,23 @@ def _probe_table():
         "d": pa.array([r[2] for r in rows], pa.date32()),
         "v": pa.array([None if i % 4 == 0 else i % 5 - 2
                        for i in range(len(rows))], pa.int32()),
+        "f": pa.array([_FLOATS[i % len(_FLOATS)]
+                       for i in range(len(rows))], pa.float64()),
     })
 
 
 def _lits(col):
-    ints = st.integers(-4, 4)
+    """Literals of ``parse_where``'s type for ``col``."""
     if col in ("k", "v"):
-        # string literals against int columns: Spark casts them
-        return st.one_of(ints, ints.map(str))
+        return st.one_of(st.integers(-4, 4), st.sampled_from(_WIDE))
+    if col == "f":
+        return st.one_of(st.sampled_from([0.0, -0.0, 1.0, 1.5, -2.0, 1e300]),
+                         st.floats(allow_nan=False, allow_infinity=False))
     if col == "s":
-        return st.sampled_from(_STRS)
+        return st.sampled_from(_STRS + ["aa", "日", "ß"])
     # the ISO strings the SQL router emits for a date column
-    return st.sampled_from(_DATES + [datetime.date(2023, 12, 31)]).map(
+    return st.sampled_from(_DATES + [datetime.date(2023, 12, 31),
+                                     datetime.date(1, 1, 1)]).map(
         datetime.date.isoformat)
 
 
@@ -211,11 +225,19 @@ def _atom(col):
 
 
 _PRED = st.recursive(
-    st.sampled_from(_KEYS + ["v"]).flatmap(_atom),
+    st.sampled_from(_KEYS + ["v", "f"]).flatmap(_atom),
     lambda sub: st.one_of(
         st.tuples(st.sampled_from(["and", "or"]), sub, sub),
         st.tuples(st.just("not"), sub)),
     max_leaves=6)
+
+
+def _bigint_literals(pred) -> bool:
+    """Whether every integral literal of ``pred`` fits a BIGINT."""
+    if pred[0] in ("and", "or", "not"):
+        return all(map(_bigint_literals, pred[1:]))
+    vals = pred[2] if pred[0] == "in" else pred[2:]
+    return all(-2 ** 63 <= v < 2 ** 63 for v in vals if type(v) is int)
 
 
 @pytest.fixture(scope="module")
@@ -228,60 +250,48 @@ def probe(spark):
         T.StructField("k", T.IntegerType(), False),
         T.StructField("s", T.StringType(), False),
         T.StructField("d", T.DateType(), False),
-        T.StructField("v", T.IntegerType(), True)])
+        T.StructField("v", T.IntegerType(), True),
+        T.StructField("f", T.DoubleType(), True)])
     return table, local_frame(spark, table, schema)
 
 
 @settings(max_examples=40, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(_PRED, min_size=1, max_size=6))
-def test_key_prefilter_keeps_every_row_spark_keeps(probe, preds):
-    """Spark's WHERE ⊆ ``may_match`` over each row's one-point key box
-    (the reference loop) ⊆ the vectorized ``key_mask``."""
+@given(st.lists(_PRED, min_size=1, max_size=4))
+@example([("=", "f", 0.0), ("=", "v", 0)])
+@example([("in", "f", [0.0]), ("in", "v", [0])])
+@example([("not", ("in", "v", [1])), ("not", ("in", "f", [1.0]))])
+@example([(">", "f", 1.0), (">=", "f", -0.0), ("<", "f", 1e300)])
+def test_eval_arrow_keeps_exactly_the_rows_spark_keeps(probe, preds):
+    """``eval_arrow``'s TRUE rows are the rows Spark's WHERE keeps over
+    a ``local_frame`` of the same table, and it decides every AST
+    ``parse_where`` emits whose literals fit a BIGINT."""
     table, df = probe
-    flags = df.select("id", *[F.expr(pruning.to_sql(p)).alias(f"p{i}")
-                              for i, p in enumerate(preds)]).collect()
-    rows = table.to_pylist()
-    for i, p in enumerate(preds):
-        nnf = pruning.to_nnf(p)
-        kept = {r.id for r in flags if r[f"p{i}"] is True}
-        boxed = set()
-        for r in rows:
-            box = {c: r[c] for c in _KEYS}
-            if pruning.may_match(nnf, box, box, _KEYS):
-                boxed.add(r["id"])
-        mask = pruning.key_mask(nnf, table, _KEYS)
-        ids = table.column("id").to_pylist()
-        if mask is not None:
-            ids = [x for x, m in zip(ids, mask.to_pylist())
-                   if m is not False]
-        assert kept <= boxed <= set(ids), (p, sorted(kept - set(ids)))
+    for p in preds:
+        kept = {r.id for r in df.where(pruning.to_sql(p)).select(
+            "id").collect()}
+        mask = pruning.eval_arrow(p, table)
+        if mask is None:
+            assert not _bigint_literals(p), p
+            continue
+        got = set(table.filter(mask).column("id").to_pylist())
+        assert got == kept, (p, sorted(got ^ kept))
 
 
-def test_key_prefilter_decides_typed_key_atoms_only():
+def test_eval_arrow_declines_what_it_does_not_cover():
     table = _probe_table()
-    ks = table.column("k").to_pylist()
-
-    def kept(pred):
-        mask = pruning.key_mask(pruning.to_nnf(pred), table, _KEYS)
-        return None if mask is None else \
-            [k for k, m in zip(ks, mask.to_pylist()) if m]
-
-    assert set(kept(("=", "k", 2))) == {2}
-    assert set(kept(("and", ("between", "k", -1, 1), ("=", "v", 0)))) == \
-        {-1, 0, 1}
-    assert kept(("between", "k", 3, -3)) == []          # lo > hi: empty
-    assert set(kept(("or", ("<", "k", -2), ("in", "k", [3])))) == {-3, 3}
-    assert set(kept(("not", ("!=", "k", 1)))) == {1}    # NNF complement
-    assert kept(("=", "k", "2")) is None                # cast by Spark
-    assert kept(("=", "k", True)) is None               # bool is not int
-    assert kept(("=", "k", 2.0)) is None
-    assert kept(("=", "k", 2 ** 40)) is None            # outside int32
-    assert kept(("=", "v", 0)) is None                  # non-key
-    assert kept(("or", ("=", "k", 1), ("=", "v", 0))) is None
-    assert kept(("=", "d", "2024-01-01")) is None       # date key
-    floats = pa.table({"f": pa.array([float("nan"), 1.0], pa.float64())})
-    assert pruning.key_mask((">", "f", 0.0), floats, ["f"]) is None
+    assert pruning.eval_arrow(("=", "k", "2"), table) is None  # Spark casts
+    assert pruning.eval_arrow(("=", "k", True), table) is None
+    assert pruning.eval_arrow(("=", "k", 2.0), table) is None
+    assert pruning.eval_arrow(("=", "f", 1), table) is None
+    assert pruning.eval_arrow(("=", "f", float("nan")), table) is None
+    assert pruning.eval_arrow(("=", "d", "2024-1-1"), table) is None
+    assert pruning.eval_arrow(("=", "nope", 1), table) is None
+    assert pruning.eval_arrow(("or", ("=", "k", 1), ("=", "k", "1")),
+                              table) is None
+    ts = pa.table({"t": pa.array([0], pa.timestamp("us", tz="UTC"))})
+    assert pruning.eval_arrow(("=", "t", "1970-01-01 00:00:00"), ts) is None
+    assert pruning.eval_arrow(("isnull", "t"), ts).to_pylist() == [False]
 
 
 # -- job counts and the bound ------------------------------------------------
@@ -420,3 +430,132 @@ def test_explain_route_prints_scan_and_local_rows(hsession, monkeypatch):
     monkeypatch.setattr(pruning, "LOCAL_SCAN_ROWS", 49)
     assert explain(_GET) == ("pruned-scan", "spark", None)
     assert explain(_COUNT) == ("metadata-count-range", "spark", None)
+
+
+# -- what the driver-side evaluation saves -----------------------------------
+
+def _count_local_frames(monkeypatch):
+    """Rows argument of every ``catalog.local_frame`` call from here on,
+    through any module's binding of it."""
+    import sys
+
+    from heracles_spark import catalog as catalog_mod
+
+    calls = []
+    orig = catalog_mod.local_frame
+
+    def counting(spark, rows, schema):
+        calls.append(rows)
+        return orig(spark, rows, schema)
+
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "__name__", "").startswith("heracles_spark") \
+                and getattr(mod, "local_frame", None) is orig:
+            monkeypatch.setattr(mod, "local_frame", counting)
+    return calls
+
+
+def _stock(hsession, table, where):
+    """Sorted rows of a plain Spark read of ``table`` under ``where``."""
+    df = hsession.catalog.read_table(hsession.spark, table).where(where)
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_local_range_count_builds_only_its_answer(hsession, monkeypatch):
+    _mk_pg(hsession)
+    hsession.sql(_COUNT).collect()              # publishes the inserts
+    calls = _count_local_frames(monkeypatch)
+    rows, jobs = _jobs_run(hsession.spark,
+                           lambda: hsession.sql(_COUNT).collect())
+    assert [tuple(r) for r in rows] == [(131,)]
+    assert jobs == 0
+    assert calls == [[(131,)]]
+    assert hsession.last_select_route["local_rows"] == 31
+
+
+@pytest.mark.parametrize("q", [_GET, _RANGE])
+def test_covered_local_read_plans_no_filter(hsession, q):
+    from heracles_spark.plans import plan_node_names
+
+    _mk_pg(hsession)
+    df = hsession.sql(q)
+    qe = df._jdf.queryExecution()
+    assert hsession.last_select_route["scan"] == "local"
+    assert "Filter" not in plan_node_names(qe.analyzed())
+    nodes = plan_node_names(qe.executedPlan())
+    assert "LocalTableScanExec" in nodes and "FilterExec" not in nodes
+    assert sorted(tuple(r) for r in df.collect()) == \
+        _stock(hsession, "pg", q.split(" WHERE ")[1])
+
+
+def test_local_delete_builds_only_its_stats_frame(hsession, monkeypatch):
+    from heracles_spark import dml
+
+    _mk_pg(hsession)
+    where = "k BETWEEN 10 AND 20 AND v > 12.0 OR k IN (60, 61, 250)"
+    want = len(_stock(hsession, "pg", where))
+    survivors = _stock(hsession, "pg", f"NOT ({where})")
+    calls = _count_local_frames(monkeypatch)
+    out = hsession.sql(f"DELETE FROM pg WHERE {where}").collect()[0]
+    assert dml.LAST_DML_STATS["write"] == "local"
+    assert out.rows_affected == want == 11
+    assert calls == [[(want, 2, 4)]]            # the stats frame only
+    assert _stock(hsession, "pg", "true") == survivors
+
+
+def test_uncovered_atom_keeps_the_spark_residual(spark, catalog, hsession):
+    _mk_pg(hsession)
+    stats = {}
+    got = pruning.scan(spark, catalog, "pg", ("=", "k", "2"),
+                       stats_out=stats)
+    assert stats["scan"] == "spark"
+    assert sorted(tuple(r) for r in got.collect()) == \
+        _stock(hsession, "pg", "k = '2'") == [(2, "n2", 2.5)]
+
+
+@pytest.fixture()
+def negzero(spark, catalog, hsession):
+    """Two files whose double column ``v`` holds only -0.0."""
+    hsession.sql("CREATE TABLE nz (k INT, v DOUBLE) "
+                 "TBLPROPERTIES('keyCols'='k')")
+    writer.write_key_organized(
+        spark, catalog, "nz",
+        spark.range(40).selectExpr("CAST(id AS INT) AS k",
+                                   "CAST('-0.0' AS DOUBLE) AS v"),
+        n_buckets=2)
+    assert len(catalog.get_table("nz").files) == 2
+    old = spark.conf.get("spark.sql.parquet.filterPushdown")
+    yield
+    spark.conf.set("spark.sql.parquet.filterPushdown", old)
+
+
+@pytest.mark.parametrize("atom", ["v = 0", "v >= 0"])
+def test_negative_zero_on_the_driver_routes(spark, hsession, negzero, atom):
+    """Each routed statement answers as a stock read without parquet
+    filter pushdown (which drops -0.0 rows against ``= 0``)."""
+    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    for where, n in ((f"k = 5 AND {atom}", 1),
+                     (f"k BETWEEN 3 AND 9 AND {atom}", 7)):
+        want = _stock(hsession, "nz", where)
+        assert len(want) == n
+        got = hsession.sql(f"SELECT * FROM nz WHERE {where}").collect()
+        assert hsession.last_select_route["scan"] == "local"
+        assert sorted(tuple(r) for r in got) == want
+    got = hsession.sql("SELECT COUNT(*) FROM nz WHERE "
+                       f"k BETWEEN 3 AND 9 AND {atom}").collect()
+    assert hsession.last_select_route["route"] == "metadata-count-range"
+    assert hsession.last_select_route["scan"] == "local"
+    assert got[0][0] == 7
+
+
+def test_negative_zero_local_delete(spark, hsession, negzero):
+    from heracles_spark import dml
+
+    spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+    where = "k BETWEEN 3 AND 9 AND v = 0"
+    want = len(_stock(hsession, "nz", where))
+    survivors = _stock(hsession, "nz", f"NOT ({where})")
+    out = hsession.sql(f"DELETE FROM nz WHERE {where}").collect()[0]
+    assert dml.LAST_DML_STATS["write"] == "local"
+    assert out.rows_affected == want == 7
+    assert _stock(hsession, "nz", "true") == survivors

@@ -120,6 +120,24 @@ def test_zorder_keeps_catalog_blooms(spark, catalog, hsession, bt):
         assert sum(n_kept) <= len(rows) + 8, n_kept
 
 
+def test_restore_keeps_catalog_blooms(spark, catalog, hsession):
+    catalog.create_table("rb", [("k", "int"), ("s", "string")], ["k"],
+                         properties={"bloomCols": "s"})
+    df = spark.range(4000).selectExpr("CAST(id AS INT) AS k",
+                                      "md5(CAST(id AS STRING)) AS s")
+    writer.write_key_organized(spark, catalog, "rb", df, n_buckets=4)
+    v1 = catalog.get_table("rb").version
+    hsession.sql("INSERT INTO rb VALUES (5000, 'new')")
+    hsession.sql(f"RESTORE TABLE rb TO VERSION AS OF {v1}")
+    tbl = catalog.get_table("rb")
+    assert len(tbl.files) == 4
+    row = catalog.read_table(spark, "rb").where("k = 1234").first()
+    keep = pruning.prune_files(tbl.files, ("=", "s", row.s), tbl.key_cols)
+    assert len(keep) == 1 and keep[0]["min"]["k"] <= 1234 <= \
+        keep[0]["max"]["k"]
+    assert all("s" in f.get("bloom", {}) for f in tbl.files)
+
+
 # -- concurrent writers ----------------------------------------------------
 
 @pytest.mark.parametrize("run", range(3))
