@@ -10,7 +10,9 @@ Intercepted surface (≙ hbaseCommands.scala / HBaseCatalog):
   CREATE TABLE t (col type, ...) TBLPROPERTIES('keyCols'='a;b', ...)
   DROP TABLE [IF EXISTS] t
   LOAD DATA [LOCAL] INPATH 'f' [OVERWRITE] INTO TABLE t
-  INSERT INTO [TABLE] t VALUES (...), (...)
+  INSERT INTO [TABLE] t VALUES (...), (...)  (each cell a Spark
+            expression cast to its column type: strings coerce, as the
+            reference's do)
   INSERT INTO [TABLE] t SELECT ...
   MERGE INTO t USING s ON ... WHEN [NOT] MATCHED [BY SOURCE] THEN ...
   SHOW TABLES / DESCRIBE t
@@ -513,8 +515,7 @@ def dispatch(session, statement: str) -> DataFrame | None:
     m = _INSERT_VALUES.match(statement)
     if m:
         name = _resolve(session, m.group("name"))
-        # parsed from the statement's own (cached) tokens
-        writer.insert_rows(spark, catalog, name, _parse_value_rows(statement))
+        writer.insert_rows(spark, catalog, name, statement)
         writer.post_write_maintenance(spark, catalog, name)
         return None
 
@@ -3824,33 +3825,6 @@ def _parse_props(s: str) -> dict[str, str]:
         props[sqltext.string_value(toks[0].text)] = \
             sqltext.string_value(toks[2].text)
     return props
-
-
-def _parse_value_rows(s: str) -> list[tuple]:
-    """``(v, ...), (v, ...)``, alone or ending an INSERT statement (its
-    depth-0 words are skipped) → one tuple per row: NULL → None, string
-    literals decoded (adjacent ones concatenate), anything else as its
-    text."""
-    def value(group):
-        if len(group) == 1 and _is_word(group[0], "NULL"):
-            return None
-        if all(u.kind in ("str", "dstr") for u in group):
-            return "".join(sqltext.string_value(u.text) for u in group)
-        return s[group[0].start:group[-1].end]
-
-    rows, vals, group = [], [], []
-    for t in sqltext.lex(s):
-        if t.depth == 1 and t.text == "," and t.kind == "op" \
-                or t.depth == 0 and t.text == ")":
-            if group:
-                vals.append(value(group))
-            group = []
-            if t.depth == 0:
-                rows.append(tuple(vals))
-                vals = []
-        elif t.depth > 0:
-            group.append(t)
-    return rows
 
 
 def _split_where(s: str) -> tuple[str, str | None]:

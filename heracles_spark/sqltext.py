@@ -211,6 +211,25 @@ def split_top_and(sql: str) -> "list[str] | None":
     return [p.strip() for p in parts if p.strip()]
 
 
+def value_rows(sql: str) -> list[list[str]]:
+    """The cells of ``(v, ...), (v, ...)``, alone or ending an INSERT
+    statement (its depth-0 words are skipped): one list per row of each
+    cell's SQL text, undecoded."""
+    rows, cells, group = [], [], []
+    for t in lex(sql):
+        if t.depth == 1 and t.text == "," and t.kind == "op" \
+                or t.depth == 0 and t.text == ")":
+            if group:
+                cells.append(sql[group[0].start:group[-1].end])
+            group = []
+            if t.depth == 0:
+                rows.append(cells)
+                cells = []
+        elif t.depth > 0:
+            group.append(t)
+    return rows
+
+
 def _unescape(m: re.Match) -> str:
     esc = m.group(1)
     if esc is None:                    # doubled quote

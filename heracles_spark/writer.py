@@ -13,8 +13,8 @@ Reference behavior being re-expressed:
   keys are rejected.
 - INSERT appends (HBaseRelation.insert with overwrite=false,
   HBaseRelation.scala:672-679). HBase's implicit per-key upsert is a
-  documented divergence (SURVEY §7.2.3); ``upsert=True`` opts into
-  last-write-wins dedup on the key.
+  documented divergence (SURVEY §7.2.3); ``write_key_organized``'s
+  ``upsert=True`` opts into last-write-wins dedup on the key.
 
 Every file-writing path goes through one funnel, each step in one place:
 
@@ -50,9 +50,9 @@ so the collect runs no job); ``put_rows`` sorts the rows by key, writes
 them as one parquet file with pyarrow, encoded so that Spark's reader
 and ``pruning.read_local`` read the same rows as from a Spark-written
 file and the footer harvests to the same index entry, and commits
-through the same harvest and commit step. Upsert batches, tables
-with ``bloomCols`` (pyarrow writes no parquet bloom filters) and larger
-writes take the Spark write.
+through the same harvest and commit step. Tables with ``bloomCols``
+(pyarrow writes no parquet bloom filters) and larger writes take the
+Spark write.
 """
 
 from __future__ import annotations
@@ -60,14 +60,14 @@ from __future__ import annotations
 import math
 import os
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from heracles_spark import pruning
-from heracles_spark.catalog import HeraclesCatalog, KeyTable, local_frame
+from heracles_spark import pruning, sqltext
+from heracles_spark.catalog import HeraclesCatalog, KeyTable
 
 # Target rows per output file for the local harness; on a cluster you'd
 # size by bytes (spark.sql.files.maxPartitionBytes governs the read side).
@@ -79,13 +79,29 @@ def buckets_for_rows(n: int) -> int:
 
 
 def _n_buckets(df: DataFrame, explicit: int | None) -> int:
-    if explicit:
-        return explicit
+    return explicit or buckets_for_rows(df.count())
+
+
+def table_buckets(tbl: KeyTable, explicit: int | None,
+                  row_count: Callable[[], int]) -> int:
+    """Files a full layout of ``tbl`` writes (a load or append, OPTIMIZE,
+    OPTIMIZE ZORDER): ``explicit`` when given, else the table's
+    ``numBuckets``, else ``buckets_for_rows`` of ``row_count()``.
+
+    Pre-split parity (reference HBaseCatalog.scala:130-149 splitKeys →
+    createHBaseUserTable): CREATE TABLE ... TBLPROPERTIES('numBuckets'=
+    '8') fixes the key-range bucket count for every such write, the
+    columnar analogue of creating the table pre-split."""
+    prop = tbl.properties.get("numBuckets")
+    if explicit or not prop:
+        return explicit or buckets_for_rows(row_count())
     try:
-        n = df.count()
-    except Exception:
-        n = DEFAULT_ROWS_PER_BUCKET
-    return buckets_for_rows(n)
+        n = int(prop)
+    except ValueError:
+        raise ValueError(f"numBuckets must be an integer, got {prop!r}")
+    if n < 1:
+        raise ValueError("numBuckets must be >= 1")
+    return n
 
 
 def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
@@ -99,22 +115,6 @@ def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
     file index. ``mode`` is 'append' or 'overwrite'."""
     tbl = catalog.get_table(table)
     keys = tbl.key_cols
-
-    # Pre-split parity (reference HBaseCatalog.scala:130-149 splitKeys →
-    # createHBaseUserTable): CREATE TABLE ... TBLPROPERTIES(
-    # 'numBuckets'='8') fixes the key-range bucket count for every
-    # write, the columnar analogue of creating the table pre-split. An
-    # explicit n_buckets argument still wins.
-    if n_buckets is None and tbl.properties.get("numBuckets"):
-        try:
-            n_buckets = int(tbl.properties["numBuckets"])
-        except ValueError:
-            raise ValueError(
-                f"numBuckets must be an integer, got "
-                f"{tbl.properties['numBuckets']!r}")
-        if n_buckets < 1:
-            raise ValueError("numBuckets must be >= 1")
-
     df = _conform(df, tbl)
     if upsert:
         # HBase semantics: one row per key, last write wins. Expressed as a
@@ -127,8 +127,9 @@ def write_key_organized(spark: SparkSession, catalog: HeraclesCatalog,
         else:
             df = df.dropDuplicates(keys)
 
-    paths = _stage(_range_layout(df, keys, _n_buckets(df, n_buckets)), tbl,
-                   f"g{tbl.version + 1}", None, None)
+    paths = _stage(_range_layout(df, keys, table_buckets(tbl, n_buckets,
+                                                         df.count)),
+                   tbl, f"g{tbl.version + 1}", None, None)
     # Overwrite retires the previous generation's files in place (kept
     # on disk for time travel until VACUUM, invisible to readers).
     overwrite = mode == "overwrite"
@@ -454,40 +455,40 @@ def bulk_load_csv(spark: SparkSession, catalog: HeraclesCatalog, table: str,
 
 
 def insert_rows(spark: SparkSession, catalog: HeraclesCatalog, table: str,
-                rows: list[tuple], upsert: bool = False) -> KeyTable:
+                values: str) -> KeyTable:
     """``INSERT INTO t VALUES (...)`` (InsertValueIntoTableCommand,
-    hbaseCommands.scala:62-80; string→type coercion DataTypeUtils.scala:117-135).
+    hbaseCommands.scala:62-80).
 
-    The batch is an all-string ``local_frame`` (a JVM LocalRelation, not
-    a parallelized Python RDD), cast to the declared column types, so a
-    value that cannot be cast fails the statement before anything is
-    written. A string has no cast to an ARRAY column, which keeps its
-    type and takes only NULL; any other value raises ``ValueError``
-    before anything is written. A batch ``put_eligible`` allows is
-    collected (no job) and written by ``put_rows``; an upsert batch or
-    a larger one is one Spark write of one file (``n_buckets=1``: no
-    row count is needed to size it)."""
+    ``values`` is the text of the rows, ``(v, ...), (v, ...)``, alone or
+    ending the INSERT statement. Each cell is a Spark SQL expression,
+    evaluated by Spark as ``CAST(<cell> AS <column type>)`` in one
+    inline table: ``1 + 4``, ``DATE '2024-02-03'``, ``X'41'`` or
+    ``array(1.0)`` store what stock Spark's INSERT stores, and a string
+    literal still coerces to the column type, as the reference's does
+    (DataTypeUtils.scala:117-135). A row of the wrong width, or a cell
+    that does not evaluate or cast, fails the statement before anything
+    is written. The inline table is a ``LocalRelation``: a batch
+    ``put_eligible`` allows is collected (no job) and written by
+    ``put_rows``; a larger one is one Spark write of one file
+    (``n_buckets=1``: no row count is needed to size it)."""
     tbl = catalog.get_table(table)
-    base = tbl.schema()
-    # Accept strings for any field, coerce via cast (reference coerces
-    # literal strings to column types).
-    loose = T.StructType([
-        f if isinstance(f.dataType, T.ArrayType)
-        else T.StructField(f.name, T.StringType(), True)
-        for f in base.fields])
+    rows = sqltext.value_rows(values)
     for r in rows:
-        for f, v in zip(loose.fields, r):
-            if v is not None and isinstance(f.dataType, T.ArrayType):
-                raise ValueError(
-                    f"INSERT VALUES can only set ARRAY column {f.name} "
-                    f"to NULL, got {v}")
-    df = local_frame(
-        spark,
-        [tuple(None if v is None else str(v) for v in r) for r in rows], loose)
-    if upsert or not put_eligible(tbl, len(rows)):
+        if len(r) != len(tbl.columns):
+            raise ValueError(
+                f"INSERT VALUES row has {len(r)} values, table {tbl.name} "
+                f"has {len(tbl.columns)} columns")
+    # Named as the table's columns, so _conform needs no rename.
+    df = spark.sql("SELECT * FROM VALUES " + ", ".join(
+        "(" + ", ".join(f"CAST({cell} AS {t})"
+                        for cell, (_, t) in zip(r, tbl.columns)) + ")"
+        for r in rows) + " AS v(" + ", ".join(
+            f"`{c}`" for c, _ in tbl.columns) + ")")
+    if not put_eligible(tbl, len(rows)):
         return write_key_organized(spark, catalog, table, df, mode="append",
-                                   upsert=upsert, n_buckets=1)
-    return put_rows(catalog, tbl, collect_local(_conform(df, tbl), base),
+                                   n_buckets=1)
+    return put_rows(catalog, tbl, collect_local(_conform(df, tbl),
+                                                tbl.schema()),
                     None, "append", None)
 
 

@@ -168,7 +168,7 @@ def with_hilbert_value(df: DataFrame, col_names: list[str],
 
 
 def write_zordered(spark, catalog: HeraclesCatalog, table: str,
-                   df: DataFrame, n_buckets: int = 8,
+                   df: DataFrame, n_buckets: int | None = None,
                    bits_per_dim: int = 16,
                    mode: str = "overwrite",
                    curve: str = "morton") -> KeyTable:
@@ -176,14 +176,17 @@ def write_zordered(spark, catalog: HeraclesCatalog, table: str,
     order. ``curve`` is 'morton' (bit interleave) or 'hilbert' (Skilling
     transform — tighter boxes, no quadrant-seam jumps). File index +
     pruner are unchanged: min/max per key column simply becomes tight on
-    all dimensions."""
+    all dimensions. The file count follows ``writer.table_buckets``, as
+    ``OPTIMIZE t`` does; the row count rides the key-range ``agg``."""
     from heracles_spark import writer
 
     tbl = catalog.get_table(table)
     df = writer._conform(df, tbl)
-    stats = df.agg(*[f(F.col(k).cast("double")).alias(f"{tag}_{k}")
+    stats = df.agg(F.count(F.lit(1)).alias("rows"),
+                   *[f(F.col(k).cast("double")).alias(f"{tag}_{k}")
                      for k in tbl.key_cols
                      for tag, f in (("lo", F.min), ("hi", F.max))]).first()
+    n_buckets = writer.table_buckets(tbl, n_buckets, lambda: stats["rows"])
     ranges = [(stats[f"lo_{k}"], stats[f"hi_{k}"]) for k in tbl.key_cols]
     if curve == "hilbert":
         bits = min(bits_per_dim, 16)   # 16·ndim bits cap keeps h in a long

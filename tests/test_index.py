@@ -66,7 +66,7 @@ def test_probe_range_matches_full_scan(spark, catalog):
 def test_stale_index_falls_back_and_refresh_restores(spark, catalog):
     _mk(spark, catalog)
     ix.create_index(spark, catalog, "base", "v")
-    writer.insert_rows(spark, catalog, "base", [("9001", "77", "new")])
+    writer.insert_rows(spark, catalog, "base", "(9001, 77, 'new')")
     got = sorted((r.k, r.v) for r in
                  ix.indexed_lookup(spark, catalog, "base",
                                    ("=", "v", 77)).collect())
@@ -130,7 +130,7 @@ def test_incremental_refresh_appends_only_new_files(spark, catalog):
     ix.create_index(spark, catalog, "base", "v")
     n_idx_files_before = len(catalog.get_table("base__idx_v").files)
     writer.insert_rows(spark, catalog, "base",
-                       [("9001", "123456", "x"), ("9002", "123457", "y")])
+                       "(9001, 123456, 'x'), (9002, 123457, 'y')")
     st = ix.refresh_index(spark, catalog, "base", "v")
     assert st["mode"] == "incremental"
     # appended exactly one new index file; old index files untouched
@@ -164,7 +164,7 @@ def test_show_indexes(hsession, spark, catalog):
     rows = hsession.sql("SHOW INDEXES ON base").collect()
     assert [(r.index_name, r.column, r.fresh) for r in rows] == \
         [("vi", "v", True)]
-    writer.insert_rows(spark, catalog, "base", [("9001", "5", "z")])
+    writer.insert_rows(spark, catalog, "base", "(9001, 5, 'z')")
     rows = hsession.sql("SHOW INDEXES ON base").collect()
     assert rows[0].fresh is False
 
@@ -252,7 +252,7 @@ def test_composite_index(spark, catalog):
                     .where("b = 3").collect())
     assert got_b == want_b
     # composite index survives an incremental refresh
-    writer.insert_rows(spark, catalog, "comp", [("900", "5", "6")])
+    writer.insert_rows(spark, catalog, "comp", "(900, 5, 6)")
     st = ix.refresh_index(spark, catalog, "comp", "ab")
     assert st["mode"] == "incremental"
     got2 = {r.k for r in ix.indexed_lookup(spark, catalog, "comp",

@@ -75,8 +75,8 @@ def test_refresh_merges_minmax_and_avg_len(spark, catalog):
     _mk(spark, catalog, "m", 100)
     writer.analyze_table(spark, catalog, "m", for_columns=True)
     writer.insert_rows(spark, catalog, "m",
-                       [(1000, -50.0, "longer_string_value"),
-                        (1001, 9999.0, None)])
+                       "(1000, -50.0, 'longer_string_value'), "
+                       "(1001, 9999.0, NULL)")
     st = writer.refresh_statistics(spark, catalog, "m")
     assert st["mode"] == "incremental"
     assert st["columns"]["v"]["min"] == -50.0

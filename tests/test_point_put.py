@@ -257,8 +257,7 @@ def test_small_writes_run_no_spark_job(hsession, spark, catalog,
     assert _kv_rows(hsession) == model
 
 
-@pytest.mark.parametrize("case", ["bloom", "over-bound", "unreadable",
-                                  "upsert"])
+@pytest.mark.parametrize("case", ["bloom", "over-bound", "unreadable"])
 def test_fallbacks_take_the_spark_write(hsession, spark, catalog,
                                         monkeypatch, case):
     model = _kv(hsession, spark, catalog,
@@ -283,20 +282,6 @@ def test_fallbacks_take_the_spark_write(hsession, spark, catalog,
         monkeypatch.setattr(pruning, "LOCAL_SCAN_ROWS", 10)
     calls = _put_calls(monkeypatch)
     keys = list(range(1, 40, 2))
-    if case == "upsert":
-        writer.insert_rows(spark, catalog, "kv",
-                           [(k, f"i{k}", f"{k}.25") for k in keys]
-                           + [(1, "last", "9.0"), (0, "up", "0.5")],
-                           upsert=True)
-        catalog.read_table(spark, "kv").createOrReplaceTempView(
-            catalog.view_name("kv"))
-        model.update({k: (k, f"i{k}", k + 0.25) for k in keys})
-        model[1] = (1, "last", 9.0)
-        assert calls == []
-        # the upsert appends a second row for key 0, as INSERT does
-        assert sorted(r.s for r in hsession.sql(
-            "SELECT s FROM kv WHERE k = 0").collect()) == ["0", "up"]
-        return
     hsession.sql(_insert_sql(keys))
     model.update({k: (k, f"i{k}", k + 0.25) for k in keys})
     # An INSERT writes new rows: only the bloom and the bound stop it.

@@ -55,7 +55,7 @@ def test_failed_commit_publishes_the_committed_state(hsession, catalog):
     hsession.sql("INSERT INTO pubtx VALUES (2, 2.0)")
     assert _rows(spark.sql("SELECT * FROM pubtx")) == [(1, 1.0), (2, 2.0)]
     other = HeraclesCatalog(catalog.metastore_dir)
-    writer.insert_rows(spark, other, "pubtx", [(3, 3.0)])
+    writer.insert_rows(spark, other, "pubtx", "(3, 3.0)")
     with pytest.raises(CatalogError, match="write conflict"):
         hsession.sql("COMMIT")
     assert _rows(spark.sql("SELECT * FROM pubtx")) == [(1, 1.0), (3, 3.0)]
@@ -217,13 +217,13 @@ def test_a_foreign_commit_leaves_the_view_shadowed(hsession, catalog):
                  "TBLPROPERTIES('keyCols'='k')")
     hsession.sql("INSERT INTO pubfc VALUES (1, 1.0)")
     writer.insert_rows(spark, HeraclesCatalog(catalog.metastore_dir),
-                       "pubfc", [(2, 2.0)])
+                       "pubfc", "(2, 2.0)")
     assert _rows(hsession.sql("SELECT * FROM pubfc WHERE k = 2")) == []
     assert hsession.last_select_route == {"route": None,
                                           "reason": "shadowed-view"}
     # A library write through this catalog is published at the next
     # statement, user view or stale view alike.
-    writer.insert_rows(spark, catalog, "pubfc", [(3, 3.0)])
+    writer.insert_rows(spark, catalog, "pubfc", "(3, 3.0)")
     assert _rows(hsession.sql("SELECT * FROM pubfc WHERE k >= 2")) \
         == [(2, 2.0), (3, 3.0)]
     assert hsession.last_select_route["route"] == "pruned-scan"

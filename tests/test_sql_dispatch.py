@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import pytest
 
-from heracles_spark.sql import (_parse_columns, _parse_props,
-                                _parse_value_rows, _split_top)
+from heracles_spark import sqltext
+from heracles_spark.sql import _parse_columns, _parse_props, _split_top
 
 
 def test_parse_columns():
@@ -23,8 +23,12 @@ def test_parse_props():
 
 
 def test_parse_value_rows():
-    got = _parse_value_rows("(1, 'a', NULL), (2, 'b,c', 3.5)")
-    assert got == [("1", "a", None), ("2", "b,c", "3.5")]
+    """VALUES cells split on the lexer's tokens, each kept as its SQL
+    text for Spark to evaluate."""
+    got = sqltext.value_rows("(1, 'a', NULL), (2, 'b,c', 3.5)")
+    assert got == [["1", "'a'", "NULL"], ["2", "'b,c'", "3.5"]]
+    assert sqltext.value_rows("INSERT INTO t VALUES (f(1, 2), 'x' 'y')") \
+        == [["f(1, 2)", "'x' 'y'"]]
 
 
 def test_split_top_quotes_and_parens():

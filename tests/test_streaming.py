@@ -125,7 +125,7 @@ def test_stream_upsert_into_table(spark, catalog, tmp_path):
     catalog.create_table("acct", [("k", "int"), ("v", "string"),
                                   ("seq", "int")], ["k"])
     from heracles_spark import writer
-    writer.insert_rows(spark, catalog, "acct", [("1", "a", "0"), ("2", "b", "0")])
+    writer.insert_rows(spark, catalog, "acct", "(1, 'a', 0), (2, 'b', 0)")
 
     src = tmp_path / "ups"
     src.mkdir()
@@ -152,7 +152,7 @@ def test_upsert_batch_replay_idempotent(spark, catalog, tmp_path):
     from heracles_spark.merge import MergeClause, merge_into
 
     catalog.create_table("acct2", [("k", "int"), ("v", "string")], ["k"])
-    writer.insert_rows(spark, catalog, "acct2", [("1", "a")])
+    writer.insert_rows(spark, catalog, "acct2", "(1, 'a')")
     batch = spark.createDataFrame([(1, "a2"), (2, "b")], "k int, v string")
     on = "target.k = source.k"
     clauses = [MergeClause("matched", "update", assignments={"*": "*"}),
@@ -522,7 +522,7 @@ def test_stream_ingest_keeps_statistics_fresh(spark, catalog, tmp_path):
     from heracles_spark import writer
 
     catalog.create_table("evs", [("k", "int"), ("v", "double")], ["k"])
-    writer.insert_rows(spark, catalog, "evs", [(0, 0.0)])
+    writer.insert_rows(spark, catalog, "evs", "(0, 0.0)")
     writer.analyze_table(spark, catalog, "evs", for_columns=True)
     src = tmp_path / "src"
     src.mkdir()

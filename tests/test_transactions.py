@@ -165,8 +165,7 @@ def test_write_audit_publish(spark, catalog):
     from heracles_spark import writer
 
     catalog.create_table("wap", [("k", "int"), ("v", "double")], ["k"])
-    writer.insert_rows(spark, catalog, "wap", [("1", "10.0"),
-                                               ("2", "20.0")])
+    writer.insert_rows(spark, catalog, "wap", "(1, 10.0), (2, 20.0)")
     audits = [
         ("no_negative_values",
          "(SELECT count(*) FROM t WHERE v < 0) = 0"),

@@ -112,7 +112,7 @@ def test_zorder_keeps_catalog_blooms(spark, catalog, hsession, bt):
     before = kept(bt)
     hsession.sql("OPTIMIZE bt ZORDER BY (k)")
     tbl = catalog.get_table("bt")
-    assert len(tbl.files) == 8
+    assert len(tbl.files) == 1      # as OPTIMIZE bt sizes 4,000 rows
     assert all("s" in f.get("bloom", {}) for f in tbl.files)
     # Min/max on md5 strings keeps every file; the blooms keep the one
     # holding the value plus ~1% false positives of the rest.

@@ -3,6 +3,8 @@ range layout only prunes the leading one."""
 
 from __future__ import annotations
 
+import pytest
+
 from heracles_spark import writer, zorder
 from heracles_spark.pruning import prune_files, scan
 
@@ -100,3 +102,20 @@ def test_hilbert_layout_prunes_both_dims(spark, catalog):
     got = scan(spark, catalog, "ht",
                ("and", ("=", "x", 7), ("=", "y", 3))).collect()
     assert [(r["x"], r["y"], r["v"]) for r in got] == [(7, 3, 703)]
+
+
+@pytest.mark.parametrize("props, files", [("", 3), (", 'numBuckets'='4'", 4)],
+                         ids=["row-count", "numBuckets"])
+def test_zorder_sizes_files_like_optimize(spark, catalog, hsession,
+                                          monkeypatch, props, files):
+    """OPTIMIZE ZORDER writes as many files as plain OPTIMIZE: the
+    table's numBuckets, else one per DEFAULT_ROWS_PER_BUCKET rows."""
+    monkeypatch.setattr(writer, "DEFAULT_ROWS_PER_BUCKET", 250)
+    hsession.sql("CREATE TABLE zs (x INT, y INT, v INT) "
+                 f"TBLPROPERTIES('keyCols'='x;y'{props})")
+    writer.write_key_organized(spark, catalog, "zs", spark.createDataFrame(
+        GRID[:600], "x int, y int, v int"), n_buckets=5)
+    hsession.sql("OPTIMIZE zs")
+    assert len(catalog.get_table("zs").files) == files
+    hsession.sql("OPTIMIZE zs ZORDER BY (x, y)")
+    assert len(catalog.get_table("zs").files) == files
